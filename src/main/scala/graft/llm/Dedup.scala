@@ -159,7 +159,7 @@ object Dedup {
       .withColumn("sig", graft.functions.GraftFunctions
         .minhashSig(docs.sparkSession, col("sh"), k))
 
-  /** The (id, bk = (band, bucket), sub) banding frame [[guardedBandPairs]]
+  /** The (id, bk = (band, bucket), sub) banding frame [[guardedPairs]]
     * consumes for MinHash: band keys from [[bandKeys]], refine key `sub`
     * from the FULL-signature hash (identical docs share it → they stay
     * together under re-keying). Shared by the operator and the stats. */
@@ -182,7 +182,7 @@ object Dedup {
     *
     * PARTIALLY EAGER (as are [[embeddingNearDups]], [[crossCorpusNearDups]]
     * and the store/index probes): building the returned frame runs the
-    * occupancy probe of [[guardedBandPairs]] — one bounded driver
+    * occupancy probe of [[guardedPairs]] — one bounded driver
     * aggregate over the banding frame — at DataFrame-CONSTRUCTION time, so
     * plan-only callers (explain tooling, plan-lock tests) execute real
     * jobs before any action of their own. */
@@ -216,29 +216,45 @@ object Dedup {
     // the star (rep ↔ member) set, not all m²/2 member pairs — the shape
     // [[nearDupClusters]] consumes; same contract as [[embeddingNearDups]].
     val pairs =
-      guardedBandPairs(minHashBanded(base, k, bands), maxBucketSize,
-        refineBits = 16, storage, broadcastOcc = false)
+      guardedPairs(minHashBanded(base, k, bands), None, maxBucketSize,
+        refineBits = 16, storage)
         .dropDuplicates("id_a", "id_b")
-    val sigT = base.select(col("id"), col("sig"))
-    // stage 2: signature-estimated prefilter (margin below the threshold so
-    // estimator variance at k=32 cannot drop true positives). The overlap
-    // runs through the fused graft_sig_overlap expression — candidates are
-    // the pipeline's quadratic-ish point, and the interpreted
-    // zip_with+aggregate formulation is kept as the spec'd reference
-    // ([[estimatedJaccard]])
-    val estFiltered = pairs
-      .join(sigT.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigT.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .filter(graft.functions.GraftFunctions.sigOverlap(docs.sparkSession,
+    minHashVerify(pairs, base, base, threshold)
+  }
+
+  /** The MinHash verify of the self and cross paths over the two sides'
+    * `(id, sh, sig)` bases. Stage 1 drops pairs whose signature-ESTIMATED
+    * Jaccard is far below threshold (the 0.35 margin keeps estimator
+    * variance at k=32 from dropping true positives), through the fused
+    * graft_sig_overlap expression — candidates are the pipeline's
+    * quadratic-ish point; [[estimatedJaccard]] is the spec'd reference.
+    * Stage 2 attaches shingle sets to survivors only: exact Jaccard. */
+  private def minHashVerify(pairs: DataFrame, left: DataFrame,
+      right: DataFrame, threshold: Double,
+      ids: (String, String) = ("id_a", "id_b")): DataFrame = {
+    val (a, b) = ids
+    val estFiltered = withPayload(pairs, left, right, "sig", ids)
+      .filter(graft.functions.GraftFunctions.sigOverlap(pairs.sparkSession,
         col("sig_a"), col("sig_b")) >= threshold - 0.35)
-      .select("id_a", "id_b")
-    val shT = base.select(col("id"), col("sh"))
-    estFiltered
-      .join(shT.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(shT.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .select(a, b)
+    withPayload(estFiltered, left, right, "sh", ids)
+      .select(col(a), col(b), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** Attach one payload column of each side to a pair frame: `left`'s
+    * `payload` as `<alias>a`, joined on the first pair id, and `right`'s as
+    * `<alias>b` on the second (alias `<payload>_` by default, so `sig_a` /
+    * `sig_b`). Both sides are `(id, payload, …)` frames. Every verify stage
+    * re-attaches its wide arrays this way, to candidate pairs only. */
+  private def withPayload(pairs: DataFrame, left: DataFrame, right: DataFrame,
+      payload: String, ids: (String, String) = ("id_a", "id_b"),
+      alias: String = ""): DataFrame = {
+    val (a, b) = ids
+    val prefix = if (alias.isEmpty) s"${payload}_" else alias
+    pairs
+      .join(left.select(col("id").as(a), col(payload).as(prefix + "a")), Seq(a))
+      .join(right.select(col("id").as(b), col(payload).as(prefix + "b")), Seq(b))
   }
 
   /** Cross-corpus (incremental) near-duplicate pairs: match every `newDocs`
@@ -368,19 +384,7 @@ object Dedup {
       if (candIds.length <= maxPushdownIds)
         baseR.filter(col("id").isInCollection(candIds.map(_.get(0)).toSeq))
       else baseR
-    // estimated-overlap prefilter at the same margin as the self-join path
-    val estFiltered = pairs
-      .join(baseN.select(col("id").as("new_id"), col("sig").as("sig_a")), Seq("new_id"))
-      .join(baseRv.select(col("id").as("ref_id"), col("sig").as("sig_b")), Seq("ref_id"))
-      .filter(graft.functions.GraftFunctions.sigOverlap(newDocs.sparkSession,
-        col("sig_a"), col("sig_b")) >= threshold - 0.35)
-      .select("new_id", "ref_id")
-    estFiltered
-      .join(baseN.select(col("id").as("new_id"), col("sh").as("sh_a")), Seq("new_id"))
-      .join(baseRv.select(col("id").as("ref_id"), col("sh").as("sh_b")), Seq("ref_id"))
-      .select(col("new_id"), col("ref_id"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    minHashVerify(pairs, baseN, baseRv, threshold, ("new_id", "ref_id"))
   }
 
   /** Write a reference MinHash index as a PARTITION-PRUNED serving store —
@@ -624,18 +628,7 @@ object Dedup {
         if (ibs.isEmpty) return empty
         (p, payloadAll.filter(col("ib").isin(ibs: _*)))
       }
-    val estFiltered = pairs
-      .join(baseN.select(col("id").as("new_id"), col("sig").as("sig_a")), Seq("new_id"))
-      .join(payload.select(col("id").as("ref_id"), col("sig").as("sig_b")), Seq("ref_id"))
-      .filter(graft.functions.GraftFunctions.sigOverlap(spark,
-        col("sig_a"), col("sig_b")) >= threshold - 0.35)
-      .select("new_id", "ref_id")
-    estFiltered
-      .join(baseN.select(col("id").as("new_id"), col("sh").as("sh_a")), Seq("new_id"))
-      .join(payload.select(col("id").as("ref_id"), col("sh").as("sh_b")), Seq("ref_id"))
-      .select(col("new_id"), col("ref_id"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    minHashVerify(pairs, baseN, payload, threshold, ("new_id", "ref_id"))
   }
 
   /** The consuming step: `newDocs` minus every row with a near-dup in
@@ -650,27 +643,14 @@ object Dedup {
         .select(col("new_id").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
 
-  /** [[guardedBandPairs]]'s cross-join sibling over two banding frames
-    * `(id, bk, sub)`. Only buckets present on BOTH sides can produce
-    * pairs; the safety predicate bounds the cross PRODUCT, and star
-    * repair pairs new members against the min-id ref member.
-    *
-    * Same three probe regimes as the self form (`broadcastTagMax` is the
-    * self form's hard-coded 4096, parameterised here so the spec can
-    * force the fallback and assert row identity): no unsafe bucket →
-    * direct bucket equi-join; ≤ `broadcastTagMax` unsafe buckets → the
-    * occupancy SHUFFLE joins are replaced by a broadcast tag of the
-    * collected unsafe set (left_outer, null-`__nn` = safe) — row-identical
-    * to the inner occupancy join because every output pair needs an
-    * equi-match on `k` from both sides, so the one-sided-bucket rows the
-    * inner join dropped can never pair, and every UNSAFE bucket is shared
-    * by construction (`__nn·__nr > cap²` needs both sides non-empty);
-    * more → the original shuffle-join machinery, verbatim. */
+  /** The cross form of [[guardedPairs]] over two banding frames
+    * `(id, bk, sub)`: new-batch rows against reference rows, returning
+    * `(new_id, ref_id)`. `broadcastTagMax` is exposed so the spec can force
+    * the shuffle fallback and assert row identity with the tag regime. */
   private[llm] def guardedCrossBandPairs(bandedNew: DataFrame, bandedRef: DataFrame,
       maxBucketSize: Int, refineBits: Int,
       storage: StorageLevel, restrictRefBuckets: Boolean = true,
       broadcastTagMax: Int = 4096): DataFrame = {
-    val capSq = lit(maxBucketSize.toLong * maxBucketSize)
     // restrict the REF side to buckets the new batch actually occupies
     // BEFORE any ref-side aggregation: for the production shape (tiny
     // daily batch vs 100-TB reference) the new bucket set is a broadcast
@@ -686,100 +666,8 @@ object Dedup {
       if (restrictRefBuckets)
         bandedRef.join(bandedNew.select(col("bk")).distinct(), Seq("bk"), "left_semi")
       else bandedRef
-    // slim ((bk, nn, nr) per shared bucket) and consumed by the probe AND
-    // (on the guarded path) both tagged joins — persist so the probe's
-    // materialization is reused instead of re-aggregated
-    val occ = bandedNew.groupBy(col("bk")).agg(count(lit(1)).as("__nn"))
-      .join(refShared.groupBy(col("bk")).agg(count(lit(1)).as("__nr")), Seq("bk"))
-      .persist(storage)
-    // OCCUPANCY PROBE (same rationale as [[guardedBandPairs]]'s): collect
-    // the UNSAFE bucket set itself — bounded at broadcastTagMax+1 rows,
-    // usually EMPTY (skew is the exception). When NO bucket's cross
-    // product exceeds the cap, the refine/star machinery below is
-    // provably a no-op (both `!safe` branches empty, keyed ≡ the banding
-    // frames, sub ≡ 0), yet its plan still costs two extra occupancy
-    // shuffles, four persists and the union scaffolding on EVERY call —
-    // take the direct bucket-equi-join instead (the inner equi-join drops
-    // one-sided buckets exactly like the occupancy inner join did); the
-    // guarded path below runs unchanged (and row-identically) the moment
-    // any bucket is oversized.
-    val unsafeBuckets = occ
-      .filter(col("__nn") * col("__nr") > capSq)
-      .limit(broadcastTagMax + 1).collect()
-    if (unsafeBuckets.isEmpty) {
-      val out = bandedNew.select(col("id").as("new_id"), col("bk"))
-        .join(refShared.select(col("id").as("ref_id"), col("bk")), Seq("bk"))
-        .select("new_id", "ref_id").localCheckpoint()
-      occ.unpersist()
-      return out
-    }
-    // ≤ broadcastTagMax oversized buckets: tag both full-width banding
-    // frames with a BROADCAST of the collected unsafe set instead of
-    // shuffling them against the occupancy frame (the self form's middle
-    // regime — the probe pays for itself). Safe buckets carry null counts
-    // under the left_outer; one-sided buckets ride through the direct
-    // branch and die in the final equi-join on k (see scaladoc). Worse
-    // than that is adversarial occupancy: the shuffle-join machinery,
-    // verbatim.
-    val useBroadcastTag = unsafeBuckets.length <= broadcastTagMax
-    val (tagN, tagR) =
-      if (useBroadcastTag) {
-        val spark = bandedNew.sparkSession
-        val unsafeDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(unsafeBuckets.toIndexedSeq, 1),
-          occ.schema)
-        occ.unpersist()
-        (bandedNew.join(broadcast(unsafeDf), Seq("bk"), "left_outer")
-            .persist(storage),
-          refShared.join(broadcast(unsafeDf), Seq("bk"), "left_outer")
-            .persist(storage))
-      } else
-        (bandedNew.join(occ, Seq("bk")).persist(storage),
-          refShared.join(occ, Seq("bk")).persist(storage))
-    val guardCaches =
-      scala.collection.mutable.ListBuffer[DataFrame](tagN, tagR)
-    if (!useBroadcastTag) guardCaches += occ
-    try {
-      val safe =
-        if (useBroadcastTag) col("__nn").isNull
-        else col("__nn") * col("__nr") <= capSq
-      // both sides derive the refine width from the same (nn, nr) pair the
-      // occupancy join attached, so the adaptive mask is identical and the
-      // sub-keys align across sides
-      def keyed(t: DataFrame): (DataFrame, DataFrame) = (
-        t.filter(safe)
-          .select(col("id"), struct(col("bk"), lit(0L).as("sub")).as("k")),
-        t.filter(!safe)
-          .select(col("id"), struct(col("bk"),
-            adaptiveSub(col("sub"), greatest(col("__nn"), col("__nr")),
-              maxBucketSize, refineBits).as("sub")).as("k")))
-      val (directN, refinedN) = keyed(tagN)
-      val (directR, refinedR) = keyed(tagR)
-      val occ2 = refinedN.groupBy(col("k")).agg(count(lit(1)).as("__n2n"))
-        .join(refinedR.groupBy(col("k")).agg(count(lit(1)).as("__n2r")), Seq("k"))
-        .persist(storage)
-      guardCaches += occ2
-      val safe2 = col("__n2n") * col("__n2r") <= capSq
-      val keyedN = directN.unionByName(
-        refinedN.join(occ2, Seq("k")).filter(safe2).select(col("id"), col("k")))
-        .persist(storage)
-      val keyedR = directR.unionByName(
-        refinedR.join(occ2, Seq("k")).filter(safe2).select(col("id"), col("k")))
-        .persist(storage)
-      guardCaches += keyedN
-      guardCaches += keyedR
-      val crossPairs = keyedN.select(col("id").as("new_id"), col("k"))
-        .join(keyedR.select(col("id").as("ref_id"), col("k")), Seq("k"))
-        .select("new_id", "ref_id")
-      val rep = refinedR.join(occ2, Seq("k")).filter(!safe2)
-        .groupBy(col("k")).agg(min(col("id")).as("ref_id"))
-      val star = refinedN.join(occ2, Seq("k")).filter(!safe2)
-        .join(rep, Seq("k"))
-        .select(col("id").as("new_id"), col("ref_id"))
-      crossPairs.unionByName(star).localCheckpoint()
-    } finally {
-      guardCaches.foreach(_.unpersist())
-    }
+    guardedPairs(bandedNew, Some(refShared), maxBucketSize, refineBits,
+      storage, broadcastTagMax = broadcastTagMax)
   }
 
   /** Near-duplicate CLUSTERS: connected components over the verified
@@ -956,15 +844,6 @@ object Dedup {
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs with hamming ≤ maxDist, blocked on 4 16-bit
-    * bands (pigeonhole: ≤3 flipped bits leave ≥1 band intact — exact recall
-    * for maxDist ≤ 3 when no band bucket exceeds `maxBucketSize`;
-    * oversized buckets — mega clusters of identical/near-identical docs —
-    * go through the same occupancy guard + star repair as
-    * [[minHashNearDups]]/[[embeddingNearDups]], which bounds their pair
-    * volume linearly and keeps cluster membership through the
-    * representative. The bucket key space is ≤ 4·2^16 rows, so the
-    * occupancy frame always broadcasts. */
   /** The (id, bk, sub) banding frame for SimHash: 4 16-bit bands of the
     * 64-bit signature, refine key from the full-signature hash. Shared by
     * [[simHashNearDups]] and [[simHashBucketStats]]. */
@@ -976,6 +855,15 @@ object Dedup {
       }: _*)).as("bk"),
       (pmod(xxhash64(col("sig")), lit(1L << 16)) + 1).as("sub"))
 
+  /** SimHash near-dup pairs with hamming ≤ maxDist, blocked on 4 16-bit
+    * bands (pigeonhole: ≤3 flipped bits leave ≥1 band intact — exact recall
+    * for maxDist ≤ 3 when no band bucket exceeds `maxBucketSize`;
+    * oversized buckets — mega clusters of identical/near-identical docs —
+    * go through the same occupancy guard + star repair as
+    * [[minHashNearDups]]/[[embeddingNearDups]], which bounds their pair
+    * volume linearly and keeps cluster membership through the
+    * representative. The bucket key space is ≤ 4·2^16 rows, so the
+    * occupancy frame always broadcasts. */
   def simHashNearDups(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", maxDist: Int = 3,
       maxBucketSize: Int = 256,
@@ -997,12 +885,10 @@ object Dedup {
       storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     val base = sigs.select(col("id"), col("sig")).persist(storage)
     val pairs =
-      guardedBandPairs(simHashBanded(base), maxBucketSize, refineBits = 16,
+      guardedPairs(simHashBanded(base), None, maxBucketSize, refineBits = 16,
         storage, broadcastOcc = true)
         .dropDuplicates("id_a", "id_b")
-    pairs
-      .join(base.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+    withPayload(pairs, base, base, "sig")
       .select(col("id_a"), col("id_b"),
         hamming(col("sig_a"), col("sig_b")).as("hamming"))
       .filter(col("hamming") <= maxDist)
@@ -1135,9 +1021,7 @@ object Dedup {
     // traffic is the §1.2 "per-task work" lever.
     val inter = size(array_intersect(col("__ta"), col("__tb"))).cast("double")
     val uni = (col("__na") + col("__nb")).cast("double") - inter
-    cand
-      .join(sorted.select(col("id").as("id_a"), col("t").as("__ta")), Seq("id_a"))
-      .join(sorted.select(col("id").as("id_b"), col("t").as("__tb")), Seq("id_b"))
+    withPayload(cand, sorted, sorted, "t", alias = "__t")
       .select(col("id_a"), col("id_b"),
         when(uni === 0, 0.0).otherwise(inter / uni).as("jaccard"))
       .filter(col("jaccard") >= threshold)
@@ -1233,11 +1117,7 @@ object Dedup {
         ceil(col("a.n") * lit(threshold) - lit(1e-9)).cast("int"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    cand
-      .join(probeSorted.select(col("id").as("id_a"), col("t").as("__ta")),
-        Seq("id_a"))
-      .join(corpusSorted.select(col("id").as("id_b"), col("t").as("__tb")),
-        Seq("id_b"))
+    withPayload(cand, probeSorted, corpusSorted, "t", alias = "__t")
       .select(col("id_a"), col("id_b"),
         (size(array_intersect(col("__ta"), col("__tb"))).cast("double")
           / size(col("__ta"))).as("containment"))
@@ -1320,18 +1200,18 @@ object Dedup {
     // carries the full vector payload (see minHashNearDups). Caller owns
     // cleanup after materializing the result.
     val base = prepped.persist(storage)
+    // level-1 occupancy key space here is ≤ bands·2^(planes/bands) rows —
+    // always broadcastable
     val pairs =
-      guardedCandidatePairs(base, planes, bands, maxBucketSize, refinePlanes,
-        storage)
+      guardedPairs(bandedKeys(base, planes, bands, refinePlanes), None,
+        maxBucketSize, refinePlanes, storage, broadcastOcc = true)
         .dropDuplicates("id_a", "id_b")
     // fused native cosine (bit-identical to Similarity.cosine, one codegen
     // loop instead of four interpreted HOF passes) — the verify step runs
     // once per surviving candidate pair, so this is the hot loop
     val cosExpr = graft.functions.GraftFunctions.cosine(
       embs.sparkSession, col("v_a"), col("v_b"))
-    pairs
-      .join(base.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
+    withPayload(pairs, base, base, "v")
       .select(col("id_a"), col("id_b"), cosExpr.as("cosine"))
       .filter(col("cosine") >= threshold)
   }
@@ -1351,13 +1231,6 @@ object Dedup {
       }: _*)).as("bk"),
       (shiftright(col("sig"), planes).bitwiseAND((1L << refinePlanes) - 1) + 1L).as("sub"))
   }
-
-  /** Occupancy-guarded candidate pairs (id_a < id_b) over a cached
-    * (id, v, sig) frame. Keys k = (band, bucket, sub); sub = 0 for direct
-    * buckets, 1 + refine-bits for rows of oversized buckets (disjoint key
-    * spaces by construction). A refined bucket STILL over the cap does not
-    * vanish: its rows pair against the bucket's min-id representative
-    * (star repair — linear, so the per-bucket bound survives). */
 
   /** Adaptive refine width: re-key an oversized bucket of n rows on just
     * enough of the refine bits to bring expected sub-occupancy back under
@@ -1382,99 +1255,133 @@ object Dedup {
     (sub - 1).bitwiseAND(mask) + 1
   }
 
-  private def guardedCandidatePairs(base: DataFrame,
-      planes: Int, bands: Int, maxBucketSize: Int, refinePlanes: Int,
-      storage: StorageLevel): DataFrame = {
-    // level-1 occupancy key space here is ≤ bands·2^(planes/bands) rows —
-    // always broadcastable
-    guardedBandPairs(bandedKeys(base, planes, bands, refinePlanes),
-      maxBucketSize, refinePlanes, storage, broadcastOcc = true)
-  }
-
-  /** The generic occupancy guard over ANY banding frame `(id, bk, sub)` —
-    * `bk` an arbitrary band key, `sub` a full-width (≥ 1) refine key whose
-    * low bits re-key oversized buckets ([[adaptiveSub]]). Shared by the
-    * embedding guard (bk = (band, bucket) struct, sub = refine signature
-    * bits, tiny key space → `broadcastOcc`) and the MinHash guard (bk =
-    * band hash, sub = full-signature hash, key space scales with data →
-    * plain shuffle join). */
-  private def guardedBandPairs(banded: DataFrame,
-      maxBucketSize: Int, refineBits: Int,
-      storage: StorageLevel, broadcastOcc: Boolean): DataFrame = {
-    // slim ((bk, n) per bucket); persisted so the probe's materialization
+  /** The occupancy guard of every LSH near-dup path: candidate pairs from
+    * banding frames `(id, bk, sub)`. `bk` is any band key; `sub` is a
+    * full-width (≥ 1) refine key whose low bits re-key oversized buckets
+    * ([[adaptiveSub]]). Join keys are k = (bk, sub), sub = 0 for rows of
+    * safe buckets and the adaptive refine bits (≥ 1) for rows of oversized
+    * ones, so the two key spaces are disjoint. A refined bucket STILL over
+    * the cap does not vanish: its rows pair against the bucket's min-id
+    * representative (star repair — linear, so the per-bucket bound
+    * survives).
+    *
+    * `right = None` is the self form: `(id_a, id_b)` with id_a < id_b and
+    * star pairs `(rep, member)`. `Some(ref)` is the cross form:
+    * `(new_id, ref_id)`. A bucket's occupancy is then the inner join of both
+    * sides' counts (only shared buckets can pair), safety bounds the cross
+    * PRODUCT n_new·n_ref ≤ cap² (self's n ≤ cap is that bound with both
+    * sides equal), the refine width comes from max(n_new, n_ref) so sub
+    * keys align across sides, and star repair pairs each new member with
+    * the min-id ref member.
+    *
+    * The occupancy PROBE collects the oversized bucket set itself, bounded
+    * at `broadcastTagMax + 1` rows and usually EMPTY. Three regimes:
+    *   - empty — the refine/star machinery is a provable no-op (sub ≡ 0),
+    *     so the direct bucket equi-join is row-identical and sheds the
+    *     occupancy join, the level-2 shuffle, the persists and the unions;
+    *   - ≤ `broadcastTagMax` oversized buckets — the occupancy SHUFFLE join
+    *     becomes a broadcast tag of the collected set (left_outer, null
+    *     count = safe). Row-identical: every pair needs an equi-match on k
+    *     from both sides, so rows of one-sided buckets (which the inner
+    *     join dropped) never pair, and every oversized cross bucket is
+    *     shared by construction. The probe pays for itself;
+    *   - more — adversarial occupancy: the shuffle-join machinery, with the
+    *     level-1 occupancy broadcast when `broadcastOcc` says its key space
+    *     is small (not for MinHash, whose band-hash keys scale with data).
+    *
+    * Footprint: with an unrestricted ref side (`restrictRefBuckets = false`
+    * in [[guardedCrossBandPairs]]) the tag regime keeps one-sided ref rows
+    * in the persisted ref tag frame and in the final pair-join shuffle.
+    * That is bounded by what the direct regime already joins under the
+    * same setting: the whole ref banding frame.
+    *
+    * The probe is a driver action at construction time; the slim pair set
+    * is localCheckpointed, so every guard-internal persist is dropped here. */
+  private[llm] def guardedPairs(left: DataFrame, right: Option[DataFrame],
+      maxBucketSize: Int, refineBits: Int, storage: StorageLevel,
+      broadcastOcc: Boolean = false, broadcastTagMax: Int = 4096): DataFrame = {
+    val self = right.isEmpty
+    val ref = right.getOrElse(left)
+    val (a, b) = if (self) ("id_a", "id_b") else ("new_id", "ref_id")
+    val capSq = lit(maxBucketSize.toLong * maxBucketSize)
+    // per-key occupancy frame (counts `n`, or `n`+"n" / `n`+"r" per side),
+    // its safety predicate and the bucket size the refine width derives from
+    def occupancy(key: String, n: String,
+        l: DataFrame, r: DataFrame): (DataFrame, Column, Column) = {
+      def counted(t: DataFrame, c: String) =
+        t.groupBy(col(key)).agg(count(lit(1)).as(c))
+      if (self) (counted(l, n), col(n) <= maxBucketSize, col(n))
+      else (counted(l, n + "n").join(counted(r, n + "r"), Seq(key)),
+        col(n + "n") * col(n + "r") <= capSq,
+        greatest(col(n + "n"), col(n + "r")))
+    }
+    // self pairs keep id_a < id_b; cross pairs run new against ref
+    def pairsOn(key: String, l: DataFrame, r: DataFrame): DataFrame = {
+      val joined = l.select(col("id").as(a), col(key))
+        .join(r.select(col("id").as(b), col(key)), Seq(key))
+      (if (self) joined.filter(col(a) < col(b)) else joined).select(a, b)
+    }
+    // slim (one row per bucket); persisted so the probe's materialization
     // is reused by the (rare) very-many-oversized-buckets fallback below
-    val occ = banded.groupBy(col("bk")).agg(count(lit(1)).as("__n"))
-      .persist(storage)
-    // OCCUPANCY PROBE (same rationale as [[guardedCrossBandPairs]]'s):
-    // collect the OVERSIZED bucket set itself — bounded at 4096 rows, so
-    // the driver transfer is a few hundred KB worst case, and skew is the
-    // exception so it is usually EMPTY. Three regimes:
-    //   * empty — the refine/star machinery is a provable no-op (both
-    //     `__n > cap` branches empty, sub ≡ 0): the direct bucket
-    //     self-join is row-identical and sheds the occupancy join, the
-    //     level-2 shuffle, two persists and the union scaffolding;
-    //   * ≤ 4096 oversized buckets — the guarded machinery runs, but the
-    //     occupancy SHUFFLE join is replaced by a broadcast tag of the
-    //     collected set (a self groupBy covers every bucket, so tagging
-    //     with null-__n-means-safe is row-identical to the inner join) —
-    //     the probe pays for itself;
-    //   * more — adversarial occupancy; fall back to the original
-    //     shuffle-join machinery, verbatim.
-    val oversized = occ.filter(col("__n") > maxBucketSize)
-      .limit(4097).collect()
+    val (occ1, fits, bucketSize) = occupancy("bk", "__n", left, ref)
+    val occ = occ1.persist(storage)
+    val oversized = occ.filter(!fits).limit(broadcastTagMax + 1).collect()
     if (oversized.isEmpty) {
-      // banded is a cheap projection over the callers' persisted base —
-      // recomputing it on each side beats persisting a third frame
-      val out = banded.select(col("id").as("id_a"), col("bk"))
-        .join(banded.select(col("id").as("id_b"), col("bk")), Seq("bk"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").localCheckpoint()
+      // the banding frames are cheap projections over the callers'
+      // persisted bases — recomputing them beats persisting a third frame
+      val out = pairsOn("bk", left, ref).localCheckpoint()
       occ.unpersist()
       return out
     }
-    val useBroadcastTag = oversized.length <= 4096
+    val useBroadcastTag = oversized.length <= broadcastTagMax
+    val tag: DataFrame => DataFrame =
+      if (useBroadcastTag) {
+        val spark = left.sparkSession
+        val oversDf = broadcast(spark.createDataFrame(
+          spark.sparkContext.parallelize(oversized.toIndexedSeq, 1),
+          occ.schema))
+        occ.unpersist()
+        _.join(oversDf, Seq("bk"), "left_outer")
+      } else {
+        val occSide = if (broadcastOcc) broadcast(occ) else occ
+        _.join(occSide, Seq("bk"))
+      }
     // slim (id + key numerics) and consumed by three branches — fence it so
     // the occupancy tag runs once, not once per consumer
-    val tagged = (
-      if (useBroadcastTag) {
-        val spark = banded.sparkSession
-        val oversDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(oversized.toIndexedSeq, 1),
-          occ.schema)
-        occ.unpersist()
-        banded.join(broadcast(oversDf), Seq("bk"), "left_outer")
-      } else
-        banded.join(if (broadcastOcc) broadcast(occ) else occ, Seq("bk"))
-      ).persist(storage)
-    val guardCaches = scala.collection.mutable.ListBuffer[DataFrame](tagged)
+    val taggedL = tag(left).persist(storage)
+    val taggedR = if (self) taggedL else tag(ref).persist(storage)
+    val guardCaches =
+      scala.collection.mutable.ListBuffer[DataFrame](taggedL, taggedR).distinct
     if (!useBroadcastTag) guardCaches += occ
     try {
-      // under the broadcast tag, safe buckets carry a NULL __n
+      // under the broadcast tag, safe buckets carry NULL counts
       val safe =
-        if (useBroadcastTag) col("__n").isNull
-        else col("__n") <= maxBucketSize
-      val direct = tagged.filter(safe)
-        .select(col("id"), struct(col("bk"), lit(0L).as("sub")).as("k"))
-      val refined = tagged.filter(!safe)
-        .select(col("id"), struct(col("bk"),
-          adaptiveSub(col("sub"), col("__n"), maxBucketSize, refineBits)
-            .as("sub")).as("k"))
+        if (useBroadcastTag) col(if (self) "__n" else "__nn").isNull else fits
+      // both sides derive the refine width from the same occupancy row, so
+      // the adaptive mask is identical and the sub-keys align across sides
+      def keyed(t: DataFrame): (DataFrame, DataFrame) = (
+        t.filter(safe)
+          .select(col("id"), struct(col("bk"), lit(0L).as("sub")).as("k")),
+        t.filter(!safe)
+          .select(col("id"), struct(col("bk"),
+            adaptiveSub(col("sub"), bucketSize, maxBucketSize, refineBits)
+              .as("sub")).as("k")))
+      val (directL, refinedL) = keyed(taggedL)
+      val (directR, refinedR) = if (self) (directL, refinedL) else keyed(taggedR)
       // level-2 occupancy: key count scales with data — plain join (AQE
       // picks the strategy), NOT a forced broadcast; reused by kept AND star
-      val occ2 = refined.groupBy(col("k")).agg(count(lit(1)).as("__n2"))
-        .persist(storage)
+      val (occ2Raw, fits2, _) = occupancy("k", "__n2", refinedL, refinedR)
+      val occ2 = occ2Raw.persist(storage)
       guardCaches += occ2
-      val kept = refined.join(occ2, Seq("k"))
-        .filter(col("__n2") <= maxBucketSize)
-        .select(col("id"), col("k"))
-      // the self-join consumes keyed twice: fence it (ReuseExchange only
-      // dedupes physically identical sub-plans, which AQE re-planning breaks)
-      val keyed = direct.unionByName(kept).persist(storage)
-      guardCaches += keyed
-      val keyedPairs = keyed.select(col("id").as("id_a"), col("k"))
-        .join(keyed.select(col("id").as("id_b"), col("k")), Seq("k"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
+      // fence the keyed frames the pair join reads (the self form reads its
+      // one frame on both sides; ReuseExchange only dedupes physically
+      // identical sub-plans, which AQE re-planning breaks)
+      def kept(direct: DataFrame, refined: DataFrame): DataFrame =
+        direct.unionByName(refined.join(occ2, Seq("k")).filter(fits2)
+          .select(col("id"), col("k"))).persist(storage)
+      val keyedL = kept(directL, refinedL)
+      val keyedR = if (self) keyedL else kept(directR, refinedR)
+      guardCaches ++= Seq(keyedL, keyedR).distinct
       // STAR REPAIR: dropping a still-oversized refined bucket outright would
       // guarantee ZERO recall on exactly the most common real dedup target —
       // a giant exact-duplicate cluster (identical vectors share every
@@ -1484,17 +1391,20 @@ object Dedup {
       // representative; downstream clustering (nearDupClusters' CC) restores
       // the full cluster through it. Near-identical members lose only
       // member↔member edges, never membership.
-      val dropped = refined.join(occ2, Seq("k")).filter(col("__n2") > maxBucketSize)
-      val rep = dropped.groupBy(col("k")).agg(min(col("id")).as("rep_id"))
-      val star = dropped.join(rep, Seq("k"))
-        .filter(col("id") =!= col("rep_id"))
-        .select(col("rep_id").as("id_a"), col("id").as("id_b"))
-      // EAGERLY materialize the slim (id_a, id_b) pair set (localCheckpoint
-      // runs the job now and keeps only the checkpointed blocks) so the
-      // three guard-internal persists can be dropped immediately in the
-      // finally below — previously they leaked for the session lifetime,
-      // accumulating executor storage across repeated calls.
-      keyedPairs.unionByName(star).localCheckpoint()
+      def dropped(refined: DataFrame) =
+        refined.join(occ2, Seq("k")).filter(!fits2)
+      val rep = dropped(refinedR).groupBy(col("k")).agg(min(col("id")).as("__rep"))
+      val members = dropped(refinedL).join(rep, Seq("k"))
+      val star =
+        if (self) members.filter(col("id") =!= col("__rep"))
+          .select(col("__rep").as(a), col("id").as(b))
+        else members.select(col("id").as(a), col("__rep").as(b))
+      // EAGERLY materialize the slim pair set (localCheckpoint runs the job
+      // now and keeps only the checkpointed blocks) so the guard-internal
+      // persists can be dropped immediately in the finally below —
+      // previously they leaked for the session lifetime, accumulating
+      // executor storage across repeated calls.
+      pairsOn("k", keyedL, keyedR).unionByName(star).localCheckpoint()
     } finally {
       guardCaches.foreach(_.unpersist())
     }
@@ -1549,7 +1459,7 @@ object Dedup {
       maxBucketSize, refineBits = 16)
 
   /** The generic occupancy report over ANY `(id, bk = (band, bucket), sub)`
-    * banding frame — the monitoring twin of [[guardedBandPairs]], derived
+    * banding frame — the monitoring twin of [[guardedPairs]], derived
     * from the SAME frame shape so the report can never drift from the
     * guard's decisions. ONE pass over the banded frame: aggregate straight
     * to per-(bucket, sub) counts (tiny — bounded by distinct keys),
@@ -1643,13 +1553,11 @@ object Dedup {
       struct(lit(0).as("band"), col("centroid_id").cast("long").as("bucket"))
         .as("bk"),
       (col("__rs").bitwiseAND((1L << refinePlanes) - 1) + 1L).as("sub"))
-    val pairs = guardedBandPairs(banded, maxBucketSize, refinePlanes, storage,
+    val pairs = guardedPairs(banded, None, maxBucketSize, refinePlanes, storage,
       broadcastOcc = true)
     val cosExpr = graft.functions.GraftFunctions.cosine(s,
       col("v_a"), col("v_b"))
-    pairs
-      .join(base.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
+    withPayload(pairs, base, base, "v")
       .select(col("id_a"), col("id_b"), cosExpr.as("cosine"))
       .filter(col("cosine") >= threshold)
   }

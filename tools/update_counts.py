@@ -3,7 +3,8 @@
 
 Counts come from the code itself:
   - gates / oracles: `graft.Counts` (the SparkEntry maps — authoritative)
-  - ScalaTests: `test(` occurrences under src/test
+  - ScalaTests: `test(` occurrences in every spec under src/test
+    (recursive: specs live in sub-packages too, e.g. llm/)
 
 Injects a markdown table between `<!-- counts:begin -->` and
 `<!-- counts:end -->` markers in each target file. Run after adding a
@@ -28,7 +29,7 @@ def scala_counts() -> dict:
 
 def test_count() -> int:
     n = 0
-    for f in (REPO / "src/test/scala/graft").glob("*.scala"):
+    for f in (REPO / "src/test/scala/graft").rglob("*.scala"):
         n += len(re.findall(r'^\s*(?:test|property)\(', f.read_text(), re.M))
     return n
 
