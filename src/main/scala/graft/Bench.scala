@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every gate query against SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total", ...} for the driver.
   *
@@ -24,71 +22,25 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Whole-stage-codegen class cache (STATIC conf, must be set at
-      // session build). The Spark default (100 entries) is smaller than
-      // ONE run of the heavier gates (q195 alone compiles 313 sources), so
-      // in a many-query session every rep of every query recompiles all of
-      // its codegen units from scratch — measured r15: ~0.4–0.5 s of
-      // Janino compile blocking PER STAGE, all task slots waiting; 196-gate
-      // A/B at sf0.1: suite 264 → 171 s (geomean 1.45). Not a local[32]
-      // twiddle: the cache is core-count- and data-scale-independent — any
-      // long-lived session with repeating plan shapes (micro-batch
-      // streaming, scheduled pipelines, a bench's reps) thrashes it the
-      // same way. Parameterised; 8192 comfortably holds the suite's ~5k
-      // stable sources at ~tens of MB of class/source retention.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // Session-artifact isolation (STATIC conf, session-creation only;
-      // Spark 4 default true) keys every stream RUN to a fresh isolated
-      // ExecutorClassLoader via the cloned session's artifact state — and
-      // the codegen class cache is keyed by (classloader, source), so each
-      // streaming query start recompiles every codegen unit it executes
-      // even when the source text is cached (measured r15 via the ProfileQ
-      // cache dump: 81/81 of q195's per-rep compiles were
-      // classloader-churn misses of PREVIOUSLY CACHED text, 0 new sources;
-      // conf off → 0 compiles, ~2.1 s/rep of Janino time gone plus the
-      // per-stage task-slot blocking it caused). This engine adds no
-      // session artifacts (no addArtifact/ADD JAR anywhere), so isolation
-      // protects nothing here; results are bit-identical (classloaders,
-      // not plans — zero plan changes by construction). Parameterised for
-      // deployments that DO add per-session artifacts and want isolation
-      // back at the cost of per-stream-start recompilation.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-bench")
 
     val names = {
       val all = SparkEntry.queries.keys.toSeq.sorted
       if (args.nonEmpty) all.filter(args.contains) else all
     }
-    // full storage reset between queries — the Scale harness's discipline:
-    // clearCache drops catalog-cached frames but NOT localCheckpoint RDD
-    // blocks (the pagerank/stage-fence gates create them), which otherwise
-    // accumulate across 185 queries × 8+ passes into storage-memory
+    // every pass below does a full storage reset after (or before) each
+    // query — the Scale harness's discipline: leftover localCheckpoint
+    // blocks accumulate across 185 queries × 8+ passes into storage-memory
     // pressure that inflates later reps (measured: rep totals drifting
     // 196 → 256 s across one run)
-    def resetStorage(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-
     // warmup: identical plan shapes at the smallest SF, untimed
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       names.foreach { n =>
         try SparkEntry.queries(n)(spark, warmDir).count()
         catch { case _: Throwable => () }
-        resetStorage()
+        Sessions.resetStorage(spark)
       }
     }
     // second warmup at the TARGET SF (skippable via SPARK_GRAFT_WARM_TARGET=0):
@@ -111,7 +63,7 @@ object Bench {
         names.foreach { n =>
           try SparkEntry.queries(n)(spark, sfDir).count()
           catch { case _: Throwable => () }
-          resetStorage()
+          Sessions.resetStorage(spark)
         }
         val wall = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench] warm pass ${pass + 1} at target SF: $wall%.1f s")
@@ -122,7 +74,7 @@ object Bench {
     }
 
     def timedPass(): Seq[(String, Double)] = names.map { name =>
-      resetStorage()
+      Sessions.resetStorage(spark)
       val t0 = System.nanoTime()
       val ok =
         try { SparkEntry.queries(name)(spark, sfDir).count(); true }

@@ -15,7 +15,7 @@ import graft.functions.{CosineSimilarity, GramStats, HyperplaneSignature, MinHas
   * registration.
   *
   * ```
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  * builder.withExtensions(new GraftExtensions)  // any SparkSession.Builder
   * // or: --conf spark.sql.extensions=graft.GraftExtensions
   * ```
   */

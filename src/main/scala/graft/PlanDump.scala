@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tooling (optimization rounds): dump `.explain("formatted")`
   * for gate queries to files so plan shapes can be diffed before/after a
   * change without re-running the full bench.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> [queryName...]
   * No query names = all of SparkEntry.queries. One file per query:
-  * <outDir>/<name>.txt. Uses the same session config as Bench so the
-  * plans match what the bench actually executes.
+  * <outDir>/<name>.txt. Builds its session with `Sessions.build`, as
+  * Bench does, so with the same SPARK_GRAFT_CPUS the plans match what the
+  * bench actually executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,15 +16,7 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-plandump")
 
     val names = {
       val all = SparkEntry.queries.keys.toSeq.sorted
@@ -44,9 +35,7 @@ object PlanDump {
       java.nio.file.Files.write(
         outDir.resolve(s"$n.txt"),
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Sessions.resetStorage(spark)
     }
     spark.stop()
     println(s"[plandump] wrote ${names.size} plans to $outDir")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tooling (optimization rounds): run one gate query under a
   * SparkListener and print a per-job / per-stage wall+metric breakdown, so
@@ -17,33 +16,13 @@ object ProfileQ {
     val sfDir = args(0)
     val qname = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // match the bench session's codegen-class cache (Bench.scala has the
-      // full rationale) so profiles attribute data work, not cache thrash
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // match the bench session (Bench.scala has the full rationale): with
-      // isolation on, every streaming-query start keys a fresh executor
-      // classloader and recompiles all its codegen units
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
     // measurement-only conf overrides (semicolon-separated k=v), so §9
     // session-config candidates can be A/B'd per gate WITHOUT touching the
     // bench harness: SPARK_GRAFT_EXTRA_CONF="spark.sql.join.preferSortMergeJoin=false"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      if (kv.contains("=")) {
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.contains("="))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+    val spark = Sessions.build("graft-profileq", extra = extraConf)
 
     case class JobRec(id: Int, var desc: String, start: Long,
         var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0,
@@ -116,59 +95,11 @@ object ProfileQ {
       }
     }
 
-    // PROFILEQ_CG_DUMP=<dir>: snapshot the codegen class cache's key set
-    // around each rep and dump the sources that were NEWLY compiled in
-    // reps after the first — the direct way to see WHICH generated
-    // sources are cache-unstable (recompiled every rep) and diff why.
-    // Reflection over Spark's CodeGenerator cache: measurement tooling
-    // only, never in a query path.
-    val cgDumpDir = sys.env.get("PROFILEQ_CG_DUMP")
-    // Spark 4.1 keys the codegen cache by (HashableWeakReference(context
-    // classloader), CodeAndComment): the same source text compiled under a
-    // different classloader object is a MISS. Unwrap CodeGenerator.cache
-    // (NonFateSharingLoadingCache -> shaded-guava Cache -> asMap) and keep
-    // (classloader-ref, source) so misses can be attributed to classloader
-    // churn vs genuinely new source text.
-    def cgCacheKeys(): Set[(AnyRef, String)] = cgDumpDir.map { _ =>
-      try {
-        val cg = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-        val f = cg.getClass.getDeclaredFields.find(_.getName.endsWith("cache")).get
-        f.setAccessible(true)
-        val outer = f.get(cg)
-        // NonFateSharingLoadingCache.cache() -> org.sparkproject.guava Cache
-        val inner = outer.getClass.getMethods.find(m =>
-          m.getName == "cache" && m.getParameterCount == 0).get.invoke(outer)
-        val asMap = inner.getClass.getMethods.find(_.getName == "asMap").get
-        asMap.setAccessible(true)
-        val m = asMap.invoke(inner).asInstanceOf[java.util.Map[AnyRef, AnyRef]]
-        Set.from(scala.jdk.CollectionConverters.SetHasAsScala(m.keySet()).asScala)
-          .map {
-            case t: Tuple2[_, _] =>
-              val clRef = t._1.asInstanceOf[AnyRef]
-              val cl = clRef.getClass.getMethods.find(_.getName == "get")
-                .map(_.invoke(clRef)).orNull
-              val code = t._2.asInstanceOf[AnyRef]
-              val body = code.getClass.getMethods.find(_.getName == "body")
-                .map(_.invoke(code).asInstanceOf[String]).getOrElse(code.toString)
-              (cl, body)
-            case k => (null, k.toString)
-          }
-      } catch { case e: Throwable =>
-        System.err.println(s"[profileq] cg cache reflection failed: $e")
-        Set.empty[(AnyRef, String)]
-      }
-    }.getOrElse(Set.empty)
-
     val fn = SparkEntry.queries(qname)
-    def resetStorage(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     // warm
     try fn(spark, sfDir).count() catch { case e: Throwable =>
       System.err.println(s"warm failed: $e") }
-    resetStorage()
+    Sessions.resetStorage(spark)
 
     (1 to reps).foreach { r =>
       jobs.clear(); stageToJob.clear()
@@ -177,7 +108,6 @@ object ProfileQ {
       val (cgN0, cgT0) = (cg.METRIC_COMPILATION_TIME.getCount,
         cg.METRIC_COMPILATION_TIME.getSnapshot.getMean *
           cg.METRIC_COMPILATION_TIME.getCount)
-      val cgKeys0 = cgCacheKeys()
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -185,31 +115,6 @@ object ProfileQ {
       val cgT1 = cg.METRIC_COMPILATION_TIME.getSnapshot.getMean * cgN1
       println(f"codegen compiles this rep: ${cgN1 - cgN0} " +
         f"(~${(cgT1 - cgT0) / 1e3}%.1f s compile time)")
-      cgDumpDir.foreach { dir =>
-        val fresh = (cgCacheKeys() -- cgKeys0).toSeq
-        val oldBodies = cgKeys0.map(_._2)
-        // a fresh key whose SOURCE TEXT already sat in the cache under a
-        // different classloader is a classloader-churn miss, not a new plan
-        val (clChurn, newText) = fresh.partition(k => oldBodies.contains(k._2))
-        val loaders = fresh.map(k => Option(k._1)
-          .map(cl => cl.getClass.getSimpleName + "@" +
-            Integer.toHexString(System.identityHashCode(cl))).getOrElse("null"))
-          .groupBy(identity).view.mapValues(_.size).toMap
-        println(s"codegen cache: ${fresh.size} sources newly cached in rep $r " +
-          s"(${clChurn.size} classloader-churn misses of PREVIOUSLY CACHED " +
-          s"text, ${newText.size} genuinely new sources); fresh-key " +
-          s"loaders: $loaders")
-        // the warm pass pre-fills the stable set, so EVERY rep's inserts
-        // are per-rep-unique sources; dumping all reps gives rep-N vs
-        // rep-N+1 twins to diff for the varying token
-        new java.io.File(dir).mkdirs()
-        newText.zipWithIndex.foreach { case (k, i) =>
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(f"$dir/rep${r}_src$i%03d.java"), k._2)
-        }
-        if (newText.nonEmpty)
-          println(s"codegen cache: rep-$r new-text sources dumped to $dir")
-      }
       // the listener bus is asynchronous: drain briefly so the last job's
       // onJobEnd/onStageCompleted land before the listener detaches
       // (otherwise the final rows print end=0 / negative jobWall)
@@ -217,7 +122,7 @@ object ProfileQ {
       while (jobs.values.exists(_.end == 0L) && System.nanoTime() < drainDeadline)
         Thread.sleep(50)
       spark.sparkContext.removeSparkListener(listener)
-      resetStorage()
+      Sessions.resetStorage(spark)
       println(f"%n=== $qname rep $r wall $wall%.3f s, ${jobs.size} jobs ===")
       println(f"${"jobWall"}%8s ${"gap"}%7s ${"stg"}%4s ${"tasks"}%6s " +
         f"${"taskTime"}%9s ${"shufR"}%8s ${"shufW"}%8s ${"input"}%9s  desc")

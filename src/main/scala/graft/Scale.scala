@@ -1445,34 +1445,15 @@ object Scale {
       if (args.length > 2) probes.filter(p => args.drop(2).contains(p.name))
       else probes
     require(selected.nonEmpty, "no probes selected")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Emulate the many-splits regime of a real corpus: these tables are
-      // byte-SMALL but CPU-heavy per row (signatures, shingles), so the
-      // 128 MB default packs a whole 50 MB / 500k-doc table into ONE scan
-      // task — a test-data-layout straggler no engine can split (a 100-TB
-      // table arrives in thousands of splits). 4 MB splits + the
-      // generator's ≤64k-row row groups give local[32] real scan
-      // parallelism at every scale factor.
-      .config("spark.sql.files.maxPartitionBytes", String.valueOf(4 * 1024 * 1024))
-      // match the bench session's codegen-class cache (Bench.scala has the
-      // full rationale): the probes rerun the same chains across scale
-      // factors, exactly the repeating-plan-shape regime the 100-entry
-      // default thrashes
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // match the bench session (Bench.scala has the full rationale): with
-      // isolation on, every streaming-query start keys a fresh executor
-      // classloader and recompiles all its codegen units
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Emulate the many-splits regime of a real corpus: these tables are
+    // byte-SMALL but CPU-heavy per row (signatures, shingles), so the
+    // 128 MB default packs a whole 50 MB / 500k-doc table into ONE scan
+    // task — a test-data-layout straggler no engine can split (a 100-TB
+    // table arrives in thousands of splits). 4 MB splits + the
+    // generator's ≤64k-row row groups give local[32] real scan
+    // parallelism at every scale factor.
+    val spark = Sessions.build("graft-scale", extra = Map(
+      "spark.sql.files.maxPartitionBytes" -> String.valueOf(4 * 1024 * 1024)))
 
     // warmup at the smallest SF: JIT + codegen, untimed
     val warmDir = "/root/testdata/sf0.001"
@@ -1497,9 +1478,7 @@ object Scale {
       // later probes' tasks (measured: the same stage's max task went
       // 0.9 s → 3.0 s between two identical runs), which the straggler
       // gate would misread as key skew
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Sessions.resetStorage(spark)
       System.gc()
       val savedConf = p.conf.keys.map(k =>
         k -> (try Some(spark.conf.get(k)) catch { case _: Throwable => None })).toMap

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,14 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name substrings (dev filter)
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     val attempted = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
@@ -52,10 +44,11 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // gates that persist intermediates (near-dup pipelines) document
-      // cleanup as caller-owned; across ~90 gates the leftovers would
-      // accumulate in executor storage, so drop them per query like Bench
-      finally spark.catalog.clearCache()
+      // gates that persist or localCheckpoint intermediates (near-dup
+      // pipelines, stage fences) document cleanup as caller-owned; across
+      // ~90 gates the leftovers would accumulate in executor storage, so
+      // drop them per query like Bench
+      finally Sessions.resetStorage(spark)
     }
     val json = SparkEntry.oracleSql
       // dev-filtered runs dump only the matching oracles so the checker's

@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.Sessions
 import graft.io.{Caipy, CaipyGeneric, Fiftyone}
 import graft.model.GraftDataset
 import graft.operators.Diff
@@ -284,14 +285,9 @@ object CaipyToFiftyone {
 
   def main(args: Array[String]): Unit = {
     val c = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER: deployment override of the local[cpus] master
+    val spark = Sessions.build("caipy2fo",
+      extra = sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toMap)
     val ds = load(spark, c)
     convert(ds, c)
     System.err.println(s"[caipy2fo] exported ${ds.numImages} samples to ${c.outDir}/current")

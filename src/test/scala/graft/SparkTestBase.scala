@@ -3,16 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession across all suites (forked test JVM). */
+/** One shared local SparkSession across all suites (forked test JVM):
+  * the mains' session, with 4 cores pinned so results do not depend on the
+  * box the suite runs on. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.build("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
