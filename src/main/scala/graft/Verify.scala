@@ -1,4 +1,5 @@
 package graft
+import graft.io.Json
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,24 +21,12 @@ object Verify {
       if (new java.io.File(s"$outDir/$name").isDirectory)
         IoUtil.rmTree(s"$outDir/$name")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // manifest BEFORE the query loop: if this run crashes mid-way, the
     // checker must see THIS run's attempt set (whose stale dirs were just
     // deleted → flagged missing), not a previous run's manifest that would
     // validate leftover dirs as current
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      attempted.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      attempted.keys.toSeq.sorted.map(Json.str).mkString("[", ",", "]"))
     attempted.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -55,7 +44,7 @@ object Verify {
       // missing-result detection doesn't false-flag unrun queries; the
       // driver's unfiltered run still writes the full map
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

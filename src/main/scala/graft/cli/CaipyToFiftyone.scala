@@ -149,12 +149,12 @@ object CaipyToFiftyone {
   def convert(ds: GraftDataset, c: Config): Unit = {
     Fiftyone.writeJsonl(ds, s"${c.outDir}/current")
     // escape: the name defaults to a folder basename, which may carry
-    // quotes/backslashes — unescaped they make meta.json unparseable
-    val name = graft.io.ParquetIO.escJson(
+    // quotes/backslashes — written raw they make meta.json unparseable
+    val name = graft.io.Json.str(
       c.datasetName.orElse(ds.datasetName).getOrElse("dataset"))
     Files.createDirectories(Paths.get(c.outDir))
     Files.writeString(Paths.get(c.outDir, "meta.json"),
-      s"""{"dataset_name":"$name","persistent":${c.persistent},""" +
+      s"""{"dataset_name":$name,"persistent":${c.persistent},""" +
         s""""launch_app":${c.launchApp},"port":${c.port}}""")
   }
 

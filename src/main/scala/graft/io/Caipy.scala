@@ -150,22 +150,6 @@ object Caipy {
         StructField("box_width", DoubleType), StructField("box_height", DoubleType))))
   }
 
-  private def jsonVal(v: Any): String = v match {
-    case null => "null"
-    case s: String => "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    case d: Double =>
-      if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
-    case f: Float => jsonVal(f.toDouble)
-    case s: Iterable[_] => s.map(jsonVal).mkString("[", ", ", "]")
-    case other => other.toString
-  }
-
   /** Re-nest dotted names into JSON objects: `{"a.b": 1}` → `{"a": {"b": 1}}`. */
   private def nest(pairs: Seq[(String, Any)]): String = {
     val (leaves, nested) = pairs.partition(!_._1.contains('.'))
@@ -173,8 +157,8 @@ object Caipy {
       .map { case (head, kids) =>
         head -> nest(kids.map { case (k, v) => k.drop(head.length + 1) -> v })
       }
-    (leaves.map { case (k, v) => s"${jsonVal(k)}: ${jsonVal(v)}" } ++
-      groups.toSeq.sortBy(_._1).map { case (k, obj) => s"${jsonVal(k)}: $obj" })
+    (leaves.map { case (k, v) => s"${Json.str(k)}: ${Json.value(v)}" } ++
+      groups.toSeq.sortBy(_._1).map { case (k, obj) => s"${Json.str(k)}: $obj" })
       .mkString("{", ", ", "}")
   }
 

@@ -119,19 +119,6 @@ object Coco {
     else Some(stem)
   }
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def num(d: Double): String =
-    if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
-
   /** Write one COCO JSON per split under `dir` as
     * `<name>_<split>.json` (to_coco, io/coco.py:177-336). `confidence`
     * exports as `score`.
@@ -161,7 +148,7 @@ object Coco {
           .map(col): _*)
         .orderBy("id")
       val catJson = ds.labelMap.toSeq.sortBy(_._1).map { case (id, n) =>
-        s"""{"id": $id, "name": "${esc(n)}", "supercategory": ""}"""
+        s"""{"id": $id, "name": ${Json.str(n)}, "supercategory": ""}"""
       }.mkString("[", ", ", "]")
       val fileName = split match {
         case Some(s) => s"${name}_$s.json"
@@ -177,7 +164,7 @@ object Coco {
         imgs.toLocalIterator().forEachRemaining { r =>
           if (!first) w.write(", ")
           first = false
-          w.write(s"""{"id": ${r.getLong(0)}, "width": ${r.getInt(1)}, "height": ${r.getInt(2)}, "file_name": "${esc(r.getString(3))}"}""")
+          w.write(s"""{"id": ${r.getLong(0)}, "width": ${r.getInt(1)}, "height": ${r.getInt(2)}, "file_name": ${Json.str(r.getString(3))}}""")
         }
         w.write("""], "annotations": [""")
         first = true
@@ -186,7 +173,7 @@ object Coco {
           first = false
           val score = if (hasConf && !r.isNullAt(7)) s""", "score": ${r.getDouble(7)}""" else ""
           w.write(s"""{"id": ${r.getLong(0)}, "image_id": ${r.getLong(1)}, "category_id": ${r.getInt(2)}, """ +
-            s""""bbox": [${num(r.getDouble(3))}, ${num(r.getDouble(4))}, ${num(r.getDouble(5))}, ${num(r.getDouble(6))}], "iscrowd": 0$score}""")
+            s""""bbox": ${Json.value(Seq(r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))}, "iscrowd": 0$score}""")
         }
         w.write(s"""], "categories": $catJson}""")
       } finally w.close()

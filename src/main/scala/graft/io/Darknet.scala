@@ -152,7 +152,7 @@ object Darknet {
     // dense re-id map 0..K-1 (ids_map.json analogue, io/darknet.py:554-736)
     val dense = ordered.map(_._1).zipWithIndex.toMap
     val idsJson = ordered.zipWithIndex.map { case ((id, n), i) =>
-      s""""$i": {"id": $id, "name": "$n"}"""
+      s""""$i": {"id": $id, "name": ${Json.str(n)}}"""
     }.mkString("{", ", ", "}")
     java.nio.file.Files.writeString(base.resolve("ids_map.json"), idsJson)
 

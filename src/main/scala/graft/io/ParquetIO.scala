@@ -2,6 +2,7 @@ package graft.io
 
 import graft.model.GraftDataset
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Native persistence: a directory of parquet datasets + a JSON sidecar with
   * the driver-side metadata. Same logical layout as the reference's
@@ -15,107 +16,40 @@ object ParquetIO {
     val mode = if (overwrite) "overwrite" else "errorifexists"
     ds.images.write.mode(mode).parquet(s"$dir/images")
     ds.annotations.write.mode(mode).parquet(s"$dir/annotations")
-    val meta = metadataJson(ds)
-    // sidecar via the Hadoop FileSystem API: `dir` may be hdfs://, s3a://…
-    // (the parquet datasets above already go through it via Spark)
-    val conf = ds.images.sparkSession.sparkContext.hadoopConfiguration
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/metadata.json")
-    val fs = metaPath.getFileSystem(conf)
-    val out = fs.create(metaPath, true)
-    try out.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    Json.write(ds.images.sparkSession, s"$dir/metadata.json", metadataJson(ds),
+      overwrite = true)
   }
 
   def read(spark: SparkSession, dir: String): GraftDataset = {
     val images = spark.read.parquet(s"$dir/images")
     val annotations = spark.read.parquet(s"$dir/annotations")
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/metadata.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (lm, root, name, booleanized) =
-      if (fs.exists(metaPath)) {
-        val in = fs.open(metaPath)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        parseMetadata(txt)
-      }
-      else (Map.empty[Int, String], ".", None, Map("images" -> Set.empty[String], "annotations" -> Set.empty[String]))
-    GraftDataset(images, annotations, lm, root, name, booleanized)
+    // an absent sidecar (or field) reads as the defaults
+    val meta = Json.read(spark, s"$dir/metadata.json")
+    def field(name: String) = meta.flatMap(j => Option(j.get(name)))
+    def entries(name: String) =
+      field(name).filter(_.isObject).map(_.properties.asScala.toSeq)
+    val lm = entries("label_map").map(_.map(e =>
+      e.getKey.toInt -> e.getValue.asText).toMap).getOrElse(Map.empty[Int, String])
+    val root = field("images_root").filter(_.isTextual).fold(".")(_.asText)
+    val name = field("dataset_name").filter(_.isTextual).map(_.asText)
+    val bool = entries("booleanized_columns").map(_.map(e =>
+      e.getKey -> e.getValue.asScala.map(_.asText).toSet).toMap)
+      .getOrElse(Map("images" -> Set.empty[String], "annotations" -> Set.empty[String]))
+    GraftDataset(images, annotations, lm, root, name, bool)
   }
-
-  /** JSON string-content escaping, shared with the CLI's meta sidecar. */
-  private[graft] def escJson(s: String): String = esc(s)
-
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 
   private[graft] def metadataJson(ds: GraftDataset): String = {
     val lm = ds.labelMap.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k": "${esc(v)}"""" }.mkString("{", ", ", "}")
+      .map { case (k, v) => s""""$k": ${Json.str(v)}""" }.mkString("{", ", ", "}")
     val bool = ds.booleanized.toSeq.sortBy(_._1).map { case (t, cols) =>
-      s""""${esc(t)}": [${cols.toSeq.sorted.map(c => s""""${esc(c)}"""").mkString(", ")}]"""
+      s"""${Json.str(t)}: ${Json.value(cols.toSeq.sorted)}"""
     }.mkString("{", ", ", "}")
-    val name = ds.datasetName.map(n => s""""${esc(n)}"""").getOrElse("null")
     s"""{
        |  "label_map": $lm,
-       |  "images_root": "${esc(ds.imagesRoot)}",
-       |  "dataset_name": $name,
+       |  "images_root": ${Json.str(ds.imagesRoot)},
+       |  "dataset_name": ${Json.value(ds.datasetName.orNull)},
        |  "booleanized_columns": $bool
        |}""".stripMargin
-  }
-
-  /** Minimal JSON parsing for our own sidecar format (no JSON lib in the
-    * dependency budget). Tolerates whitespace; assumes the structure written
-    * by [[metadataJson]]. */
-  private[graft] def parseMetadata(json: String)
-      : (Map[Int, String], String, Option[String], Map[String, Set[String]]) = {
-    def strField(name: String): Option[String] = {
-      val m = ("\"" + name + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(json)
-      m.map(g => unesc(g.group(1)))
-    }
-    def objField(name: String): Option[String] = {
-      val m = ("\"" + name + "\"\\s*:\\s*(\\{[^}]*\\})").r.findFirstMatchIn(json)
-      m.map(_.group(1))
-    }
-    val lm = objField("label_map").map { body =>
-      "\"(-?\\d+)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body)
-        .map(m => m.group(1).toInt -> unesc(m.group(2))).toMap
-    }.getOrElse(Map.empty)
-    val root = strField("images_root").getOrElse(".")
-    val name = strField("dataset_name")
-    val bool = objField("booleanized_columns").map { body =>
-      "\"(\\w+)\"\\s*:\\s*\\[([^\\]]*)\\]".r.findAllMatchIn(body).map { m =>
-        val cols = "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(m.group(2)).map(g => unesc(g.group(1))).toSet
-        m.group(1) -> cols
-      }.toMap
-    }.getOrElse(Map("images" -> Set.empty[String], "annotations" -> Set.empty[String]))
-    (lm, root, name, bool)
-  }
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => sb += '\n'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 't' => sb += '\t'; i += 2
-          case 'u' => sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case other => sb += other; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
   }
 }
 

@@ -3,7 +3,7 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import scala.jdk.CollectionConverters._
 
 /** JSON-schema-driven dtypes, defaults, and enum booleanization — reference
@@ -16,12 +16,11 @@ import scala.jdk.CollectionConverters._
   *  3. the value domains of enum-array fields, feeding
   *     [[graft.operators.Booleanize]]
   *
-  * Jackson (already on the Spark classpath) does the parsing; everything
+  * Jackson, through the shared [[Json]] mapper, does the parsing; everything
   * else is driver-side schema algebra.
   */
 object SchemaUtil {
-
-  private val mapper = new ObjectMapper()
+  import Json.mapper
 
   case class FieldSpec(name: String, dataType: DataType, nullable: Boolean,
       default: Option[Any], enumValues: Option[Seq[String]])
@@ -116,7 +115,7 @@ object SchemaUtil {
   * schema nests the image fields under `properties.image` and annotation
   * fields under `properties.annotations.items` (array-of-object). */
 object CaipySchema {
-  private val mapper = new ObjectMapper()
+  import Json.mapper
 
   private def navigate(schemaJson: String, path: Seq[String]): Option[String] = {
     var node = mapper.readTree(schemaJson)

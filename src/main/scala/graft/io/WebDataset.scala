@@ -63,25 +63,6 @@ object WebDataset {
     if (pad > 0) out.write(new Array[Byte](pad))
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def jsonVal(v: Any): String = v match {
-    case null => "null"
-    case s: String => jsonStr(s)
-    case b: Boolean => b.toString
-    case d: Double =>
-      if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
-    case f: Float => jsonVal(f.toDouble)
-    case other => other.toString // integral types
-  }
-
   // -------------------------------------------------------------- writer
 
   /** Write `df` as `numShards` tar shards under `outDir`
@@ -126,7 +107,7 @@ object WebDataset {
             val key = f"${r.getAs[Long]("__id")}%09d"
             val meta = r.getAs[Row]("__meta")
             val json = metaCols.zipWithIndex
-              .map { case (c, i) => s"${jsonStr(c)}: ${jsonVal(meta.get(i))}" }
+              .map { case (c, i) => s"${Json.str(c)}: ${Json.value(meta.get(i))}" }
               .mkString("{", ", ", "}") + "\n"
             writeEntry(out, s"$key.txt", r.getAs[String]("__text").getBytes("UTF-8"))
             writeEntry(out, s"$key.json", json.getBytes("UTF-8"))

@@ -466,8 +466,10 @@ object Dedup {
           s"minhash store append: no _meta.json under $path but the store " +
             "has postings — it predates the metadata sidecar; rebuild it " +
             "with writeMinHashStore")
-        writeStoreMeta(docs.sparkSession, path, meta, overwrite = false)
-    } else writeStoreMeta(docs.sparkSession, path, meta, overwrite = true)
+    }
+    if (mode != "append" || existing.isEmpty)
+      graft.io.Json.write(docs.sparkSession, s"$path/_meta.json", meta.json,
+        overwrite = mode != "append")
     val base = minHashBase(docs, textCol, idCol, k, shingleN).persist(storage)
     try {
       // co-locate each store partition into ONE write task before the
@@ -493,53 +495,20 @@ object Dedup {
     * persisted as `_meta.json` next to `postings/`/`payload/` so append
     * and probe can verify compatibility instead of silently mis-pruning. */
   private[llm] case class StoreMeta(k: Int, bands: Int, shingleN: Int,
-      nParts: Int)
-
-  private def storeMetaPath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(path, "_meta.json")
-
-  /** Write the sidecar through the Hadoop FS API — the store path may be
-    * any Spark-reachable filesystem (HDFS/S3/local), not just java.nio.
-    * `overwrite = false` is the bootstrap path: create-EXCLUSIVE, so a
-    * concurrent bootstrap of the same store fails loudly here instead of
-    * both writers interleaving data under conflicting parameters. */
-  private def writeStoreMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, m: StoreMeta, overwrite: Boolean): Unit = {
-    val p = storeMetaPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, overwrite)
-    val json =
-      s"""{"k":${m.k},"bands":${m.bands},"shingleN":${m.shingleN},""" +
-        s""""nParts":${m.nParts}}"""
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      nParts: Int) {
+    def json: String =
+      s"""{"k":$k,"bands":$bands,"shingleN":$shingleN,"nParts":$nParts}"""
   }
 
   /** Read the sidecar; `None` when absent (a store written before the
-    * sidecar existed). The four-int JSON is parsed by regex — no JSON
-    * library in the engine's dependency surface. */
+    * sidecar existed). */
   private[llm] def readStoreMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[StoreMeta] = {
-    val p = storeMetaPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    def field(name: String): Int = {
-      val m = ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r
-        .findFirstMatchIn(text)
-      require(m.nonEmpty, s"minhash store _meta.json under $path is " +
-        s"malformed: missing field '$name' in: $text")
-      m.get.group(1).toInt
+    val file = s"$path/_meta.json"
+    graft.io.Json.read(spark, file).map { j =>
+      def field(name: String) = graft.io.Json.int(j, name, file)
+      StoreMeta(field("k"), field("bands"), field("shingleN"), field("nParts"))
     }
-    Some(StoreMeta(field("k"), field("bands"), field("shingleN"),
-      field("nParts")))
   }
 
   /** The band-key → partition assignment shared by store write and probe

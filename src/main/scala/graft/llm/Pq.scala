@@ -229,7 +229,15 @@ object Pq {
     * mismatches fail loudly (the [[graft.llm.Dedup]] MinHash-store
     * discipline applied to the ANN stores). */
   private[llm] case class PqStoreMeta(kind: String, dim: Int, ncells: Int,
-      cellsDigest: String, quantDigest: String, keepVectors: Boolean)
+      cellsDigest: String, quantDigest: String, keepVectors: Boolean) {
+    def json: String = {
+      import graft.io.Json.str
+      s"""{"kind":${str(kind)},"dim":$dim,"ncells":$ncells,""" +
+        s""""cellsDigest":${str(cellsDigest)},""" +
+        s""""quantDigest":${str(quantDigest)},""" +
+        s""""keepVectors":$keepVectors}"""
+    }
+  }
 
   /** MD5 over the IEEE-754 bit patterns of a double stream — an exact,
     * order-sensitive fingerprint of centroid/codebook/stats arrays (no
@@ -262,11 +270,8 @@ object Pq {
     (mins.length, doublesDigest((mins ++ maxs).iterator))
   }
 
-  private def pqStoreMetaPath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(path, "_meta.json")
-
-  /** Write the sidecar through the Hadoop FS API (the store may live on
-    * HDFS/S3/local). Unlike the Dedup store (whose append path writes its
+  /** The sidecar is written through the Hadoop FS API (the store may live
+    * on HDFS/S3/local). Unlike the Dedup store (whose append path writes its
     * sidecar first), these stores are overwrite-only, so the write order
     * is delete-stale-sidecar → data → new sidecar: the parquet overwrite
     * clears the partition directories but PRESERVES `_`-prefixed files
@@ -279,62 +284,9 @@ object Pq {
     * whose data write committed. */
   private def deletePqStoreMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val p = pqStoreMetaPath(path)
+    val p = new org.apache.hadoop.fs.Path(path, "_meta.json")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p)) fs.delete(p, false): Unit
-  }
-
-  private def writePqStoreMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, m: PqStoreMeta): Unit = {
-    val p = pqStoreMetaPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    val json =
-      s"""{"kind":"${m.kind}","dim":${m.dim},"ncells":${m.ncells},""" +
-        s""""cellsDigest":"${m.cellsDigest}",""" +
-        s""""quantDigest":"${m.quantDigest}",""" +
-        s""""keepVectors":${m.keepVectors}}"""
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Read the sidecar; `None` when absent (a store written before the
-    * sidecar existed — the probe then runs on the caller's parameters
-    * alone, the documented pre-sidecar degrade). Regex-parsed — no JSON
-    * library in the engine's dependency surface. */
-  private[llm] def readPqStoreMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[PqStoreMeta] = {
-    val p = pqStoreMetaPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    def str(name: String): String = {
-      val m = ("\"" + name + "\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(text)
-      require(m.nonEmpty, s"ANN store _meta.json under $path is malformed: " +
-        s"missing field '$name' in: $text")
-      m.get.group(1)
-    }
-    def num(name: String): Int = {
-      val m = ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(text)
-      require(m.nonEmpty, s"ANN store _meta.json under $path is malformed: " +
-        s"missing field '$name' in: $text")
-      m.get.group(1).toInt
-    }
-    def bool(name: String): Boolean = {
-      val m = ("\"" + name + "\"\\s*:\\s*(true|false)").r.findFirstMatchIn(text)
-      require(m.nonEmpty, s"ANN store _meta.json under $path is malformed: " +
-        s"missing field '$name' in: $text")
-      m.get.group(1).toBoolean
-    }
-    Some(PqStoreMeta(str("kind"), num("dim"), num("ncells"),
-      str("cellsDigest"), str("quantDigest"), bool("keepVectors")))
   }
 
   /** Probe-side contract check: when the store carries a sidecar, the
@@ -342,11 +294,19 @@ object Pq {
     * parameters must be bit-identical to write-time — anything else
     * silently mis-prunes partitions (wrong cell directories read) or
     * mis-decodes every distance. `keepVectors` is a storage detail, not a
-    * probe argument, so it is not compared. */
+    * probe argument, so it is not compared. A store with no sidecar
+    * predates the contract: the probe runs on the caller's parameters
+    * alone, and `dimAndQuant` (which may run a job) is never evaluated. */
   private def requirePqStoreMatches(spark: org.apache.spark.sql.SparkSession,
-      path: String, kind: String, dim: Int, ncells: Int,
-      cellsDig: String, quantDig: String): Unit =
-    readPqStoreMeta(spark, path).foreach { m =>
+      path: String, kind: String, ncells: Int, cellsDig: String)(
+      dimAndQuant: => (Int, String)): Unit = {
+    val file = s"$path/_meta.json"
+    graft.io.Json.read(spark, file).foreach { j =>
+      import graft.io.Json.{bool, int, text}
+      val m = PqStoreMeta(text(j, "kind", file), int(j, "dim", file),
+        int(j, "ncells", file), text(j, "cellsDigest", file),
+        text(j, "quantDigest", file), bool(j, "keepVectors", file))
+      val (dim, quantDig) = dimAndQuant
       require(m.kind == kind && m.dim == dim && m.ncells == ncells &&
         m.cellsDigest == cellsDig && m.quantDigest == quantDig,
         s"ANN store probe under $path: the probe's parameters (kind=$kind, " +
@@ -356,6 +316,7 @@ object Pq {
           "parameters silently mis-decode distances; probe with the " +
           "write-time parameters or rebuild the store")
     }
+  }
 
   /** Materialize an encoded+cell-assigned corpus ([[encode]] +
     * [[assignCells]]) as parquet PARTITIONED BY `cell_id` — the storage
@@ -386,9 +347,9 @@ object Pq {
     // null cells (null vectors) have nothing to serve — drop at write
     slim.filter(col("cell_id").isNotNull)
       .write.mode("overwrite").partitionBy("cell_id").parquet(path)
-    writePqStoreMeta(encoded.sparkSession, path,
+    graft.io.Json.write(encoded.sparkSession, s"$path/_meta.json",
       PqStoreMeta("pq", dim, cells.size, cellsDigest(cells),
-        codebooksDigest(codebooks), keepVectors))
+        codebooksDigest(codebooks), keepVectors).json, overwrite = true)
   }
 
   /** [[ivfAdcTopK]] against a [[writeCellPartitioned]] store: the probed
@@ -419,8 +380,8 @@ object Pq {
       s"nprobe $nprobe out of range 1..${cells.size}")
     val m = codebooks.length
     val dsub = codebooks.head.head.length
-    requirePqStoreMatches(spark, path, "pq", m * dsub, cells.size,
-      cellsDigest(cells), codebooksDigest(codebooks))
+    requirePqStoreMatches(spark, path, "pq", cells.size, cellsDigest(cells))(
+      (m * dsub, codebooksDigest(codebooks)))
     val qv = col(queryVecCol).cast("array<double>")
     val qtab = array(codebooks.zipWithIndex.map { case (cb, j) =>
       array(cb.map(cent => l2sq(subspace(qv, j, dsub), cent)): _*)
@@ -629,9 +590,9 @@ object Pq {
     val slim = if (keepVectors) encoded else encoded.drop(vecCol)
     slim.filter(col("cell_id").isNotNull)
       .write.mode("overwrite").partitionBy("cell_id").parquet(path)
-    writePqStoreMeta(encoded.sparkSession, path,
+    graft.io.Json.write(encoded.sparkSession, s"$path/_meta.json",
       PqStoreMeta("sq8", dim, cells.size, cellsDigest(cells), quantDig,
-        keepVectors))
+        keepVectors).json, overwrite = true)
   }
 
   /** [[ivfSqTopK]] against a [[writeSqCellPartitioned]] store: the
@@ -659,11 +620,8 @@ object Pq {
     require(k > 0, s"k must be positive: $k")
     require(nprobe > 0 && nprobe <= cells.size,
       s"nprobe $nprobe out of range 1..${cells.size}")
-    if (readPqStoreMeta(spark, path).nonEmpty) {
-      val (dim, quantDig) = statsDigest(stats)
-      requirePqStoreMatches(spark, path, "sq8", dim, cells.size,
-        cellsDigest(cells), quantDig)
-    }
+    requirePqStoreMatches(spark, path, "sq8", cells.size, cellsDigest(cells))(
+      statsDigest(stats))
     val qv = col(queryVecCol).cast("array<double>")
     val probed = probedCells(qv, cells, nprobe)
     val q = graft.model.GraftDataset.broadcastIfSmall(

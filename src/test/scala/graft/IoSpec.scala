@@ -99,6 +99,23 @@ class DarknetSpec extends SparkFunSuite {
       dsEq1(ds), dsEq2(back)))
   }
 
+  test("toDarknet: ids_map.json escapes class names and round-trips them") {
+    val images = Seq((0L, 100, 100, "img1.jpg")).toDF("id", "width", "height", "relative_path")
+    val anns = Seq((0L, 0L, 3, 10.0, 10.0, 20.0, 20.0)).toDF("id", "image_id",
+      "category_id", "box_x_min", "box_y_min", "box_width", "box_height")
+    val names = Map(3 -> "say \"hi\"", 5 -> "back\\slash")
+    val outDir = Files.createTempDirectory("darknet_ids").toString
+    Darknet.toDarknet(graft.model.GraftDataset.create(images, anns, names), outDir)
+    val txt = Files.readString(Paths.get(outDir, "ids_map.json"))
+    val parsed = spark.range(1).select(from_json(lit(txt),
+        org.apache.spark.sql.types.MapType(org.apache.spark.sql.types.StringType,
+          org.apache.spark.sql.types.StructType.fromDDL("id INT, name STRING")))
+      .as("m")).head().getMap[String, org.apache.spark.sql.Row](0)
+    assert(parsed != null, s"ids_map.json is not JSON: $txt")
+    assert(parsed.map { case (i, r) => i -> (r.getInt(0), r.getString(1)) }.toMap ==
+      Map("0" -> (3, "say \"hi\""), "1" -> (5, "back\\slash")))
+  }
+
   private def dsEq1(ds: graft.model.GraftDataset) =
     ds.copy(annotations = ds.annotations.drop("id")).reordered
       .copy(annotations = graft.model.GraftDataset.defaultAnnotColumns(
@@ -178,6 +195,46 @@ class DarknetSpec extends SparkFunSuite {
     assert(m == Map(0L -> 0, 1L -> 1))
   }
 
+}
+
+class ParquetIOSpec extends SparkFunSuite {
+  import spark.implicits._
+
+  test("metadata.json round-trips JSON metacharacters; the established layout still reads") {
+    val images = Seq((0L, 10, 10, "a.jpg", Seq("x", "y")))
+      .toDF("id", "width", "height", "relative_path", "tags]")
+    val anns = Seq((0L, 0L, 0, 1.0, 1.0, 2.0, 2.0)).toDF("id", "image_id",
+      "category_id", "box_x_min", "box_y_min", "box_width", "box_height")
+    val ds = graft.operators.Booleanize.booleanize(
+      graft.model.GraftDataset.create(images, anns, Map(0 -> "a}b", 1 -> "car"),
+        datasetName = Some("set {1}")),
+      "images", "tags]")
+    val dir = Files.createTempDirectory("pq_meta").toString
+    ds.toParquet(s"$dir/out")
+    val back = ParquetIO.read(spark, s"$dir/out")
+    assert(back.labelMap == ds.labelMap)
+    assert(back.booleanized == ds.booleanized)
+    assert(back.datasetName == ds.datasetName)
+    assert(back.imagesRoot == ds.imagesRoot)
+    // a sidecar exactly as earlier releases wrote it still reads the same
+    val old = s"$dir/old"
+    images.write.parquet(s"$old/images")
+    anns.write.parquet(s"$old/annotations")
+    // (<ctl> is spliced in after: a raw literal would decode its \u escape)
+    Files.writeString(Paths.get(old, "metadata.json"),
+      """{
+        |  "label_map": {"0": "tab\there", "1": "q\"uote<ctl>"},
+        |  "images_root": "/data/im ages",
+        |  "dataset_name": null,
+        |  "booleanized_columns": {"annotations": [], "images": ["tags]"]}
+        |}""".stripMargin.replace("<ctl>", "\\u001f"))
+    val legacy = ParquetIO.read(spark, old)
+    assert(legacy.labelMap == Map(0 -> "tab\there", 1 -> "q\"uote\u001f"))
+    assert(legacy.imagesRoot == "/data/im ages")
+    assert(legacy.datasetName.isEmpty)
+    assert(legacy.booleanized == Map("annotations" -> Set.empty[String],
+      "images" -> Set("tags]")))
+  }
 }
 
 class CaipySpec extends SparkFunSuite {

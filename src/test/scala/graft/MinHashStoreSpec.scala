@@ -99,4 +99,96 @@ class MinHashStoreSpec extends SparkFunSuite {
     assert(out.count() == 0)
     spark.catalog.clearCache()
   }
+
+  test("malformed _meta.json fails append and probe loudly; the established layout still probes") {
+    val docs = corpus(10, "r").toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("mh_store_meta").toString
+    Dedup.writeMinHashStore(docs, dir, nParts = 8)
+    val file = new java.io.File(dir, "_meta.json")
+    // replaced behind the Hadoop FS's back: drop its stale checksum too
+    def plant(json: String): Unit = {
+      new java.io.File(dir, "._meta.json.crc").delete()
+      java.nio.file.Files.writeString(file.toPath, json)
+    }
+    // truncated mid-write, with and without every field already present
+    for (bad <- Seq("""{"k":32,"bands":8""",
+        """{"k":32,"bands":8,"shingleN":3,"nParts":8""")) {
+      plant(bad)
+      val e1 = intercept[IllegalArgumentException] {
+        Dedup.appendMinHashStore(docs, dir, nParts = 8)
+      }
+      assert(e1.getMessage.contains(file.getPath), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException] {
+        Dedup.crossCorpusNearDupsFromStore(docs, dir, nParts = 8)
+      }
+      assert(e2.getMessage.contains(file.getPath), e2.getMessage)
+    }
+    // the exact bytes the store has always written still read back
+    plant("""{"k":32,"bands":8,"shingleN":3,"nParts":8}""")
+    assert(Dedup.crossCorpusNearDupsFromStore(docs, dir, nParts = 8)
+      .filter($"new_id" === $"ref_id").count() == 10)
+    spark.catalog.clearCache()
+  }
+
+  test("minhash store: _meta.json sidecar guards append and probe mismatches") {
+    import spark.implicits._
+    val docs = Seq((1L, "aa bb cc dd ee ff gg hh"),
+      (2L, "ii jj kk ll mm nn oo pp")).toDF("doc_id", "text")
+    val more = Seq((10L, "qq rr ss tt uu vv ww xx")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("r13store").toString
+    graft.llm.Dedup.writeMinHashStore(docs, dir, nParts = 8)
+    // matching append + probe still work (sidecar is transparent)
+    graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 8)
+    assert(graft.llm.Dedup.crossCorpusNearDupsFromStore(
+      more, dir, nParts = 8).count() >= 0)
+    // mismatched nParts on append: the pb/ib layout would interleave —
+    // MUST fail loudly, not silently mis-prune later probes
+    val e1 = intercept[IllegalArgumentException] {
+      graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 16)
+    }
+    assert(e1.getMessage.contains("mis-prune"))
+    // mismatched bands on append: different band keys, same failure class
+    val e2 = intercept[IllegalArgumentException] {
+      graft.llm.Dedup.appendMinHashStore(more, dir, bands = 4, nParts = 8)
+    }
+    assert(e2.getMessage.contains("mis-prune"))
+    // mismatched probe: pruned partition reads would miss candidates
+    val e3 = intercept[IllegalArgumentException] {
+      graft.llm.Dedup.crossCorpusNearDupsFromStore(more, dir, nParts = 16)
+    }
+    assert(e3.getMessage.contains("miss candidates"))
+    // a store with no sidecar (pre-sidecar layout) refuses appends — the
+    // caller must rebuild rather than guess the parameters
+    val meta = new java.io.File(dir, "_meta.json")
+    assert(meta.exists())
+    meta.delete()
+    val e4 = intercept[IllegalArgumentException] {
+      graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 8)
+    }
+    assert(e4.getMessage.contains("_meta.json"))
+  }
+
+  test("minhash store: sidecar lands BEFORE the data — a crashed bootstrap never strands a sidecar-less store") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("r14crash").toString
+    // a docs frame that throws at WRITE time (after the sidecar landed)
+    val poisoned = Seq((1L, "aa bb cc dd ee")).toDF("doc_id", "text")
+      .withColumn("text",
+        when(expr("raise_error('boom') is null"), col("text")))
+    intercept[Exception] {
+      graft.llm.Dedup.appendMinHashStore(poisoned, dir, nParts = 8)
+    }
+    assert(new java.io.File(dir, "_meta.json").isFile,
+      "crashed bootstrap stranded a store with no layout contract")
+    // the stranded store still enforces its parameters...
+    val more = Seq((2L, "ff gg hh ii jj")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 16)
+    }
+    assert(e.getMessage.contains("mis-prune"))
+    // ...and a matching retry completes the bootstrap normally
+    graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 8)
+    assert(graft.llm.Dedup.crossCorpusNearDupsFromStore(
+      more, dir, nParts = 8).count() >= 0)
+  }
 }

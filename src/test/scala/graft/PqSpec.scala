@@ -408,6 +408,51 @@ class PqSpec extends SparkFunSuite {
       nprobe = 2, k = 3).count() > 0)
   }
 
+  test("ANN store sidecar: malformed _meta.json fails the probe loudly; the established layout still probes") {
+    val embs = (0L until 40L).map(i =>
+      (i, Array.tabulate(8)(d => ((i * 5 + d * 11) % 23).toFloat)))
+      .toDF("vec_id", "embedding")
+    val cells = (0 until 4).map(c =>
+      Array.tabulate(8)(d => (c * 6 + d).toDouble)).toSeq
+    val cbs = (0 until 4).map(j =>
+      Seq(Array.tabulate(2)(x => j * 2.0 + x), Array.tabulate(2)(x => 20.0 - j - x)))
+    val queries = embs.filter(col("vec_id") < 2)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val stats = Pq.sqStatsMaterialized(spark, Pq.sqStats(embs))
+    val pqDir = java.nio.file.Files.createTempDirectory("pqmeta_bad").toString
+    Pq.writeCellPartitioned(Pq.assignCells(Pq.encode(embs, cbs), cells),
+      pqDir, cbs, cells)
+    val sqDir = java.nio.file.Files.createTempDirectory("sqmeta_bad").toString
+    Pq.writeSqCellPartitioned(Pq.assignCells(Pq.sqEncode(embs, stats), cells),
+      sqDir, stats, cells)
+    val stores = Seq(
+      ("pq", pqDir, () => Pq.ivfAdcTopKFromStore(spark, pqDir, queries, cbs,
+        cells, nprobe = 2, k = 3)),
+      ("sq8", sqDir, () => Pq.ivfSqTopKFromStore(spark, sqDir, queries, stats,
+        cells, nprobe = 2, k = 3)))
+    for ((kind, dir, probe) <- stores) {
+      val file = new java.io.File(dir, "_meta.json")
+      val written = java.nio.file.Files.readString(file.toPath)
+      // the layout these stores have always written
+      assert(written.matches(s"""\\{"kind":"$kind","dim":8,"ncells":4,""" +
+        """"cellsDigest":"[0-9a-f]{32}","quantDigest":"[0-9a-f]{32}",""" +
+        """"keepVectors":false\}"""), written)
+      // replaced behind the Hadoop FS's back: drop its stale checksum too
+      def plant(json: String): Unit = {
+        new java.io.File(dir, "._meta.json.crc").delete()
+        java.nio.file.Files.writeString(file.toPath, json)
+      }
+      // truncated mid-write, with and without every field already present
+      for (bad <- Seq(s"""{"kind":"$kind","dim":8""", written.dropRight(1))) {
+        plant(bad)
+        val e = intercept[IllegalArgumentException](probe())
+        assert(e.getMessage.contains(file.getPath), e.getMessage)
+      }
+      plant(written)
+      assert(probe().count() > 0)
+    }
+  }
+
   test("ANN store crash mid-overwrite never leaves a STALE sidecar over new data") {
     import spark.implicits._
     val cells = (0 until 2).map(c => Array.tabulate(4)(_ => c * 5.0)).toSeq

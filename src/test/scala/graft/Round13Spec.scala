@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-13 regression locks: the confidenceDecimals skew lever reachable
-  * from the public evaluator surface, the MinHash store's metadata sidecar
-  * (loud failure on parameter mismatch instead of silent mis-pruning), and
-  * the shared planted-id guard's edge cases. */
+  * from the public evaluator surface and the shared planted-id guard's edge
+  * cases. (The MinHash store's metadata-sidecar lock lives in
+  * [[MinHashStoreSpec]].) */
 class Round13Spec extends SparkFunSuite {
 
   test("Evaluator.precisionRecall plumbs confidenceDecimals: per-group bound enforced end-to-end") {
@@ -57,44 +57,6 @@ class Round13Spec extends SparkFunSuite {
       confidenceDecimals = Some(8))
     assert(prD8.count() == prExact.count())
     assert(apD8.collect().head.getAs[Double]("AP") == a)
-  }
-
-  test("minhash store: _meta.json sidecar guards append and probe mismatches") {
-    import spark.implicits._
-    val docs = Seq((1L, "aa bb cc dd ee ff gg hh"),
-      (2L, "ii jj kk ll mm nn oo pp")).toDF("doc_id", "text")
-    val more = Seq((10L, "qq rr ss tt uu vv ww xx")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("r13store").toString
-    graft.llm.Dedup.writeMinHashStore(docs, dir, nParts = 8)
-    // matching append + probe still work (sidecar is transparent)
-    graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 8)
-    assert(graft.llm.Dedup.crossCorpusNearDupsFromStore(
-      more, dir, nParts = 8).count() >= 0)
-    // mismatched nParts on append: the pb/ib layout would interleave —
-    // MUST fail loudly, not silently mis-prune later probes
-    val e1 = intercept[IllegalArgumentException] {
-      graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 16)
-    }
-    assert(e1.getMessage.contains("mis-prune"))
-    // mismatched bands on append: different band keys, same failure class
-    val e2 = intercept[IllegalArgumentException] {
-      graft.llm.Dedup.appendMinHashStore(more, dir, bands = 4, nParts = 8)
-    }
-    assert(e2.getMessage.contains("mis-prune"))
-    // mismatched probe: pruned partition reads would miss candidates
-    val e3 = intercept[IllegalArgumentException] {
-      graft.llm.Dedup.crossCorpusNearDupsFromStore(more, dir, nParts = 16)
-    }
-    assert(e3.getMessage.contains("miss candidates"))
-    // a store with no sidecar (pre-sidecar layout) refuses appends — the
-    // caller must rebuild rather than guess the parameters
-    val meta = new java.io.File(dir, "_meta.json")
-    assert(meta.exists())
-    meta.delete()
-    val e4 = intercept[IllegalArgumentException] {
-      graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 8)
-    }
-    assert(e4.getMessage.contains("_meta.json"))
   }
 
   test("q197 chain: natural-id collision with the plant offset fails loudly") {

@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 /** Round-14 regression locks: the broadcast-guard estimator shape check,
   * the last raw query-contract hints routed through the guard
-  * (adcRerankTopK's shortlist, bloomCrossDedup's back-broadcasts), the
-  * MinHash sidecar's meta-before-data write order, and the plant guard
-  * over int-typed id columns. */
+  * (adcRerankTopK's shortlist, bloomCrossDedup's back-broadcasts) and the
+  * plant guard over int-typed id columns. (The MinHash sidecar's
+  * meta-before-data write-order lock lives in [[MinHashStoreSpec]].) */
 class Round14Spec extends SparkFunSuite {
 
   test("broadcastIfSmall: a narrower estimator is refused; equal/wider shapes pass") {
@@ -83,30 +83,6 @@ class Round14Spec extends SparkFunSuite {
       spark.conf.unset("graft.broadcast.maxBytes")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     }
-  }
-
-  test("minhash store: sidecar lands BEFORE the data — a crashed bootstrap never strands a sidecar-less store") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r14crash").toString
-    // a docs frame that throws at WRITE time (after the sidecar landed)
-    val poisoned = Seq((1L, "aa bb cc dd ee")).toDF("doc_id", "text")
-      .withColumn("text",
-        when(expr("raise_error('boom') is null"), col("text")))
-    intercept[Exception] {
-      graft.llm.Dedup.appendMinHashStore(poisoned, dir, nParts = 8)
-    }
-    assert(new java.io.File(dir, "_meta.json").isFile,
-      "crashed bootstrap stranded a store with no layout contract")
-    // the stranded store still enforces its parameters...
-    val more = Seq((2L, "ff gg hh ii jj")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 16)
-    }
-    assert(e.getMessage.contains("mis-prune"))
-    // ...and a matching retry completes the bootstrap normally
-    graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 8)
-    assert(graft.llm.Dedup.crossCorpusNearDupsFromStore(
-      more, dir, nParts = 8).count() >= 0)
   }
 
   test("plant guard: int-typed id column reports collision/empty, not a ClassCastException") {

@@ -32,6 +32,20 @@ class WebDatasetSpec extends SparkFunSuite {
       (42L, "", "en", 0L)))
   }
 
+  test("meta member is JSON for array and date columns") {
+    val dir = java.nio.file.Files.createTempDirectory("wds_types").toString
+    val df = Seq((0L, "t", Seq("x", "y \"q\""), java.sql.Date.valueOf("2024-01-02")))
+      .toDF("doc_id", "text", "tags", "day")
+    WebDataset.toWebDataset(df, dir, numShards = 1)
+    val meta = org.apache.spark.sql.types.StructType.fromDDL(
+      "tags ARRAY<STRING>, day DATE")
+    val back = WebDataset.fromWebDataset(spark, dir)
+      .select(from_json(col("meta_json"), meta).as("m"))
+      .select(col("m.tags"), col("m.day")).head()
+    assert(back.getSeq[String](0) == Seq("x", "y \"q\""))
+    assert(back.getDate(1) == java.sql.Date.valueOf("2024-01-02"))
+  }
+
   test("shards are valid tar files readable by an independent parser") {
     val dir = java.nio.file.Files.createTempDirectory("wds2").toString
     WebDataset.toWebDataset(docs(), dir, numShards = 1)
