@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,255 +93,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "graft_cosine"
-}
-
-/** Registration + Column-level access for the engine's native expressions. */
-object GraftFunctions {
-  val CosineName = "graft_cosine"
-  val HyperplaneName = "graft_hyperplane_sig"
-  val MinHashName = "graft_minhash_sig"
-  val SimHashName = "graft_simhash64"
-  val GramStatsName = "graft_gram_stats"
-  val SigOverlapName = "graft_sig_overlap"
-  val WordShinglesName = "graft_word_shingles"
-  val BloomName = "graft_bloom_contains"
-  val NormalizeTextName = "graft_normalize_text"
-  val C4CleanName = "graft_c4_clean"
-  val GopherName = "graft_gopher_signals"
-  val RollingWindowFpsName = "graft_rolling_window_fps"
-  val CharEntropyName = "graft_char_entropy"
-  val WinnowingFpsName = "graft_winnowing_fps"
-
-  /** Idempotent per-session registration into the function registry (also
-    * makes the functions available to `spark.sql`). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(CosineName)))
-      reg.createOrReplaceTempFunction(
-        CosineName,
-        exprs => CosineSimilarity(exprs(0), exprs(1)),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(HyperplaneName)))
-      reg.createOrReplaceTempFunction(
-        HyperplaneName,
-        exprs => HyperplaneSignature(exprs(0), intLit(HyperplaneName, exprs(1))),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(MinHashName)))
-      reg.createOrReplaceTempFunction(
-        MinHashName,
-        exprs => MinHashSignature(exprs(0), intLit(MinHashName, exprs(1))),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(SimHashName)))
-      reg.createOrReplaceTempFunction(
-        SimHashName, exprs => SimHash64(exprs(0)), "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(GramStatsName)))
-      reg.createOrReplaceTempFunction(
-        GramStatsName, exprs => GramStats(exprs(0)), "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(SigOverlapName)))
-      reg.createOrReplaceTempFunction(
-        SigOverlapName, exprs => SigOverlap(exprs(0), exprs(1)), "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(WordShinglesName)))
-      reg.createOrReplaceTempFunction(
-        WordShinglesName,
-        exprs => WordShingles(exprs(0), intLit(WordShinglesName, exprs(1)),
-          boolLit(WordShinglesName, exprs(2))),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(BloomName)))
-      reg.createOrReplaceTempFunction(
-        BloomName,
-        exprs => BloomMightContain(exprs(0), binLit(BloomName, exprs(1))),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(NormalizeTextName)))
-      reg.createOrReplaceTempFunction(
-        NormalizeTextName,
-        exprs => NormalizeText(exprs(0), boolLit(NormalizeTextName, exprs(1)),
-          boolLit(NormalizeTextName, exprs(2))),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(C4CleanName)))
-      reg.createOrReplaceTempFunction(
-        C4CleanName,
-        exprs => C4CleanExpr(exprs(0), intLit(C4CleanName, exprs(1)),
-          strArrLit(C4CleanName, exprs(2)), strArrLit(C4CleanName, exprs(3)),
-          strArrLit(C4CleanName, exprs(4))),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(GopherName)))
-      reg.createOrReplaceTempFunction(
-        GopherName,
-        exprs => GopherSignalsExpr(exprs(0), strArrLit(GopherName, exprs(1))),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(RollingWindowFpsName)))
-      reg.createOrReplaceTempFunction(
-        RollingWindowFpsName,
-        exprs => RollingWindowFps(exprs(0), intLit(RollingWindowFpsName, exprs(1))),
-        "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(CharEntropyName)))
-      reg.createOrReplaceTempFunction(
-        CharEntropyName, exprs => CharEntropyExpr(exprs(0)), "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(WinnowingFpsName)))
-      reg.createOrReplaceTempFunction(
-        WinnowingFpsName,
-        exprs => WinnowingFps(exprs(0), intLit(WinnowingFpsName, exprs(1)),
-          intLit(WinnowingFpsName, exprs(2))),
-        "built-in")
-  }
-
-  private def intLit(fn: String, e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, _: IntegerType) =>
-        v.asInstanceOf[Int]
-      case other => throw new IllegalArgumentException(
-        s"$fn: parameter must be an int literal, got $other")
-    }
-
-  private def boolLit(fn: String, e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, BooleanType) =>
-        v.asInstanceOf[Boolean]
-      case other => throw new IllegalArgumentException(
-        s"$fn: parameter must be a boolean literal, got $other")
-    }
-
-  private def binLit(fn: String, e: org.apache.spark.sql.catalyst.expressions.Expression): Array[Byte] =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, BinaryType) if v != null =>
-        v.asInstanceOf[Array[Byte]]
-      case other => throw new IllegalArgumentException(
-        s"$fn: parameter must be a non-null binary literal, got $other")
-    }
-
-  private def strArrLit(fn: String, e: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] =
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(
-          a: org.apache.spark.sql.catalyst.util.ArrayData, ArrayType(StringType, _)) =>
-        a.toArray[org.apache.spark.unsafe.types.UTF8String](StringType)
-          .map(s => if (s == null) null else s.toString).toSeq
-      case other => throw new IllegalArgumentException(
-        s"$fn: parameter must be an array<string> literal, got $other")
-    }
-
-  /** Fused cosine as a Column; the session must be registered first
-    * (call [[ensureRegistered]] — the llm operators do it for you). */
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(CosineName, a, b)
-  }
-
-  /** Fused hyperplane LSH signature as a Column — bit-identical to
-    * [[graft.llm.Similarity.hyperplaneSignature]], one codegen loop
-    * instead of `planes` interpreted array walks. */
-  def hyperplaneSig(spark: SparkSession, v: Column, planes: Int): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(
-      HyperplaneName, v, org.apache.spark.sql.functions.lit(planes))
-  }
-
-  /** Fused MinHash signature as a Column — bit-identical to the
-    * explode→groupBy aggregate path ([[graft.llm.Dedup.minHashSignatures]])
-    * but map-side: no explode, no shuffle, no signatures join. */
-  def minhashSig(spark: SparkSession, sh: Column, k: Int): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(
-      MinHashName, sh, org.apache.spark.sql.functions.lit(k))
-  }
-
-  /** Fused winnowing selection — bit-identical to the interpreted-HOF
-    * formulation (md5-per-gram, per-window rightmost lexicographic min,
-    * array_distinct), one kernel call per row; see
-    * [[WinnowingKernel.select]]. */
-  def winnowingFps(spark: SparkSession, tokens: Column, k: Int, w: Int): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(WinnowingFpsName, tokens,
-      org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(w))
-  }
-
-  /** Rabin–Karp rolling fingerprints of every `n`-word window — one pass
-    * over the word array instead of the md5-per-window n× re-hash; see
-    * [[RollingHash.windowFps]] for the collision contract. */
-  def rollingWindowFps(spark: SparkSession, words: Column, n: Int): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(
-      RollingWindowFpsName, words, org.apache.spark.sql.functions.lit(n))
-  }
-
-  /** Fused 64-bit SimHash over a token array — bit-identical to the
-    * vote-aggregate formulations, one map-side pass. */
-  def simhash64(spark: SparkSession, tokens: Column): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(SimHashName, tokens)
-  }
-
-  /** Fused per-row gram multiset stats (top/total/dup counts) — replaces
-    * the explode→groupBy repetition-signal shuffles with one map-side
-    * pass. */
-  def gramStats(spark: SparkSession, grams: Column): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(GramStatsName, grams)
-  }
-
-  /** Fused character-distribution signals (codepoint count/distinct,
-    * Shannon entropy in bits, top-character share) — one map-side pass,
-    * no explode; see [[CharEntropyExpr]] for the determinism contract. */
-  def charEntropy(spark: SparkSession, text: Column): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(CharEntropyName, text)
-  }
-
-  /** Fused MinHash-estimator overlap (share of equal signature positions)
-    * — the candidate-pair prefilter as one codegen loop. */
-  def sigOverlap(spark: SparkSession, a: Column, b: Column): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(SigOverlapName, a, b)
-  }
-
-  /** Fused word-shingle construction over a token array (optionally
-    * distinct) — one native pass instead of the interpreted
-    * transform/slice/concat_ws tree. */
-  def wordShingles(spark: SparkSession, words: Column, n: Int,
-      distinct: Boolean): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(WordShinglesName, words,
-      org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.lit(distinct))
-  }
-
-  /** Bloom-filter membership probe over a string column — the map-side
-    * prefilter of [[graft.llm.Dedup.bloomCrossDedup]]. `filter` is the
-    * serialized bytes from [[graft.llm.Dedup.buildFingerprintBloom]]. */
-  def bloomContains(spark: SparkSession, value: Column,
-      filter: Array[Byte]): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(BloomName, value,
-      org.apache.spark.sql.functions.lit(filter))
-  }
-
-  /** Fused C4 line cleaning — struct(text, n_lines, n_kept, doc_bad) in
-    * one kernel call per row (see
-    * [[graft.functions.CurationKernels]]). */
-  def c4CleanStruct(spark: SparkSession, text: Column, minWordsPerLine: Int,
-      terminalPunct: Seq[String], badLineWords: Seq[String],
-      dropDocPhrases: Seq[String]): Column = {
-    ensureRegistered(spark)
-    import org.apache.spark.sql.functions.{call_function, lit, typedlit}
-    call_function(C4CleanName, text, lit(minWordsPerLine),
-      typedlit(terminalPunct), typedlit(badLineWords), typedlit(dropDocPhrases))
-  }
-
-  /** Fused Gopher quality signals — one kernel call per row. */
-  def gopherSignalsStruct(spark: SparkSession, text: Column,
-      stopWords: Seq[String]): Column = {
-    ensureRegistered(spark)
-    import org.apache.spark.sql.functions.{call_function, typedlit}
-    call_function(GopherName, text, typedlit(stopWords))
-  }
-
-  /** Unicode canonicalization (NFC → optional accent strip → optional
-    * Locale.ROOT lowercase) — run corpus keys through this BEFORE
-    * fingerprinting when the source is real-world text. */
-  def normalizeText(spark: SparkSession, text: Column,
-      stripAccents: Boolean = true, toLower: Boolean = true): Column = {
-    ensureRegistered(spark)
-    org.apache.spark.sql.functions.call_function(NormalizeTextName, text,
-      org.apache.spark.sql.functions.lit(stripAccents),
-      org.apache.spark.sql.functions.lit(toLower))
-  }
 }

@@ -437,13 +437,13 @@ object Curation {
     *
     * Plan: each doc expands to its host's ≥2-label suffixes (`a.b.c` →
     * `[a.b.c, b.c]` — bounded by label count, ~≤6), one semi-join against
-    * the blocklist (broadcast by default; set `broadcastBlocklist =
-    * false` for lists past the broadcast budget — the join stays hot-key
-    *-free because the blocklist side is distinct domains), one anti-join
-    * back on the id. The corpus never sorts; no per-domain window. */
+    * the blocklist (broadcast while its size estimate is under the
+    * [[graft.model.GraftDataset.broadcastIfSmall]] ceiling, a shuffle
+    * join past it — the join stays hot-key-free because the blocklist
+    * side is distinct domains), one anti-join back on the id. The corpus
+    * never sorts; no per-domain window. */
   def domainBlocklistFilter(docs: DataFrame, blocked: DataFrame,
-      urlCol: String, idCol: String = "doc_id",
-      broadcastBlocklist: Boolean = true): DataFrame = {
+      urlCol: String, idCol: String = "doc_id"): DataFrame = {
     val host = urlDomain(col(urlCol))
     val parts = split(host, "\\.")
     val sufs = transform(sequence(lit(0), size(parts) - 2),
@@ -454,7 +454,7 @@ object Curation {
       .filter(length(col("domain")) > 0)
     val bl = blocked.select(col("domain"))
     val hit = cand
-      .join(if (broadcastBlocklist) broadcast(bl) else bl, Seq("domain"))
+      .join(graft.model.GraftDataset.broadcastIfSmall(bl), Seq("domain"))
       .select(col("__bl_id")).distinct()
     docs.join(hit, col(idCol) === col("__bl_id"), "left_anti")
   }

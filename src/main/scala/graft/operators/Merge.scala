@@ -50,10 +50,8 @@ object Merge {
     * (with id shift); overlapping images may only contribute new columns —
     * enforced by a null-safe equality check over the intersecting
     * (ids × shared columns), mirroring the reference precondition
-    * (utils/testing.py:174-211). Set `checkIntersection = false` to skip
-    * the extra validation job on trusted inputs. */
-  def merge(a0: GraftDataset, b0: GraftDataset,
-      checkIntersection: Boolean = true): GraftDataset = {
+    * (utils/testing.py:174-211). */
+  def merge(a0: GraftDataset, b0: GraftDataset): GraftDataset = {
     val (a, b) = reconcileRoots(a0, b0)
     // label-map compatibility fails FIRST (reference order: the doctest's
     // plain merge raises IncompatibleLabelMapsError before any row check) —
@@ -61,17 +59,15 @@ object Merge {
     val mergedLabels = LabelMaps.mergeOuter(a.labelMap, b.labelMap)
     val commonIds = a.images.select("id").intersect(b.images.select("id"))
     val newCols = b.images.columns.filterNot(a.images.columns.contains).toSeq
-    if (checkIntersection) {
-      val shared = a.images.columns.toSet.intersect(b.images.columns.toSet) - "id"
-      if (shared.nonEmpty) {
-        val bad = Diff.frameDiff(
-          a.images.join(commonIds, Seq("id"), "left_semi"),
-          b.images.join(commonIds, Seq("id"), "left_semi"))
-          .filter(col("status") === "changed").limit(3).collect()
-        require(bad.isEmpty,
-          "merge: overlapping images disagree on shared columns, ids: " +
-            bad.map(_.get(0)).mkString(", "))
-      }
+    val shared = a.images.columns.toSet.intersect(b.images.columns.toSet) - "id"
+    if (shared.nonEmpty) {
+      val bad = Diff.frameDiff(
+        a.images.join(commonIds, Seq("id"), "left_semi"),
+        b.images.join(commonIds, Seq("id"), "left_semi"))
+        .filter(col("status") === "changed").limit(3).collect()
+      require(bad.isEmpty,
+        "merge: overlapping images disagree on shared columns, ids: " +
+          bad.map(_.get(0)).mkString(", "))
     }
 
     // overlapping ids: left rows + right's new columns

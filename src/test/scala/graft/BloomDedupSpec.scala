@@ -1,11 +1,13 @@
 package graft
 
 import graft.functions.GraftFunctions
-import graft.llm.Dedup
+import graft.llm.{Dedup, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 class BloomDedupSpec extends SparkFunSuite {
   import spark.implicits._
+
+  private val corpus = DedupCorpus.docs
 
   private def ref() = Seq(
     (10L, "the quick brown fox"),
@@ -75,5 +77,50 @@ class BloomDedupSpec extends SparkFunSuite {
         s"X'${bloom.map("%02x".format(_)).mkString}') AS hit FROM bloom_probe_t")
       .collect()
     assert(viaSql(0).getBoolean(0))
+  }
+
+  test("bloomCrossDedup: back-broadcasts are size-guarded — over-threshold degrades, result identical") {
+    import spark.implicits._
+    val ref = Seq((100L, "shared text body one"), (101L, "ref only text"))
+      .toDF("doc_id", "text")
+    val batch = Seq((1L, "shared text body one"), (2L, "fresh batch text"),
+      (3L, "another fresh one")).toDF("doc_id", "text")
+    val bloom = graft.llm.Dedup.buildFingerprintBloom(ref,
+      expectedItems = 100, fpp = 0.01)
+    def run() = graft.llm.Dedup.bloomCrossDedup(batch, ref, bloom)
+    val expected = run().select("doc_id").orderBy("doc_id")
+      .collect().map(_.getLong(0)).toSeq
+    assert(expected == Seq(2L, 3L))
+    spark.conf.set("graft.broadcast.maxBytes", "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val degraded = run()
+      val plan = degraded.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin"),
+        s"bloomCrossDedup still forces a broadcast over threshold:\n$plan")
+      assert(degraded.select("doc_id").orderBy("doc_id")
+        .collect().map(_.getLong(0)).toSeq == expected)
+    } finally {
+      spark.conf.unset("graft.broadcast.maxBytes")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
+  }
+
+  test("bloomCrossDedup with a precomputed fingerprint frame is row-identical") {
+    val docs = spark.createDataFrame(corpus).toDF("doc_id", "text")
+    val ref = docs.filter(col("doc_id") <= 4)
+    val batch = docs.filter(col("doc_id") >= 3)
+    val refFps = ref.select(TextAnalysis.fingerprint(col("text")).as("__bc_fp"))
+    val bloomA = Dedup.buildFingerprintBloom(ref, expectedItems = 100, fpp = 0.01)
+    val bloomB = Dedup.buildFingerprintBloom(ref, expectedItems = 100,
+      fpp = 0.01, refFps = refFps)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    val plain = ids(Dedup.bloomCrossDedup(batch, ref, bloomA))
+    val shared = ids(Dedup.bloomCrossDedup(batch, ref, bloomB, refFps = refFps))
+    // doc 3 and 4 are exact copies of nothing in ref except 4 itself:
+    // 4 must be dropped (present in ref), 3/5/7/9 kept
+    assert(plain == shared)
+    assert(!plain.contains(4L) && plain.contains(5L))
   }
 }

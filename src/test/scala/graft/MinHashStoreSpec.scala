@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 class MinHashStoreSpec extends SparkFunSuite {
   import spark.implicits._
 
+  private val corpus = DedupCorpus.docs
+
   private def corpus(n: Int, prefix: String) = (0 until n).map { i =>
     (i.toLong, s"$prefix document number $i talks about topic ${i % 7} " +
       s"with shared boilerplate words common to all pages in this corpus " +
@@ -190,5 +192,73 @@ class MinHashStoreSpec extends SparkFunSuite {
     graft.llm.Dedup.appendMinHashStore(more, dir, nParts = 8)
     assert(graft.llm.Dedup.crossCorpusNearDupsFromStore(
       more, dir, nParts = 8).count() >= 0)
+  }
+
+  test("store probe: adaptive prune skip is row-identical to forced pruning") {
+    val docs = spark.createDataFrame(corpus).toDF("doc_id", "text")
+    val ref = docs.filter(col("doc_id") % 2 === 0)
+    val batch = docs.filter(col("doc_id") % 2 =!= 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_r15_store").toString
+    Dedup.writeMinHashStore(ref, dir, nParts = 4)
+    def run(minBytes: Long) =
+      Dedup.crossCorpusNearDupsFromStore(batch, dir, threshold = 0.5,
+          nParts = 4, pruneMinBytes = minBytes)
+        .select("new_id", "ref_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pruned = run(0L)            // both collects forced
+    spark.catalog.clearCache()
+    val skipped = run(Long.MaxValue) // both collects skipped
+    spark.catalog.clearCache()
+    assert(pruned == skipped && pruned.nonEmpty,
+      s"pruned=$pruned skipped=$skipped")
+    graft.IoUtil.rmTree(dir)
+  }
+
+  test("crossCorpusNearDupsAgainstIndex: unpersisted stored index defaults to restrict=true without counting it") {
+    val mk = (ids: Seq[Long]) => ids.map(i =>
+      (i, s"document number $i with shared words alpha beta gamma delta " +
+        s"epsilon zeta eta theta unique$i"))
+      .toDF("doc_id", "text")
+    val ref = mk(0L until 40L)
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_r11").toString
+    graft.llm.Dedup.buildMinHashIndex(ref).write.mode("overwrite").parquet(dir)
+    val stored = spark.read.parquet(dir)
+    val batch = mk(Seq(3L)).withColumn("doc_id", col("doc_id") + 1000L)
+    val auto = graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(batch, stored)
+    val pinned = graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(batch, stored,
+      restrictRefBuckets = Some(true))
+    val a = auto.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val b = pinned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(a == b, "default path diverged from pinned restrict=true")
+    // the job-count budget: the band-pair checkpoint makes plan-building
+    // eager on BOTH paths, so compare the default against the pinned path
+    // job for job — the old ratio rule added a full-index count() job
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      spark.sparkContext.addSparkListener(listener)
+      try { jobs.set(0); f; Thread.sleep(300); jobs.get() }
+      finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val jPinned = jobsOf(graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(
+      batch, stored, restrictRefBuckets = Some(true)))
+    val jAuto = jobsOf(graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(
+      batch, stored))
+    assert(jAuto <= jPinned,
+      s"default stored-index path ran $jAuto jobs vs $jPinned pinned — " +
+        "the ratio rule is count-scanning the reference again")
+    // candidate-id scan pruning: the verification joins' index scans must
+    // carry a pushed In(id, ...) filter so the wide shingle column is
+    // never re-read end to end per batch
+    val plan = graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(batch, stored)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [In(id") ||
+        plan.contains("PushedFilters: [IsNotNull(id), In(id"),
+      s"candidate In-filter not pushed into the index scan:\n$plan")
+    spark.catalog.clearCache()
   }
 }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Round-11 hardening locks: PrefixSum negative-value offsets, the
   * prefix-sum cache lifecycle (no catalog-pinned blocks across repeated
-  * calls), the stored-index dedup default (no O(|reference|) count scan),
-  * the mojibake multi-pass repair, and sampleWeightedK's weight-magnitude
-  * boundary. */
+  * calls), the mojibake multi-pass repair, and sampleWeightedK's
+  * weight-magnitude boundary. (The stored-index dedup default, no
+  * O(|reference|) count scan, is locked in [[MinHashStoreSpec]].) */
 class Round11Spec extends SparkFunSuite {
   import spark.implicits._
 
@@ -90,56 +90,6 @@ class Round11Spec extends SparkFunSuite {
       s"cached blocks did not drain: baseline $baseline, " +
         s"now ${sc.getPersistentRDDs.size} " +
         s"(${sc.getPersistentRDDs.values.map(_.name).mkString(", ")})")
-  }
-
-  // ---- stored-index dedup default: no count scan of the reference -------
-
-  test("crossCorpusNearDupsAgainstIndex: unpersisted stored index defaults to restrict=true without counting it") {
-    val mk = (ids: Seq[Long]) => ids.map(i =>
-      (i, s"document number $i with shared words alpha beta gamma delta " +
-        s"epsilon zeta eta theta unique$i"))
-      .toDF("doc_id", "text")
-    val ref = mk(0L until 40L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_r11").toString
-    graft.llm.Dedup.buildMinHashIndex(ref).write.mode("overwrite").parquet(dir)
-    val stored = spark.read.parquet(dir)
-    val batch = mk(Seq(3L)).withColumn("doc_id", col("doc_id") + 1000L)
-    val auto = graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(batch, stored)
-    val pinned = graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(batch, stored,
-      restrictRefBuckets = Some(true))
-    val a = auto.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = pinned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b, "default path diverged from pinned restrict=true")
-    // the job-count budget: the band-pair checkpoint makes plan-building
-    // eager on BOTH paths, so compare the default against the pinned path
-    // job for job — the old ratio rule added a full-index count() job
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsOf(f: => Unit): Int = {
-      spark.sparkContext.addSparkListener(listener)
-      try { jobs.set(0); f; Thread.sleep(300); jobs.get() }
-      finally spark.sparkContext.removeSparkListener(listener)
-    }
-    val jPinned = jobsOf(graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(
-      batch, stored, restrictRefBuckets = Some(true)))
-    val jAuto = jobsOf(graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(
-      batch, stored))
-    assert(jAuto <= jPinned,
-      s"default stored-index path ran $jAuto jobs vs $jPinned pinned — " +
-        "the ratio rule is count-scanning the reference again")
-    // candidate-id scan pruning: the verification joins' index scans must
-    // carry a pushed In(id, ...) filter so the wide shingle column is
-    // never re-read end to end per batch
-    val plan = graft.llm.Dedup.crossCorpusNearDupsAgainstIndex(batch, stored)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [In(id") ||
-        plan.contains("PushedFilters: [IsNotNull(id), In(id"),
-      s"candidate In-filter not pushed into the index scan:\n$plan")
-    spark.catalog.clearCache()
   }
 
   // ---- mojibake: multi-pass repair ---------------------------------------

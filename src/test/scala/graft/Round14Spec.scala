@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 /** Round-14 regression locks: the broadcast-guard estimator shape check,
   * the last raw query-contract hints routed through the guard
-  * (adcRerankTopK's shortlist, bloomCrossDedup's back-broadcasts) and the
-  * plant guard over int-typed id columns. (The MinHash sidecar's
-  * meta-before-data write-order lock lives in [[MinHashStoreSpec]].) */
+  * (adcRerankTopK's shortlist) and the plant guard over int-typed id
+  * columns. (The MinHash sidecar's meta-before-data write-order lock
+  * lives in [[MinHashStoreSpec]], the bloomCrossDedup back-broadcast
+  * guard in [[BloomDedupSpec]].) */
 class Round14Spec extends SparkFunSuite {
 
   test("broadcastIfSmall: a narrower estimator is refused; equal/wider shapes pass") {
@@ -56,33 +57,6 @@ class Round14Spec extends SparkFunSuite {
     val planDefault = rerank().queryExecution.executedPlan.toString
     assert(planDefault.contains("BroadcastHashJoin"),
       s"default-scale rerank lost its broadcast hints:\n$planDefault")
-  }
-
-  test("bloomCrossDedup: back-broadcasts are size-guarded — over-threshold degrades, result identical") {
-    import spark.implicits._
-    val ref = Seq((100L, "shared text body one"), (101L, "ref only text"))
-      .toDF("doc_id", "text")
-    val batch = Seq((1L, "shared text body one"), (2L, "fresh batch text"),
-      (3L, "another fresh one")).toDF("doc_id", "text")
-    val bloom = graft.llm.Dedup.buildFingerprintBloom(ref,
-      expectedItems = 100, fpp = 0.01)
-    def run() = graft.llm.Dedup.bloomCrossDedup(batch, ref, bloom)
-    val expected = run().select("doc_id").orderBy("doc_id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(expected == Seq(2L, 3L))
-    spark.conf.set("graft.broadcast.maxBytes", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val degraded = run()
-      val plan = degraded.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"bloomCrossDedup still forces a broadcast over threshold:\n$plan")
-      assert(degraded.select("doc_id").orderBy("doc_id")
-        .collect().map(_.getLong(0)).toSeq == expected)
-    } finally {
-      spark.conf.unset("graft.broadcast.maxBytes")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    }
   }
 
   test("plant guard: int-typed id column reports collision/empty, not a ClassCastException") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.llm.{Dedup, TextAnalysis}
+import graft.llm.Dedup
 import org.apache.spark.sql.functions._
 
 /** Round-15 optimization invariants: every rewrite in this round must be
@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *    threshold boundary, exact duplicates, one-token edits).
   *  - crossCorpusNearDupsFromStore's partition-prune collects became
   *    adaptive (skipped below pruneMinBytes): pruned and unpruned probes
-  *    must return identical rows.
+  *    must return identical rows (locked in [[MinHashStoreSpec]]).
   *  - bloomCrossDedup/buildFingerprintBloom accept a precomputed
-  *    reference-fingerprint frame: with and without it, identical rows.
+  *    reference-fingerprint frame: with and without it, identical rows
+  *    (locked in [[BloomDedupSpec]]).
   */
 class Round15Spec extends SparkFunSuite {
 
@@ -28,23 +29,7 @@ class Round15Spec extends SparkFunSuite {
       if j >= t
     } yield (ia, ib)).toSet
 
-  private val corpus: Seq[(Long, String)] = {
-    // hot token "the" in every doc (floods prefixes when df-rare tokens
-    // run out), exact duplicates, one-token edits, disjoint docs, and a
-    // length spread so the length/position filters are all exercised
-    val base = Seq(
-      1L -> "the quick brown fox jumps over a lazy dog near the old river bank today",
-      2L -> "the quick brown fox jumps over a lazy dog near the old river bank today",
-      3L -> "the quick brown fox jumps over a lazy dog near the old river bank now",
-      4L -> "the slow green turtle walks under a busy bridge by the new harbor wall",
-      5L -> "the slow green turtle walks under a busy bridge by the new harbor gate",
-      6L -> "the tiny doc",
-      7L -> "the tiny doc",
-      8L -> "completely different words entirely unrelated content here about nothing shared at all",
-      9L -> "the quick brown fox jumps over a lazy dog near the old river bank today extra tail words appended here"
-    )
-    base
-  }
+  private val corpus = DedupCorpus.docs
 
   private def tokenSets: Seq[(Long, Set[String])] = corpus.map { case (id, t) =>
     id -> t.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).toSet
@@ -71,43 +56,5 @@ class Round15Spec extends SparkFunSuite {
       assert(math.abs(r.getDouble(2) - exact) < 1e-12,
         s"pair ($a,$b): jaccard ${r.getDouble(2)} != $exact")
     }
-  }
-
-  test("store probe: adaptive prune skip is row-identical to forced pruning") {
-    val docs = spark.createDataFrame(corpus).toDF("doc_id", "text")
-    val ref = docs.filter(col("doc_id") % 2 === 0)
-    val batch = docs.filter(col("doc_id") % 2 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_r15_store").toString
-    Dedup.writeMinHashStore(ref, dir, nParts = 4)
-    def run(minBytes: Long) =
-      Dedup.crossCorpusNearDupsFromStore(batch, dir, threshold = 0.5,
-          nParts = 4, pruneMinBytes = minBytes)
-        .select("new_id", "ref_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pruned = run(0L)            // both collects forced
-    spark.catalog.clearCache()
-    val skipped = run(Long.MaxValue) // both collects skipped
-    spark.catalog.clearCache()
-    assert(pruned == skipped && pruned.nonEmpty,
-      s"pruned=$pruned skipped=$skipped")
-    graft.IoUtil.rmTree(dir)
-  }
-
-  test("bloomCrossDedup with a precomputed fingerprint frame is row-identical") {
-    val docs = spark.createDataFrame(corpus).toDF("doc_id", "text")
-    val ref = docs.filter(col("doc_id") <= 4)
-    val batch = docs.filter(col("doc_id") >= 3)
-    val refFps = ref.select(TextAnalysis.fingerprint(col("text")).as("__bc_fp"))
-    val bloomA = Dedup.buildFingerprintBloom(ref, expectedItems = 100, fpp = 0.01)
-    val bloomB = Dedup.buildFingerprintBloom(ref, expectedItems = 100,
-      fpp = 0.01, refFps = refFps)
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").collect().map(_.getLong(0)).toSet
-    val plain = ids(Dedup.bloomCrossDedup(batch, ref, bloomA))
-    val shared = ids(Dedup.bloomCrossDedup(batch, ref, bloomB, refFps = refFps))
-    // doc 3 and 4 are exact copies of nothing in ref except 4 itself:
-    // 4 must be dropped (present in ref), 3/5/7/9 kept
-    assert(plain == shared)
-    assert(!plain.contains(4L) && plain.contains(5L))
   }
 }

@@ -153,29 +153,6 @@ class SplitterSpec extends SparkFunSuite {
       .select("split").distinct().collect()
     assert(video0.length == 1)
   }
-}
-
-class ExtensionsSpec extends SparkFunSuite {
-  test("GraftExtensions injects graft_cosine at session build") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    // note: getOrCreate may return the existing session; the function must
-    // resolve either way (injected or registry-registered)
-    graft.functions.GraftFunctions.ensureRegistered(s2)
-    val r = s2.sql("SELECT graft_cosine(array(3.0D, 4.0D), array(3.0D, 4.0D)) AS c")
-      .collect()(0).getDouble(0)
-    assert(math.abs(r - 1.0) < 1e-12)
-    // the other native functions resolve from SQL too
-    val row = s2.sql(
-      "SELECT graft_minhash_sig(array('a','b'), 4) AS m, " +
-        "graft_simhash64(array('a','b')) AS s, " +
-        "graft_hyperplane_sig(array(1.0D, -2.0D), 8) AS h").collect()(0)
-    assert(row.getSeq[Long](0).length == 4)
-    assert(!row.isNullAt(1) && !row.isNullAt(2))
-  }
 
   test("single-key atomize fast path equals the iterative result") {
     import spark.implicits._
