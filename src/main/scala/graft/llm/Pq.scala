@@ -1,7 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Product quantization for nearest-neighbor search (Jégou et al. 2011):
@@ -14,8 +13,18 @@ import org.apache.spark.sql.functions._
   * d·4 bytes to m bytes per vector (64-dim float → 4 bytes at m=4), so a
   * billion-vector index fits executor memory where raw vectors cannot; the
   * scan is a codegen'd per-row lookup-sum with no shuffle of the corpus.
-  * Combine with [[Ivf]] cells to prune the scan (IVFADC) — the two
-  * operators compose on the `centroid_id` column.
+  * Coarse cells prune the scan (IVFADC): [[assignCells]] adds Pq's own
+  * `cell_id` (argmin full-dimension L2 to literal centroids) and the IVF
+  * paths probe it. [[Ivf]] is a different index — its `centroid_id`
+  * comes from the KMeans model and its probes rank by cosine — so the two
+  * do not compose on a column; [[Ivf.build]]'s centroids can still serve
+  * as literal `cells` here.
+  *
+  * Both quantizer families (PQ and the SQ8 baseline) answer every query
+  * face through ONE scan (`scan`: broadcast query side, optional cell
+  * probe, two-phase rank), and both serving stores share one writer and
+  * one pruned probe (`writeStore`, `storeScan`); a family only
+  * supplies its codes column, per-query payload and distance expression.
   *
   * Codebooks are a plain `Seq[Seq[Array[Double]]]` (subspace → centroid →
   * values), carried as expression literals: tiny by construction
@@ -25,36 +34,130 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  /** Σ (a_i − b_i)² between an array column slice and a literal centroid —
-    * a sequential left fold, so the summation order is deterministic. */
-  private def l2sq(sub: Column, cent: Array[Double]): Column =
-    aggregate(zip_with(sub, typedLit(cent.toSeq), (a, b) => (a - b) * (a - b)),
+  /** Σ (a_i − b_i)² between two array columns — a sequential left fold,
+    * so the summation order is deterministic. */
+  private def l2sq(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
 
   private def subspace(v: Column, j: Int, dsub: Int): Column =
     slice(v, j * dsub + 1, dsub)
 
+  /** One `(d, c)` struct per centroid: squared L2 from `v`, centroid
+    * index. Struct order is lexicographic on (distance, index), so
+    * `array_min`/`array_sort` over these break exact ties toward the
+    * lower index — explicit and engine-stable. */
+  private def ranked(v: Column, cents: Seq[Array[Double]]): Column =
+    array(cents.zipWithIndex.map { case (cent, ci) =>
+      struct(l2sq(v, typedLit(cent.toSeq)).as("d"), lit(ci).as("c"))
+    }: _*)
+
+  private def nearest(v: Column, cents: Seq[Array[Double]]): Column =
+    array_min(ranked(v, cents)).getField("c")
+
   /** Encode: adds `pq_codes` (array<int>, one code per subspace) — for
     * each subspace the argmin-distance centroid, ties → lowest centroid
-    * index (struct min is lexicographic on (distance, index), so the
-    * tiebreak is explicit and engine-stable). One codegen map, no
-    * shuffle. */
+    * index. One codegen map, no shuffle. */
   def encode(corpus: DataFrame, codebooks: Seq[Seq[Array[Double]]],
       vecCol: String = "embedding"): DataFrame = {
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty), "empty codebooks")
     val dsub = codebooks.head.head.length
     val v = col(vecCol).cast("array<double>")
     val codes = array(codebooks.zipWithIndex.map { case (cb, j) =>
-      val cands = array(cb.zipWithIndex.map { case (cent, ci) =>
-        struct(l2sq(subspace(v, j, dsub), cent).as("d"), lit(ci).as("c"))
-      }: _*)
-      array_min(cands).getField("c")
+      nearest(subspace(v, j, dsub), cb)
     }: _*)
     // a NULL vector must encode to NULL codes — without the guard the
     // struct-min over null distances silently argmins to centroid 0 and
     // the phantom row would score like a real one downstream
     corpus.withColumn("pq_codes",
       when(col(vecCol).isNotNull, codes))
+  }
+
+  // ---- the one quantized scan ---------------------------------------------
+
+  /** A quantizer family as `scan`, `writeStore` and `storeScan` see it:
+    * the codes column it reads, the per-query payload it broadcasts, the
+    * distance expression over (codes, payload), an optional one-row side
+    * frame cross-joined onto the corpus, and the (dimension, quantizer
+    * digest) pair its store sidecar records; `dimLabel` names that
+    * dimension in the writer's cells-mismatch message. */
+  private sealed abstract class Family(val kind: String, val codesCol: String,
+      val distCol: String, val dimLabel: String, val side: Option[DataFrame]) {
+    def payload(qv: Column): Column
+    def dist: Column
+    /** may run a job (SQ8: one `head()` of the stats) */
+    def dimAndQuant: (Int, String)
+  }
+
+  /** PQ: the payload is each query's m × ncentroids distance table,
+    * tabulated ONCE on the tiny query side; the distance is m table
+    * lookups + a sum per corpus row (ADC). */
+  private final case class PqFamily(codebooks: Seq[Seq[Array[Double]]])
+      extends Family("pq", "pq_codes", "adist", "the codebooks' m·dsub =", None) {
+    private def dsub = codebooks.head.head.length
+    def payload(qv: Column): Column =
+      array(codebooks.zipWithIndex.map { case (cb, j) =>
+        array(cb.map(cent => l2sq(subspace(qv, j, dsub), typedLit(cent.toSeq))): _*)
+      }: _*).as("__pq_tab")
+    def dist: Column = codebooks.indices.map { j =>
+      element_at(element_at(col("__pq_tab"), j + 1),
+        col("pq_codes").getItem(j) + 1)
+    }.reduce(_ + _)
+    def dimAndQuant: (Int, String) =
+      (codebooks.length * dsub, codebooksDigest(codebooks))
+  }
+
+  /** SQ8: the query keeps full precision; each corpus dimension
+    * reconstructs at its quantization-cell MIDPOINT (`min_d + (code_d +
+    * 0.5)/256 · span_d` — halves the worst-case cell error vs left-edge
+    * reconstruction) against the broadcast one-row [[sqStats]] side. */
+  private final case class Sq8Family(stats: DataFrame) extends Family(
+      "sq8", "sq_codes", "sq_dist", "the stats dimension", Some(stats)) {
+    def payload(qv: Column): Column = qv.as("__qv")
+    def dist: Column = l2sq(col("__qv"), transform(col("sq_codes"), (c, i) => {
+      val mn = element_at(col("__mins"), i + 1)
+      val mx = element_at(col("__maxs"), i + 1)
+      mn + (c.cast("double") + 0.5) / 256.0 * (mx - mn)
+    }))
+    def dimAndQuant: (Int, String) = statsDigest(stats)
+  }
+
+  private def requireNprobe(cells: Seq[Array[Double]], nprobe: Int): Unit =
+    require(nprobe > 0 && nprobe <= cells.size,
+      s"nprobe $nprobe out of range 1..${cells.size}")
+
+  /** The scan every top-k face runs. The query side — id, the family's
+    * payload and, when probing, one row per probed cell
+    * (`explode(probedCells(…)) as cell_id`) — is tiny and broadcast; the
+    * corpus streams through a cross join (no probe) or an equality join
+    * on `cell_id` with NO shuffle of the corpus side, scoring map-side;
+    * the two-phase [[graft.operators.TopK.topKPerQuery]] ranks on the
+    * 6-decimal-rounded distance with the id tiebreak (the cross-engine
+    * convention), so the one exchange carries k rows per (query,
+    * partition), never the scored corpus. */
+  private def scan(encoded: DataFrame, queries: DataFrame, fam: Family,
+      probe: Option[(Seq[Array[Double]], Int)], k: Int,
+      idCol: String, queryIdCol: String, queryVecCol: String): DataFrame = {
+    probe.foreach { case (cells, nprobe) => requireNprobe(cells, nprobe) }
+    val qv = col(queryVecCol).cast("array<double>")
+    // vector-less queries have nothing to score (a PQ table's outer array()
+    // is non-null even when every cell is — filter on the source column)
+    val q = graft.model.GraftDataset.broadcastIfSmall(
+      queries.filter(col(queryVecCol).isNotNull)
+      .select(Seq(col(queryIdCol), fam.payload(qv)) ++ probe.map {
+        case (cells, nprobe) => explode(probedCells(qv, cells, nprobe)).as("cell_id")
+      }: _*))
+    // a null vector encodes to null codes → null distance, and Spark's
+    // ascending sort puts nulls FIRST — without the guard a vector-less
+    // corpus row would outrank every real neighbor
+    val codes = encoded.filter(col(fam.codesCol).isNotNull)
+    val corpus = fam.side.fold(codes)(s => codes.crossJoin(broadcast(s)))
+    val joined =
+      if (probe.isEmpty) corpus.crossJoin(q) else corpus.join(q, Seq("cell_id"))
+    val scored = joined.select(col(queryIdCol), col(idCol),
+      round(fam.dist, 6).as(fam.distCol))
+    graft.operators.TopK.topKPerQuery(scored, queryIdCol,
+      Seq(col(fam.distCol).asc, col(idCol).asc), k)
   }
 
   /** ADC top-k: each query precomputes its m × ncentroids distance table
@@ -72,29 +175,8 @@ object Pq {
       idCol: String = "vec_id", queryIdCol: String = "query_id",
       queryVecCol: String = "embedding"): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val m = codebooks.length
-    val dsub = codebooks.head.head.length
-    val qv = col(queryVecCol).cast("array<double>")
-    val qtab = array(codebooks.zipWithIndex.map { case (cb, j) =>
-      array(cb.map(cent => l2sq(subspace(qv, j, dsub), cent)): _*)
-    }: _*)
-    // vector-less queries have no distances to tabulate (the outer array()
-    // is non-null even when every cell is — filter on the source column)
-    val q = graft.model.GraftDataset.broadcastIfSmall(
-      queries.filter(col(queryVecCol).isNotNull)
-      .select(col(queryIdCol), qtab.as("__pq_tab")))
-    val adist = (0 until m).map { j =>
-      element_at(element_at(col("__pq_tab"), j + 1),
-        col("pq_codes").getItem(j) + 1)
-    }.reduce(_ + _)
-    // a null embedding encodes to null codes → null distance, and Spark's
-    // ascending sort puts nulls FIRST — without the guard a vector-less
-    // corpus row would outrank every real neighbor
-    val scored = encoded.filter(col("pq_codes").isNotNull)
-      .crossJoin(q)
-      .select(col(queryIdCol), col(idCol), round(adist, 6).as("adist"))
-    graft.operators.TopK.topKPerQuery(scored, queryIdCol,
-      Seq(col("adist").asc, col(idCol).asc), k)
+    scan(encoded, queries, PqFamily(codebooks), None, k,
+      idCol, queryIdCol, queryVecCol)
   }
 
   /** Two-stage retrieval: ADC shortlist → EXACT re-rank — the production
@@ -162,13 +244,9 @@ object Pq {
   def assignCells(df: DataFrame, cells: Seq[Array[Double]],
       vecCol: String = "embedding"): DataFrame = {
     require(cells.nonEmpty, "no cells")
-    val v = col(vecCol).cast("array<double>")
-    val cands = array(cells.zipWithIndex.map { case (cent, ci) =>
-      struct(l2sq(v, cent).as("d"), lit(ci).as("c"))
-    }: _*)
     // null vector → null cell (same phantom-argmin hazard as [[encode]])
-    df.withColumn("cell_id",
-      when(col(vecCol).isNotNull, array_min(cands).getField("c")))
+    df.withColumn("cell_id", when(col(vecCol).isNotNull,
+      nearest(col(vecCol).cast("array<double>"), cells)))
   }
 
   /** IVFADC (Jégou et al. 2011 §IV — the composition that makes PQ a
@@ -188,33 +266,9 @@ object Pq {
       codebooks: Seq[Seq[Array[Double]]], cells: Seq[Array[Double]],
       nprobe: Int, k: Int,
       idCol: String = "vec_id", queryIdCol: String = "query_id",
-      queryVecCol: String = "embedding"): DataFrame = {
-    require(nprobe > 0 && nprobe <= cells.size,
-      s"nprobe $nprobe out of range 1..${cells.size}")
-    val m = codebooks.length
-    val dsub = codebooks.head.head.length
-    val qv = col(queryVecCol).cast("array<double>")
-    val qtab = array(codebooks.zipWithIndex.map { case (cb, j) =>
-      array(cb.map(cent => l2sq(subspace(qv, j, dsub), cent)): _*)
-    }: _*)
-    val cellRank = array(cells.zipWithIndex.map { case (cent, ci) =>
-      struct(l2sq(qv, cent).as("d"), lit(ci).as("c"))
-    }: _*)
-    val probed = slice(transform(array_sort(cellRank), s => s.getField("c")),
-      1, nprobe)
-    val q = graft.model.GraftDataset.broadcastIfSmall(
-      queries.filter(col(queryVecCol).isNotNull)
-      .select(col(queryIdCol), qtab.as("__pq_tab"),
-        explode(probed).as("cell_id")))
-    val adist = (0 until m).map { j =>
-      element_at(element_at(col("__pq_tab"), j + 1),
-        col("pq_codes").getItem(j) + 1)
-    }.reduce(_ + _)
-    val scored = encoded.join(q, Seq("cell_id"))
-      .select(col(queryIdCol), col(idCol), round(adist, 6).as("adist"))
-    graft.operators.TopK.topKPerQuery(scored, queryIdCol,
-      Seq(col("adist").asc, col(idCol).asc), k)
-  }
+      queryVecCol: String = "embedding"): DataFrame =
+    scan(encoded, queries, PqFamily(codebooks), Some((cells, nprobe)), k,
+      idCol, queryIdCol, queryVecCol)
 
   // ---- serving-store layout contract (`_meta.json` sidecar) -------------
 
@@ -270,25 +324,6 @@ object Pq {
     (mins.length, doublesDigest((mins ++ maxs).iterator))
   }
 
-  /** The sidecar is written through the Hadoop FS API (the store may live
-    * on HDFS/S3/local). Unlike the Dedup store (whose append path writes its
-    * sidecar first), these stores are overwrite-only, so the write order
-    * is delete-stale-sidecar → data → new sidecar: the parquet overwrite
-    * clears the partition directories but PRESERVES `_`-prefixed files
-    * (they're metadata to the file index), so without the explicit delete
-    * a crash mid-write would leave the PREVIOUS store's sidecar describing
-    * half-written new data — the exact silent mismatch the sidecar exists
-    * to catch. With it, every crash window leaves a sidecar-LESS store
-    * (the next probe runs the documented pre-sidecar degrade, the next
-    * write replaces everything); the sidecar only ever describes a store
-    * whose data write committed. */
-  private def deletePqStoreMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, "_meta.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, false): Unit
-  }
-
   /** Probe-side contract check: when the store carries a sidecar, the
     * probe's quantizer family, dimensionality, centroids, and quantizer
     * parameters must be bit-identical to write-time — anything else
@@ -297,7 +332,7 @@ object Pq {
     * probe argument, so it is not compared. A store with no sidecar
     * predates the contract: the probe runs on the caller's parameters
     * alone, and `dimAndQuant` (which may run a job) is never evaluated. */
-  private def requirePqStoreMatches(spark: org.apache.spark.sql.SparkSession,
+  private def requirePqStoreMatches(spark: SparkSession,
       path: String, kind: String, ncells: Int, cellsDig: String)(
       dimAndQuant: => (Int, String)): Unit = {
     val file = s"$path/_meta.json"
@@ -316,6 +351,61 @@ object Pq {
           "parameters silently mis-decode distances; probe with the " +
           "write-time parameters or rebuild the store")
     }
+  }
+
+  /** The one store writer: `encoded` as parquet PARTITIONED BY `cell_id`
+    * (vector column dropped unless `keepVectors`; null cells — null
+    * vectors — dropped, they have nothing to serve) plus its `_meta.json`
+    * sidecar, written through the Hadoop FS API (the store may live on
+    * HDFS/S3/local). Unlike the Dedup store (whose append path writes its
+    * sidecar first), these stores are overwrite-only, so the write order
+    * is delete-stale-sidecar → data → new sidecar: the parquet overwrite
+    * clears the partition directories but PRESERVES `_`-prefixed files
+    * (they're metadata to the file index), so without the explicit delete
+    * a crash mid-write would leave the PREVIOUS store's sidecar describing
+    * half-written new data — the exact silent mismatch the sidecar exists
+    * to catch. With it, every crash window leaves a sidecar-LESS store
+    * (the next probe runs the documented pre-sidecar degrade, the next
+    * write replaces everything); the sidecar only ever describes a store
+    * whose data write committed. */
+  private def writeStore(encoded: DataFrame, path: String, fam: Family,
+      cells: Seq[Array[Double]], keepVectors: Boolean, vecCol: String): Unit = {
+    val (dim, quantDig) = fam.dimAndQuant
+    require(cells.nonEmpty && cells.head.length == dim,
+      s"cells dimension ${cells.headOption.map(_.length)} does not match " +
+        s"${fam.dimLabel} $dim")
+    val meta = new org.apache.hadoop.fs.Path(path, "_meta.json")
+    val fs = meta.getFileSystem(encoded.sparkSession.sessionState.newHadoopConf())
+    if (fs.exists(meta)) fs.delete(meta, false): Unit
+    val slim = if (keepVectors) encoded else encoded.drop(vecCol)
+    slim.filter(col("cell_id").isNotNull)
+      .write.mode("overwrite").partitionBy("cell_id").parquet(path)
+    graft.io.Json.write(encoded.sparkSession, s"$path/_meta.json",
+      PqStoreMeta(fam.kind, dim, cells.size, cellsDigest(cells), quantDig,
+        keepVectors).json, overwrite = true)
+  }
+
+  /** The one store probe: check `nprobe` and the sidecar, collect the
+    * UNION of all queries' probe lists (computed from the literal `cells`,
+    * so it is known before the plan is built), read only those cells'
+    * directories through a pushed-down `cell_id IN (…)` partition filter,
+    * then run `scan` over them — its `cell_id` equality join routes each
+    * cell's rows to the queries that probe it. */
+  private def storeScan(spark: SparkSession, path: String,
+      queries: DataFrame, fam: Family, cells: Seq[Array[Double]],
+      nprobe: Int, k: Int,
+      idCol: String, queryIdCol: String, queryVecCol: String): DataFrame = {
+    requireNprobe(cells, nprobe)
+    requirePqStoreMatches(spark, path, fam.kind, cells.size, cellsDigest(cells))(
+      fam.dimAndQuant)
+    val allProbed = queries.filter(col(queryVecCol).isNotNull)
+      .select(explode(probedCells(col(queryVecCol).cast("array<double>"),
+        cells, nprobe)).as("c")).distinct()
+      .collect().map(_.getInt(0)).sorted
+    val store = spark.read.parquet(path)
+      .filter(col("cell_id").isin(allProbed.map(Int.box): _*))
+    scan(store, queries, fam, Some((cells, nprobe)), k,
+      idCol, queryIdCol, queryVecCol)
   }
 
   /** Materialize an encoded+cell-assigned corpus ([[encode]] +
@@ -338,18 +428,7 @@ object Pq {
     require(encoded.columns.contains("cell_id"), "run assignCells first")
     require(encoded.columns.contains("pq_codes"), "run encode first")
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty), "empty codebooks")
-    val dim = codebooks.length * codebooks.head.head.length
-    require(cells.nonEmpty && cells.head.length == dim,
-      s"cells dimension ${cells.headOption.map(_.length)} does not match " +
-        s"the codebooks' m·dsub = $dim")
-    deletePqStoreMeta(encoded.sparkSession, path)
-    val slim = if (keepVectors) encoded else encoded.drop(vecCol)
-    // null cells (null vectors) have nothing to serve — drop at write
-    slim.filter(col("cell_id").isNotNull)
-      .write.mode("overwrite").partitionBy("cell_id").parquet(path)
-    graft.io.Json.write(encoded.sparkSession, s"$path/_meta.json",
-      PqStoreMeta("pq", dim, cells.size, cellsDigest(cells),
-        codebooksDigest(codebooks), keepVectors).json, overwrite = true)
+    writeStore(encoded, path, PqFamily(codebooks), cells, keepVectors, vecCol)
   }
 
   /** [[ivfAdcTopK]] against a [[writeCellPartitioned]] store: the probed
@@ -370,47 +449,14 @@ object Pq {
     * fail loudly instead of silently mis-pruning / mis-decoding. A store
     * with no sidecar predates the contract and runs on the caller's
     * parameters alone. */
-  def ivfAdcTopKFromStore(spark: org.apache.spark.sql.SparkSession,
+  def ivfAdcTopKFromStore(spark: SparkSession,
       path: String, queries: DataFrame,
       codebooks: Seq[Seq[Array[Double]]], cells: Seq[Array[Double]],
       nprobe: Int, k: Int,
       idCol: String = "vec_id", queryIdCol: String = "query_id",
-      queryVecCol: String = "embedding"): DataFrame = {
-    require(nprobe > 0 && nprobe <= cells.size,
-      s"nprobe $nprobe out of range 1..${cells.size}")
-    val m = codebooks.length
-    val dsub = codebooks.head.head.length
-    requirePqStoreMatches(spark, path, "pq", cells.size, cellsDigest(cells))(
-      (m * dsub, codebooksDigest(codebooks)))
-    val qv = col(queryVecCol).cast("array<double>")
-    val qtab = array(codebooks.zipWithIndex.map { case (cb, j) =>
-      array(cb.map(cent => l2sq(subspace(qv, j, dsub), cent)): _*)
-    }: _*)
-    val cellRank = array(cells.zipWithIndex.map { case (cent, ci) =>
-      struct(l2sq(qv, cent).as("d"), lit(ci).as("c"))
-    }: _*)
-    val probed = slice(transform(array_sort(cellRank), s => s.getField("c")),
-      1, nprobe)
-    val q = graft.model.GraftDataset.broadcastIfSmall(
-      queries.filter(col(queryVecCol).isNotNull)
-      .select(col(queryIdCol), qtab.as("__pq_tab"),
-        explode(probed).as("cell_id")))
-    // the UNION of all queries' probe lists prunes the scan statically;
-    // the equality join below then routes each cell's rows to its queries
-    val allProbed = queries.filter(col(queryVecCol).isNotNull)
-      .select(explode(probed).as("c")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val adist = (0 until m).map { j =>
-      element_at(element_at(col("__pq_tab"), j + 1),
-        col("pq_codes").getItem(j) + 1)
-    }.reduce(_ + _)
-    val store = spark.read.parquet(path)
-      .filter(col("cell_id").isin(allProbed.map(Int.box): _*))
-    val scored = store.join(q, Seq("cell_id"))
-      .select(col(queryIdCol), col(idCol), round(adist, 6).as("adist"))
-    graft.operators.TopK.topKPerQuery(scored, queryIdCol,
-      Seq(col("adist").asc, col(idCol).asc), k)
-  }
+      queryVecCol: String = "embedding"): DataFrame =
+    storeScan(spark, path, queries, PqFamily(codebooks), cells, nprobe, k,
+      idCol, queryIdCol, queryVecCol)
 
   /** Per-dimension (min, max) ranges for [[sqEncode]] — ONE distributed
     * pass (posexplode → partial-agg groupBy over ≤ dim keys), returned as
@@ -435,7 +481,7 @@ object Pq {
     * posexplode + groupBy per action; this pins the amortized-once cost
     * where it belongs. The literal frame broadcasts exactly like the lazy
     * one in [[sqEncode]]/[[sqTopK]]. */
-  def sqStatsMaterialized(spark: org.apache.spark.sql.SparkSession,
+  def sqStatsMaterialized(spark: SparkSession,
       stats: DataFrame): DataFrame = {
     val r = stats.head()
     spark.range(1).select(
@@ -446,16 +492,14 @@ object Pq {
   /** Per-query probe list: the ids of the `nprobe` centroids nearest to
     * `queryVec`, as a pure column expression over the driver-side literal
     * `cells` (no shuffle, no join — centroid tables are tiny by IVF
-    * construction). Shared by [[ivfSqTopK]], [[ivfSqTopKFromStore]], and
-    * the scale harness's scored-pair decomposition so the timed query and
-    * its counters derive the probe set from ONE definition. */
+    * construction). Every IVF path and every store probe ranks cells
+    * through it, as does the scale harness's scored-pair decomposition, so
+    * the timed query and its counters derive the probe set from ONE
+    * definition. */
   def probedCells(queryVec: Column, cells: Seq[Array[Double]],
-      nprobe: Int): Column = {
-    val cellRank = array(cells.zipWithIndex.map { case (cent, ci) =>
-      struct(l2sq(queryVec, cent).as("d"), lit(ci).as("c"))
-    }: _*)
-    slice(transform(array_sort(cellRank), s => s.getField("c")), 1, nprobe)
-  }
+      nprobe: Int): Column =
+    slice(transform(array_sort(ranked(queryVec, cells)), s => s.getField("c")),
+      1, nprobe)
 
   /** Affine int8 scalar quantization (the FAISS `SQ8` baseline — 4× less
     * compression than PQ at m=4 but with NO training and near-exact
@@ -493,24 +537,8 @@ object Pq {
       idCol: String = "vec_id", queryIdCol: String = "query_id",
       queryVecCol: String = "embedding"): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val q = graft.model.GraftDataset.broadcastIfSmall(
-      queries.filter(col(queryVecCol).isNotNull)
-      .select(col(queryIdCol),
-        col(queryVecCol).cast("array<double>").as("__qv")))
-    val dequant = transform(col("sq_codes"), (c, i) => {
-      val mn = element_at(col("__mins"), i + 1)
-      val mx = element_at(col("__maxs"), i + 1)
-      mn + (c.cast("double") + 0.5) / 256.0 * (mx - mn)
-    })
-    val dist = aggregate(
-      zip_with(col("__qv"), dequant, (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    val scored = encoded.filter(col("sq_codes").isNotNull)
-      .crossJoin(broadcast(stats))
-      .crossJoin(q)
-      .select(col(queryIdCol), col(idCol), round(dist, 6).as("sq_dist"))
-    graft.operators.TopK.topKPerQuery(scored, queryIdCol,
-      Seq(col("sq_dist").asc, col(idCol).asc), k)
+    scan(encoded, queries, Sq8Family(stats), None, k,
+      idCol, queryIdCol, queryVecCol)
   }
 
   /** IVF-pruned SQ8 top-k — the scale path for [[sqTopK]], whose
@@ -537,29 +565,8 @@ object Pq {
       idCol: String = "vec_id", queryIdCol: String = "query_id",
       queryVecCol: String = "embedding"): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    require(nprobe > 0 && nprobe <= cells.size,
-      s"nprobe $nprobe out of range 1..${cells.size}")
-    val qv = col(queryVecCol).cast("array<double>")
-    val probed = probedCells(qv, cells, nprobe)
-    val q = graft.model.GraftDataset.broadcastIfSmall(
-      queries.filter(col(queryVecCol).isNotNull)
-      .select(col(queryIdCol), qv.as("__qv"), explode(probed).as("cell_id")))
-    val dequant = transform(col("sq_codes"), (c, i) => {
-      val mn = element_at(col("__mins"), i + 1)
-      val mx = element_at(col("__maxs"), i + 1)
-      mn + (c.cast("double") + 0.5) / 256.0 * (mx - mn)
-    })
-    val dist = aggregate(
-      zip_with(col("__qv"), dequant, (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    // null sq_codes (null vectors) carry a null cell_id too, so the
-    // equality join drops them — the filter keeps the intent visible
-    val scored = encoded.filter(col("sq_codes").isNotNull)
-      .crossJoin(broadcast(stats))
-      .join(q, Seq("cell_id"))
-      .select(col(queryIdCol), col(idCol), round(dist, 6).as("sq_dist"))
-    graft.operators.TopK.topKPerQuery(scored, queryIdCol,
-      Seq(col("sq_dist").asc, col(idCol).asc), k)
+    scan(encoded, queries, Sq8Family(stats), Some((cells, nprobe)), k,
+      idCol, queryIdCol, queryVecCol)
   }
 
   /** [[writeCellPartitioned]] for SQ8: materialize an [[sqEncode]] +
@@ -582,17 +589,7 @@ object Pq {
       keepVectors: Boolean = false, vecCol: String = "embedding"): Unit = {
     require(encoded.columns.contains("cell_id"), "run assignCells first")
     require(encoded.columns.contains("sq_codes"), "run sqEncode first")
-    val (dim, quantDig) = statsDigest(stats)
-    require(cells.nonEmpty && cells.head.length == dim,
-      s"cells dimension ${cells.headOption.map(_.length)} does not match " +
-        s"the stats dimension $dim")
-    deletePqStoreMeta(encoded.sparkSession, path)
-    val slim = if (keepVectors) encoded else encoded.drop(vecCol)
-    slim.filter(col("cell_id").isNotNull)
-      .write.mode("overwrite").partitionBy("cell_id").parquet(path)
-    graft.io.Json.write(encoded.sparkSession, s"$path/_meta.json",
-      PqStoreMeta("sq8", dim, cells.size, cellsDigest(cells), quantDig,
-        keepVectors).json, overwrite = true)
+    writeStore(encoded, path, Sq8Family(stats), cells, keepVectors, vecCol)
   }
 
   /** [[ivfSqTopK]] against a [[writeSqCellPartitioned]] store: the
@@ -612,41 +609,14 @@ object Pq {
     * costs one `head()` of `stats` — pass a [[sqStatsMaterialized]]
     * literal frame on serving paths. A store with no sidecar predates the
     * contract and runs on the caller's parameters alone. */
-  def ivfSqTopKFromStore(spark: org.apache.spark.sql.SparkSession,
+  def ivfSqTopKFromStore(spark: SparkSession,
       path: String, queries: DataFrame, stats: DataFrame,
       cells: Seq[Array[Double]], nprobe: Int, k: Int,
       idCol: String = "vec_id", queryIdCol: String = "query_id",
       queryVecCol: String = "embedding"): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    require(nprobe > 0 && nprobe <= cells.size,
-      s"nprobe $nprobe out of range 1..${cells.size}")
-    requirePqStoreMatches(spark, path, "sq8", cells.size, cellsDigest(cells))(
-      statsDigest(stats))
-    val qv = col(queryVecCol).cast("array<double>")
-    val probed = probedCells(qv, cells, nprobe)
-    val q = graft.model.GraftDataset.broadcastIfSmall(
-      queries.filter(col(queryVecCol).isNotNull)
-      .select(col(queryIdCol), qv.as("__qv"), explode(probed).as("cell_id")))
-    // the UNION of all queries' probe lists prunes the scan statically
-    val allProbed = queries.filter(col(queryVecCol).isNotNull)
-      .select(explode(probed).as("c")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val store = spark.read.parquet(path)
-      .filter(col("cell_id").isin(allProbed.map(Int.box): _*))
-    val dequant = transform(col("sq_codes"), (c, i) => {
-      val mn = element_at(col("__mins"), i + 1)
-      val mx = element_at(col("__maxs"), i + 1)
-      mn + (c.cast("double") + 0.5) / 256.0 * (mx - mn)
-    })
-    val dist = aggregate(
-      zip_with(col("__qv"), dequant, (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    val scored = store.filter(col("sq_codes").isNotNull)
-      .crossJoin(broadcast(stats))
-      .join(q, Seq("cell_id"))
-      .select(col(queryIdCol), col(idCol), round(dist, 6).as("sq_dist"))
-    graft.operators.TopK.topKPerQuery(scored, queryIdCol,
-      Seq(col("sq_dist").asc, col(idCol).asc), k)
+    storeScan(spark, path, queries, Sq8Family(stats), cells, nprobe, k,
+      idCol, queryIdCol, queryVecCol)
   }
 
   /** Mean recall@k of an approximate top-k ranking against the exact one:

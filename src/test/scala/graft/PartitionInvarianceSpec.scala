@@ -79,6 +79,7 @@ class PartitionInvarianceSpec extends SparkFunSuite {
     "q135_oov_rate",            // vocabulary-coverage scoring
     "q136_html_extract",        // HTML -> text regexp chain (pure map)
     "q137_sq8_topk",            // SQ8 encode + ranked dequant scan
+    "q138_ivfadc_store",        // PQ cell store write -> pruned probe read
     "q139_group_holdout",       // group-hash split (pure map)
     "q140_dsir_resample",       // DSIR weights + Gumbel top-k
     "q141_unimax",              // waterfilling budget allocation

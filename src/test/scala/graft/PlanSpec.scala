@@ -253,14 +253,26 @@ class PlanSpec extends SparkFunSuite {
       "tokenBudgetMixture")
   }
 
-  test("q194: IVF-SQ8 corpus never shuffles — probe side broadcast into the cell join, two-phase rank") {
-    val plan = planOf("q194_ivfsq_topk")
+  /** The IVF scan shape every quantized cell probe shares: the probe side
+    * is broadcast into the cell join, the rank is two-phase, and the
+    * corpus side never sort-merges. */
+  private def assertIvfScanShape(gate: String): Unit = {
+    val plan = planOf(gate)
     assert(plan.contains("BroadcastHashJoin"),
       s"cell join is not broadcast:\n$plan")
     assert(plan.contains("MapPartitions"),
       s"two-phase rank missing:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"corpus side shuffled for the cell join:\n$plan")
+  }
+
+  test("q194: IVF-SQ8 corpus never shuffles — probe side broadcast into the cell join, two-phase rank") {
+    assertIvfScanShape("q194_ivfsq_topk")
+  }
+
+  test("q124/q138/q196: every IVF gate (PQ and SQ8, in memory and from the cell store) keeps the q194 scan shape") {
+    Seq("q124_ivfadc_topk", "q138_ivfadc_store", "q196_ivfsq_store")
+      .foreach(assertIvfScanShape)
   }
 
   test("broadcastIfSmall: an over-threshold images side degrades to a shuffle join instead of throwing") {

@@ -81,6 +81,14 @@ class PqSpec extends SparkFunSuite {
     assert(out.forall(_.getAs[Long]("query_id") == 7L)) // null query emits nothing
     assert(out.map(_.getAs[Long]("vec_id")).toSet == Set(0L, 1L)) // null row absent
     assert(out.minBy(_.getAs[Int]("rank")).getAs[Long]("vec_id") == 0L)
+    // IVF face: a hand-built frame can place the code-less row in a real
+    // cell (cell 0), so only the null-codes guard keeps it out of the join
+    val inCell = Pq.encode(corpus, codebooks).withColumn("cell_id", lit(0))
+    val ivf = Pq.ivfAdcTopK(inCell, q, codebooks,
+      Seq(Array(0.0, 0.0, 0.0, 0.0)), nprobe = 1, k = 5).collect()
+    assert(ivf.forall(_.getAs[Long]("query_id") == 7L))
+    assert(ivf.map(_.getAs[Long]("vec_id")).toSet == Set(0L, 1L))
+    assert(ivf.minBy(_.getAs[Int]("rank")).getAs[Long]("vec_id") == 0L)
   }
 
   test("trainCodebooks: shapes, determinism, and better reconstruction than one centroid") {
@@ -119,6 +127,68 @@ class PqSpec extends SparkFunSuite {
     one.collect().foreach { r =>
       assert(cellOf(r.getAs[Long]("vec_id")) == qCell(r.getAs[Long]("query_id")))
     }
+  }
+
+  test("adcRerankTopK = exact-cosine rerank of the ADC shortlist") {
+    val vecs = (0L until 40L).map { i =>
+      (i, Array.tabulate(8)(j => math.sin(i * 8 + j).toFloat))
+    }
+    val corpus = vecs.toDF("vec_id", "embedding")
+    // codebooks: m=2 subspaces of 4 dims, centroids from the first 3 vecs
+    val cents = vecs.take(3).map(_._2.map(_.toDouble))
+    val codebooks = (0 until 2).map(j => cents.map(_.slice(j * 4, j * 4 + 4)).toSeq)
+    val enc = graft.llm.Pq.encode(corpus, codebooks)
+    val queries = corpus.filter(col("vec_id") === 5)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val got = graft.llm.Pq.adcRerankTopK(enc, queries, corpus, codebooks,
+      shortlist = 15, k = 5)
+      .collect().map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
+    assert(got.length == 5)
+    // reference: ADC shortlist ids, then exact cosine rerank
+    val shortIds = graft.llm.Pq.adcTopK(enc, queries, codebooks, k = 15)
+      .collect().map(_.getLong(1)).toSet
+    val q = vecs(5)._2.map(_.toDouble)
+    def cos(a: Array[Double], b: Array[Double]) = {
+      val dot = a.zip(b).map { case (x, y) => x * y }.sum
+      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
+    }
+    val expect = vecs.filter(v => shortIds.contains(v._1))
+      .map(v => (v._1, BigDecimal(cos(q, v._2.map(_.toDouble)))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      .sortBy { case (id, c) => (-c, id) }.take(5)
+    assert(got.sortBy(_._3).map(t => (t._1, t._2)).toSeq == expect.toSeq)
+  }
+
+  test("adcRerankTopK: shortlist hint is size-guarded — over-threshold the whole chain degrades") {
+    import spark.implicits._
+    val embs = (0L until 60L).map(i =>
+      (i, Array.tabulate(8)(d => ((i * 5 + d * 11) % 23).toFloat)))
+      .toDF("vec_id", "embedding")
+    val cbs = (0 until 4).map(j =>
+      Seq(Array.tabulate(2)(x => j * 2.0 + x), Array.tabulate(2)(x => 20.0 - j - x)))
+    val enc = graft.llm.Pq.encode(embs, cbs)
+    val queries = embs.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    def rerank() = graft.llm.Pq.adcRerankTopK(enc, queries, embs, cbs,
+      shortlist = 10, k = 5)
+    val expected = rerank().orderBy("query_id", "rank").collect().toSeq
+    spark.conf.set("graft.broadcast.maxBytes", "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val degraded = rerank()
+      val plan = degraded.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin"),
+        s"shortlist/query hint still forced over threshold:\n$plan")
+      // degraded ≠ broken: same rows through the shuffle-join path
+      assert(degraded.orderBy("query_id", "rank").collect().toSeq == expected)
+    } finally {
+      spark.conf.unset("graft.broadcast.maxBytes")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
+    // at defaults the shortlist rides a broadcast hash join again
+    val planDefault = rerank().queryExecution.executedPlan.toString
+    assert(planDefault.contains("BroadcastHashJoin"),
+      s"default-scale rerank lost its broadcast hints:\n$planDefault")
   }
 
   test("gate margin tripwire: q121 encode argmins are not ulp-close") {

@@ -4,8 +4,9 @@ import graft.llm.{Corpus, Curation, Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Specs for the round-9 additions: snapshot diff, batch drift, link
-  * extraction, semantic decontamination, the LSH parameter planner, the
-  * ADC+exact-rerank retrieval face, and the ORC/CSV corpus IO. */
+  * extraction, semantic decontamination, the LSH parameter planner, and
+  * the ORC/CSV corpus IO. (The ADC+exact-rerank retrieval face is spec'd
+  * in [[PqSpec]] with the rest of the quantized-retrieval family.) */
 class Round9Spec extends SparkFunSuite {
   import spark.implicits._
 
@@ -131,38 +132,6 @@ class Round9Spec extends SparkFunSuite {
     // extremes are never optimal at t=0.8: b=128,r=1 collides everything
     // (all fp), b=1,r=128 collides nothing (all fn)
     assert(chosen.forall(r => r.getLong(1) > 1 && r.getLong(1) < 128))
-  }
-
-  // ---- adcRerankTopK ---------------------------------------------------
-
-  test("adcRerankTopK = exact-cosine rerank of the ADC shortlist") {
-    val vecs = (0L until 40L).map { i =>
-      (i, Array.tabulate(8)(j => math.sin(i * 8 + j).toFloat))
-    }
-    val corpus = vecs.toDF("vec_id", "embedding")
-    // codebooks: m=2 subspaces of 4 dims, centroids from the first 3 vecs
-    val cents = vecs.take(3).map(_._2.map(_.toDouble))
-    val codebooks = (0 until 2).map(j => cents.map(_.slice(j * 4, j * 4 + 4)).toSeq)
-    val enc = graft.llm.Pq.encode(corpus, codebooks)
-    val queries = corpus.filter(col("vec_id") === 5)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val got = graft.llm.Pq.adcRerankTopK(enc, queries, corpus, codebooks,
-      shortlist = 15, k = 5)
-      .collect().map(r => (r.getLong(1), r.getDouble(2), r.getInt(3)))
-    assert(got.length == 5)
-    // reference: ADC shortlist ids, then exact cosine rerank
-    val shortIds = graft.llm.Pq.adcTopK(enc, queries, codebooks, k = 15)
-      .collect().map(_.getLong(1)).toSet
-    val q = vecs(5)._2.map(_.toDouble)
-    def cos(a: Array[Double], b: Array[Double]) = {
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
-    val expect = vecs.filter(v => shortIds.contains(v._1))
-      .map(v => (v._1, BigDecimal(cos(q, v._2.map(_.toDouble)))
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
-      .sortBy { case (id, c) => (-c, id) }.take(5)
-    assert(got.sortBy(_._3).map(t => (t._1, t._2)).toSeq == expect.toSeq)
   }
 
   // ---- hostPageRank -------------------------------------------------
