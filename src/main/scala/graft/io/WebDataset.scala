@@ -135,7 +135,11 @@ object WebDataset {
     * (corrupt payload → skip, never throw). */
   def fromWebDataset(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.tar")
+    // the directory plus a name filter, not a `$dir/*.tar` glob: the
+    // writer keeps shards flat, so the file set is the same, and Spark's
+    // sink-metadata check stats a glob path literally (a logged
+    // FileNotFoundException on every read)
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.tar").load(dir)
       .select(col("content"))
       .as[Array[Byte]]
       .flatMap { bytes =>

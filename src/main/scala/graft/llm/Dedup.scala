@@ -180,12 +180,14 @@ object Dedup {
     *   3. attach shingle sets only for survivors → exact Jaccard ≥ threshold
     * No cross join anywhere; array payloads touch only candidate pairs.
     *
-    * PARTIALLY EAGER (as are [[embeddingNearDups]], [[crossCorpusNearDups]]
-    * and the store/index probes): building the returned frame runs the
-    * occupancy probe of [[guardedPairs]] — one bounded driver
-    * aggregate over the banding frame — at DataFrame-CONSTRUCTION time, so
-    * plan-only callers (explain tooling, plan-lock tests) execute real
-    * jobs before any action of their own. */
+    * PARTIALLY EAGER (as are [[embeddingNearDups]] and the cross-corpus
+    * probe core [[crossProbe]] behind [[crossCorpusNearDups]] and its
+    * index/store faces): building the returned frame runs the occupancy
+    * probe of [[guardedPairs]] — one bounded driver collect of the
+    * oversized-bucket set — and localCheckpoints the pair set at
+    * DataFrame-CONSTRUCTION time; the cross probe adds its source's ratio
+    * counts and prune collects. So plan-only callers (explain tooling,
+    * plan-lock tests) execute real jobs before any action of their own. */
   def minHashNearDups(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 32, bands: Int = 8,
       threshold: Double = 0.7, shingleN: Int = 3,
@@ -340,51 +342,92 @@ object Dedup {
     *
     * Results are identical either way (the restriction is a semi-join on
     * the join key; it can only drop rows the band join would drop
-    * itself). */
+    * itself). Runs the probe core [[crossProbe]] over an [[IndexRef]],
+    * whose verify reads only candidate ids when they are driver-small. */
   def crossCorpusNearDupsAgainstIndex(newDocs: DataFrame, refIndex: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       k: Int = 32, bands: Int = 8, threshold: Double = 0.7,
       shingleN: Int = 3, maxBucketSize: Int = 256,
       storage: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      restrictRefBuckets: Option[Boolean] = None): DataFrame = {
+      restrictRefBuckets: Option[Boolean] = None): DataFrame =
+    crossProbe(newDocs, IndexRef(refIndex, restrictRefBuckets), textCol, idCol,
+      k, bands, threshold, shingleN, maxBucketSize, storage)
+
+  /** The one cross-corpus MinHash probe behind [[crossCorpusNearDups]],
+    * [[crossCorpusNearDupsAgainstIndex]] and [[crossCorpusNearDupsFromStore]]:
+    * the batch's `(id, sh, sig)` base (persisted, caller-owned) is banded,
+    * paired with the reference's banding rows through the occupancy guard
+    * ([[guardedCrossBandPairs]]), deduplicated per `(new_id, ref_id)` and
+    * verified ([[minHashVerify]]) against the reference payload. The
+    * [[RefSource]] supplies the three steps in which an index and a store
+    * differ; a source that proves no pair can exist yields the typed empty
+    * `(new_id, ref_id, jaccard)` frame. */
+  private def crossProbe(newDocs: DataFrame, ref: RefSource,
+      textCol: String, idCol: String, k: Int, bands: Int, threshold: Double,
+      shingleN: Int, maxBucketSize: Int, storage: StorageLevel): DataFrame = {
     val baseN = minHashBase(newDocs, textCol, idCol, k, shingleN).persist(storage)
-    val baseR = refIndex
-    val restrict = restrictRefBuckets.getOrElse {
-      if (baseR.storageLevel == StorageLevel.NONE) true // stored index: never count-scan it
-      else {
-        // fresh-ref path: one row per doc on each side; counting
-        // materializes the persisted bases the pipeline consumes
-        // threefold anyway
-        val nNew = baseN.count()
-        val nRef = baseR.count()
+    val bandedN = minHashBanded(baseN, k, bands)
+    val verified = for {
+      (bandedR, restrict) <- ref.banded(baseN, bandedN, k, bands)
+      (pairs, payload) <- ref.payload(
+        guardedCrossBandPairs(bandedN, bandedR, maxBucketSize, refineBits = 16,
+          storage, restrict).dropDuplicates("new_id", "ref_id"),
+        storage)
+    } yield minHashVerify(pairs, baseN, payload, threshold, ("new_id", "ref_id"))
+    verified.getOrElse(newDocs.select(col(idCol).as("new_id"),
+      col(idCol).as("ref_id"), lit(0.0).as("jaccard")).limit(0))
+  }
+
+  /** The reference side of [[crossProbe]]: an `(id, sh, sig)` index frame
+    * ([[IndexRef]]) or a [[writeMinHashStore]] directory ([[StoreRef]]). */
+  private sealed trait RefSource {
+    /** The reference banding rows `(id, bk, sub)` and whether the guard
+      * restricts them to the buckets the batch occupies; `None` when no
+      * reference row can share a bucket with the batch. */
+    def banded(baseN: DataFrame, bandedN: DataFrame, k: Int, bands: Int)
+      : Option[(DataFrame, Boolean)]
+    /** The pairs to verify and the reference payload `(id, sh, sig, …)`,
+      * pruned toward the candidates; `None` when no candidate survives. */
+    def payload(pairs: DataFrame, storage: StorageLevel)
+      : Option[(DataFrame, DataFrame)]
+  }
+
+  /** A fresh (persisted) or stored (unpersisted) [[buildMinHashIndex]]
+    * frame; `restrict` is [[crossCorpusNearDupsAgainstIndex]]'s
+    * `restrictRefBuckets`. */
+  private final case class IndexRef(index: DataFrame, restrict: Option[Boolean])
+      extends RefSource {
+    // a stored index is never count-scanned; on the fresh-ref path one
+    // count per side materializes the persisted bases the probe consumes
+    // threefold anyway (one row per doc on each side)
+    def banded(baseN: DataFrame, bandedN: DataFrame, k: Int, bands: Int) = {
+      val r = restrict.getOrElse(index.storageLevel == StorageLevel.NONE || {
+        val (nNew, nRef) = (baseN.count(), index.count())
         nRef > 0L && nNew.toDouble / nRef.toDouble <= 0.01
-      }
+      })
+      Some((minHashBanded(index, k, bands), r))
     }
-    val pairs = guardedCrossBandPairs(
-      minHashBanded(baseN, k, bands), minHashBanded(baseR, k, bands),
-      maxBucketSize, refineBits = 16, storage, restrict)
-      .dropDuplicates("new_id", "ref_id")
+
     // CANDIDATE-ID SCAN PRUNING (round 11): the two verification joins
-    // below need sig/sh of CANDIDATE ref ids only, but a join cannot
-    // prune a parquet scan — without this, every incremental batch
-    // re-reads the stored index's wide shingle column end to end (the
-    // one O(|reference|) term left in this path; the banding pass above
-    // reads only the narrow sig column). `pairs` is already
-    // materialized (the band stage checkpoints), so when the candidate
-    // ref-id set is driver-small — the tiny-batch production shape, and
-    // bounded by the occupancy guards — collect it and push an In filter
-    // into the index scan, where parquet row-group stats skip the
-    // non-candidate row groups. Past the cap (a big backfill batch), the
-    // join already touches most of the index and the plain scan is the
-    // right plan. Driver memory is bounded by the limit(cap+1) probe.
-    val maxPushdownIds = 100000
-    val candIds = pairs.select(col("ref_id"))
-      .distinct().limit(maxPushdownIds + 1).collect()
-    val baseRv =
-      if (candIds.length <= maxPushdownIds)
-        baseR.filter(col("id").isInCollection(candIds.map(_.get(0)).toSeq))
-      else baseR
-    minHashVerify(pairs, baseN, baseRv, threshold, ("new_id", "ref_id"))
+    // need sig/sh of CANDIDATE ref ids only, but a join cannot prune a
+    // parquet scan — without this, every incremental batch re-reads the
+    // stored index's wide shingle column end to end (the one O(|reference|)
+    // term left in this path; the banding pass reads only the narrow sig
+    // column). `pairs` is already materialized (the band stage
+    // checkpoints), so when the candidate ref-id set is driver-small — the
+    // tiny-batch production shape, and bounded by the occupancy guards —
+    // collect it and push an In filter into the index scan, where parquet
+    // row-group stats skip the non-candidate row groups. Past the cap (a
+    // big backfill batch), the join already touches most of the index and
+    // the plain scan is the right plan. Driver memory is bounded by the
+    // limit(cap+1) probe.
+    def payload(pairs: DataFrame, storage: StorageLevel) = {
+      val maxPushdownIds = 100000
+      val candIds = pairs.select(col("ref_id"))
+        .distinct().limit(maxPushdownIds + 1).collect()
+      Some((pairs, if (candIds.length > maxPushdownIds) index
+        else index.filter(col("id").isInCollection(candIds.map(_.get(0)).toSeq))))
+    }
   }
 
   /** Write a reference MinHash index as a PARTITION-PRUNED serving store —
@@ -534,70 +577,76 @@ object Dedup {
     * directory is smaller than `pruneMinBytes`, where the blocking
     * round-trip costs more than the scan it would save. Returned frame's
     * caches are caller-owned (clear the catalog after materializing, as
-    * the gates do). */
+    * the gates do). The `_meta.json` check runs first; then the probe core
+    * [[crossProbe]] runs over a [[StoreRef]]. */
   def crossCorpusNearDupsFromStore(newDocs: DataFrame, path: String,
       textCol: String = "text", idCol: String = "doc_id",
       k: Int = 32, bands: Int = 8, threshold: Double = 0.7,
       shingleN: Int = 3, maxBucketSize: Int = 256, nParts: Int = 64,
       storage: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       pruneMinBytes: Long = 64L << 20): DataFrame = {
-    val spark = newDocs.sparkSession
     // probe-side parameter check against the writer's sidecar: a probe
     // with the wrong k/bands/shingleN/nParts derives different pb/ib
     // partition assignments and band keys than the store's layout —
     // candidates are silently missed, never visibly wrong. Absent sidecar
     // (a pre-sidecar store) degrades to the caller's responsibility.
-    readStoreMeta(spark, path).foreach { m =>
+    readStoreMeta(newDocs.sparkSession, path).foreach { m =>
       val probe = StoreMeta(k, bands, shingleN, nParts)
       require(m == probe,
         s"minhash store probe: parameters $probe do not match the store's " +
           s"$m under $path — the pruned partition reads would silently " +
           "miss candidates")
     }
-    val baseN = minHashBase(newDocs, textCol, idCol, k, shingleN).persist(storage)
-    val bandedN = minHashBanded(baseN, k, bands)
-    val empty = newDocs.select(col(idCol).as("new_id"),
-      col(idCol).as("ref_id"), lit(0.0).as("jaccard")).limit(0)
-    // ADAPTIVE pruning (derived from the store's actual size, not a
-    // constant tuned to either the gate corpus or the cluster): each
-    // pruning set costs one BLOCKING driver round-trip — a distinct + a
-    // collect, and for the payload set a persist of the whole candidate
-    // frame so its materialization is not paid twice. That planning tax
-    // (~0.1–0.3 s per probe) only buys anything when the partitions it
-    // prunes cost MORE to scan, so probe the directory's byte size (one
-    // filesystem metadata call, no job) and skip the prune below
-    // `pruneMinBytes` (default 64 MB ≈ the break-even scan cost; the
-    // 100-TB store is far past it, so the production path is unchanged).
-    // Skipping a prune only widens the scan — results are identical.
-    def dirBytes(sub: String): Long = {
+    crossProbe(newDocs, StoreRef(path, nParts, pruneMinBytes), textCol, idCol,
+      k, bands, threshold, shingleN, maxBucketSize, storage)
+  }
+
+  /** A [[writeMinHashStore]] directory. Its postings are always restricted
+    * to the batch's buckets (the store IS the incremental regime).
+    *
+    * ADAPTIVE pruning (derived from the store's actual size, not a
+    * constant tuned to either the gate corpus or the cluster): each
+    * pruning set costs one BLOCKING driver round-trip — a distinct + a
+    * collect, and for the payload set a persist of the whole candidate
+    * frame so its materialization is not paid twice. That planning tax
+    * (~0.1–0.3 s per probe) only buys anything when the partitions it
+    * prunes cost MORE to scan, so probe the directory's byte size (one
+    * filesystem metadata call, no job) and skip the prune below
+    * `pruneMinBytes` (default 64 MB ≈ the break-even scan cost; the
+    * 100-TB store is far past it, so the production path is unchanged).
+    * Skipping a prune only widens the scan — results are identical. */
+  private final case class StoreRef(path: String, nParts: Int,
+      pruneMinBytes: Long) extends RefSource {
+    // the store's `sub` directory, and whether it is big enough to prune
+    private def read(spark: org.apache.spark.sql.SparkSession, sub: String) = {
       val p = new org.apache.hadoop.fs.Path(path, sub)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+      val bytes = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+      (spark.read.parquet(s"$path/$sub"), bytes >= pruneMinBytes)
     }
-    val postingsAll = spark.read.parquet(path + "/postings")
-    val postings =
-      if (dirBytes("postings") < pruneMinBytes) postingsAll
+
+    // `all` restricted to the distinct `part` values of `keys`; `None`
+    // when there are none
+    private def prune(all: DataFrame, part: String, keys: DataFrame) = {
+      val vs = keys.distinct().collect().map(_.getLong(0))
+      if (vs.isEmpty) None else Some(all.filter(col(part).isin(vs: _*)))
+    }
+
+    def banded(baseN: DataFrame, bandedN: DataFrame, k: Int, bands: Int) = {
+      val (all, pruning) = read(baseN.sparkSession, "postings")
+      (if (pruning) prune(all, "pb", bandedN.select(storePb(nParts).as("pb")))
+       else Some(all)).map(p => (p.select(col("id"), col("bk"), col("sub")), true))
+    }
+
+    def payload(pairs: DataFrame, storage: StorageLevel) = {
+      val (all, pruning) = read(pairs.sparkSession, "payload")
+      if (!pruning) Some((pairs, all))
       else {
-        val pbs = bandedN.select(storePb(nParts).as("pb")).distinct()
-          .collect().map(_.getLong(0))
-        if (pbs.isEmpty) return empty
-        postingsAll.filter(col("pb").isin(pbs: _*))
+        val p = pairs.persist(storage)
+        prune(all, "ib", p.select(storeIb(col("ref_id"), nParts).as("ib")))
+          .map((p, _))
       }
-    val pairsBase = guardedCrossBandPairs(bandedN,
-        postings.select(col("id"), col("bk"), col("sub")),
-        maxBucketSize, refineBits = 16, storage)
-      .dropDuplicates("new_id", "ref_id")
-    val payloadAll = spark.read.parquet(path + "/payload")
-    val (pairs, payload) =
-      if (dirBytes("payload") < pruneMinBytes) (pairsBase, payloadAll)
-      else {
-        val p = pairsBase.persist(storage)
-        val ibs = p.select(storeIb(col("ref_id"), nParts).as("ib")).distinct()
-          .collect().map(_.getLong(0))
-        if (ibs.isEmpty) return empty
-        (p, payloadAll.filter(col("ib").isin(ibs: _*)))
-      }
-    minHashVerify(pairs, baseN, payload, threshold, ("new_id", "ref_id"))
+    }
   }
 
   /** The consuming step: `newDocs` minus every row with a near-dup in
@@ -627,7 +676,7 @@ object Dedup {
     // drop map-side and never reach the occupancy shuffle; ref-side JOIN
     // work is bounded by the new batch, not the reference size. When the
     // batch is a sizable fraction of the reference (the caller decides —
-    // see crossCorpusNearDupsAgainstIndex's ratio rule) nearly every
+    // see IndexRef's ratio rule) nearly every
     // bucket is shared and the semi-join is pure overhead, so it is
     // skipped: the occupancy inner join downstream drops one-sided
     // buckets anyway, making the two plans row-identical.
@@ -1942,17 +1991,8 @@ object Dedup {
   def bloomCrossDedup(batch: DataFrame, ref: DataFrame, bloom: Array[Byte],
       textCol: String = "text", idCol: String = "doc_id",
       refFps: DataFrame = null): DataFrame = {
-    val spark = batch.sparkSession
-    val fp = TextAnalysis.fingerprint(col(textCol))
-    // null text → null fingerprint → null probe; a null key can't equal
-    // any reference fingerprint, so those rows are KEPT (matching the
-    // plain anti-join semantics, where a null join key never matches) —
-    // without the coalesce both filter branches would silently drop them
-    val might = coalesce(
-      graft.functions.GraftFunctions.bloomContains(spark, fp, bloom),
-      lit(false))
-    val clear = batch.filter(!might)
-    val cand = batch.filter(might).withColumn("__bc_fp", fp)
+    val (clear, cand) = bloomSplit(batch,
+      TextAnalysis.fingerprint(col(textCol)), bloom, "__bc_fp")
     val candFps = cand.select("__bc_fp").distinct()
     // both back-broadcasts are bounded by the BATCH (candFps ⊆ batch
     // fingerprints; confirmed ⊆ candFps) — the operator's whole design —
@@ -1978,6 +2018,21 @@ object Dedup {
       cand.join(graft.model.GraftDataset.broadcastIfSmall(confirmed,
           estimator = candFps), Seq("__bc_fp"), "left_anti")
         .drop("__bc_fp"))
+  }
+
+  /** The bloom probe of the exact-dedup faces ([[bloomCrossDedup]] and
+    * [[graft.streaming.EventStream.bloomDedupAgainstCorpus]]): `(clear,
+    * candidates)` — the rows whose fingerprint `fp` the bloom rejects, and
+    * the rest with `fp` added as `fpCol` for the verify join. Null text →
+    * null fingerprint → null probe; a null key can't equal any reference
+    * fingerprint, so those rows are KEPT in `clear` (matching the plain
+    * anti-join semantics, where a null join key never matches) — without
+    * the coalesce both filter branches would silently drop them. */
+  private[graft] def bloomSplit(rows: DataFrame, fp: Column,
+      bloom: Array[Byte], fpCol: String): (DataFrame, DataFrame) = {
+    val might = coalesce(graft.functions.GraftFunctions.bloomContains(
+      rows.sparkSession, fp, bloom), lit(false))
+    (rows.filter(!might), rows.filter(might).withColumn(fpCol, fp))
   }
 
   /** LSH parameter planner: for every (bands b, rows r) factorization of

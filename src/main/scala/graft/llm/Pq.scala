@@ -152,8 +152,12 @@ object Pq {
     // corpus row would outrank every real neighbor
     val codes = encoded.filter(col(fam.codesCol).isNotNull)
     val corpus = fam.side.fold(codes)(s => codes.crossJoin(broadcast(s)))
-    val joined =
-      if (probe.isEmpty) corpus.crossJoin(q) else corpus.join(q, Seq("cell_id"))
+    // `<=>`, not `=`: Catalyst infers no isnotnull(cell_id) from a
+    // null-safe equality, so it pushes no filter below assignCells'
+    // projection that would run the cell argmin a second time per row;
+    // a probed cell is never null, so a null cell_id still never matches
+    val joined = probe.fold(corpus.crossJoin(q))(_ =>
+      corpus.join(q, corpus("cell_id") <=> q("cell_id")))
     val scored = joined.select(col(queryIdCol), col(idCol),
       round(fam.dist, 6).as(fam.distCol))
     graft.operators.TopK.topKPerQuery(scored, queryIdCol,

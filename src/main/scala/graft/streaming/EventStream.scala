@@ -347,23 +347,17 @@ object StreamDedup {
   def matchesAgainstCorpus(stream: DataFrame, index: CorpusIndex,
       textCol: String = "text", idCol: String = "doc_id",
       threshold: Double = 0.7): DataFrame = {
-    val s = stream.sparkSession
-    val withSh = stream.select(
-      col(idCol).as("new_id"),
-      graft.functions.GraftFunctions.wordShingles(s,
-        split(lower(trim(col(textCol))), "\\s+"), index.shingleN,
-        distinct = true).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .withColumn("__sig",
-        graft.functions.GraftFunctions.minhashSig(s, col("__sh"), index.k))
-    withSh
-      .select(col("new_id"), col("__sh"),
-        explode(graft.llm.Dedup.bandKeys(col("__sig"), index.k, index.bands))
+    // the index side is built from the same base (buildCorpusIndex), so
+    // the two sides' shingles and signatures cannot drift apart
+    graft.llm.Dedup.minHashBase(stream, textCol, idCol, index.k, index.shingleN)
+      .withColumnRenamed("id", "new_id")
+      .select(col("new_id"), col("sh"),
+        explode(graft.llm.Dedup.bandKeys(col("sig"), index.k, index.bands))
           .as("bk"))
       .join(index.banded, Seq("bk"))
       .join(index.shingles, Seq("ref_id"))
       .select(col("new_id"), col("ref_id"),
-        graft.llm.Dedup.jaccard(col("__sh"), col("__sh_ref")).as("jaccard"))
+        graft.llm.Dedup.jaccard(col("sh"), col("__sh_ref")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -381,19 +375,9 @@ object StreamDedup {
     * face). */
   def bloomDedupAgainstCorpus(stream: DataFrame, refFps: DataFrame,
       bloom: Array[Byte], textCol: String = "text"): DataFrame = {
-    val spark = stream.sparkSession
-    val fp = graft.llm.TextAnalysis.fingerprint(col(textCol))
-    // null text → null probe; keep such rows (a null key never matches the
-    // reference anti-join) instead of dropping them from BOTH branches
-    val might = coalesce(
-      graft.functions.GraftFunctions.bloomContains(spark, fp, bloom),
-      lit(false))
-    val clear = stream.filter(!might)
-    val verified = stream.filter(might)
-      .withColumn("__bd_fp", fp)
-      .join(refFps.select(col("fingerprint").as("__bd_fp")), Seq("__bd_fp"),
-        "left_anti")
-      .drop("__bd_fp")
-    clear.unionByName(verified)
+    val (clear, cand) = graft.llm.Dedup.bloomSplit(stream,
+      graft.llm.TextAnalysis.fingerprint(col(textCol)), bloom, "__bd_fp")
+    clear.unionByName(cand.join(refFps.select(col("fingerprint").as("__bd_fp")),
+      Seq("__bd_fp"), "left_anti").drop("__bd_fp"))
   }
 }

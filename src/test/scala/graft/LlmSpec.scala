@@ -312,6 +312,25 @@ class DedupSpec extends SparkFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("lshParameterPlan enumerates divisor configs with valid masses") {
+    val rows = Dedup.lshParameterPlan(spark, nPerms = 128, threshold = 0.8)
+      .collect()
+    assert(rows.length == 8) // divisors of 128: 1,2,4,8,16,32,64,128
+    rows.foreach { r =>
+      assert(r.getLong(0) * r.getLong(1) == 128L) // b·r = nPerms
+      val (fp, fn, tot) = (r.getDouble(2), r.getDouble(3), r.getDouble(4))
+      assert(fp >= 0 && fn >= 0 && tot >= 0 && fp <= 1 && fn <= 1)
+      assert(math.abs(fp + fn - tot) < 2e-6) // each rounded to 6
+    }
+    val chosen = rows.filter(_.getBoolean(5))
+    assert(chosen.nonEmpty)
+    val minTotal = rows.map(_.getDouble(4)).min
+    assert(chosen.forall(_.getDouble(4) == minTotal))
+    // extremes are never optimal at t=0.8: b=128,r=1 collides everything
+    // (all fp), b=1,r=128 collides nothing (all fn)
+    assert(chosen.forall(r => r.getLong(1) > 1 && r.getLong(1) < 128))
+  }
+
   test("simhash guard: mega exact-dup cluster degrades to star pairs") {
     val docs = ((0L until 80L).map(i => (i, "identical page content for the simhash cluster")) ++
       Seq((300L, "completely different words appear in this document")))

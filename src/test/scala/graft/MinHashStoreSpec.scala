@@ -214,6 +214,51 @@ class MinHashStoreSpec extends SparkFunSuite {
     graft.IoUtil.rmTree(dir)
   }
 
+  test("star regime: fresh, stored-index and store probes (pruned and unpruned) return the same rows") {
+    // 60 identical copies on EACH side at cap 8: every shared band bucket
+    // holds 60×60 cross candidates and the full-signature re-key cannot
+    // split identical text, so the guard's star repair fires on every path
+    val mega = "the same boilerplate page text repeated here verbatim"
+    val refDocs = ((0L until 60L).map(i => (i, mega)) ++
+      corpus(6, "ref").map { case (i, t) => (100L + i, t) })
+      .toDF("doc_id", "text")
+    val newDocs = ((1000L until 1060L).map(i => (i, mega)) ++
+      corpus(3, "ref").map { case (i, t) => (2000L + i, t + " x") } ++
+      Seq((2100L, "completely unrelated content about celestial navigation")))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      val out = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      spark.catalog.clearCache()
+      out
+    }
+    val fresh = rows(Dedup.crossCorpusNearDups(newDocs, refDocs,
+      threshold = 0.5, maxBucketSize = 8))
+    val idxDir = java.nio.file.Files.createTempDirectory("mh_star_idx").toString
+    Dedup.buildMinHashIndex(refDocs).write.mode("overwrite").parquet(idxDir)
+    val viaIndex = rows(Dedup.crossCorpusNearDupsAgainstIndex(newDocs,
+      spark.read.parquet(idxDir), threshold = 0.5, maxBucketSize = 8))
+    val storeDir = java.nio.file.Files.createTempDirectory("mh_star_store").toString
+    Dedup.writeMinHashStore(refDocs, storeDir, nParts = 4)
+    def viaStore(minBytes: Long) = rows(Dedup.crossCorpusNearDupsFromStore(
+      newDocs, storeDir, threshold = 0.5, maxBucketSize = 8, nParts = 4,
+      pruneMinBytes = minBytes))
+    val pruned = viaStore(0L)
+    val unpruned = viaStore(Long.MaxValue)
+    // each new mega copy pairs once, with the min-id ref copy, at j = 1
+    assert(fresh.filter(_._1 < 2000L) ==
+      (1000L until 1060L).map(i => (i, 0L, 1.0)).toSet)
+    // each near copy matches its ref original
+    assert((0L until 3L).forall(i =>
+      fresh.exists(t => t._1 == 2000L + i && t._2 == 100L + i)),
+      s"near copies not matched: $fresh")
+    assert(viaIndex == fresh, s"stored index: $viaIndex vs fresh: $fresh")
+    assert(pruned == fresh, s"pruned store: $pruned vs fresh: $fresh")
+    assert(unpruned == fresh, s"unpruned store: $unpruned vs fresh: $fresh")
+    graft.IoUtil.rmTree(idxDir)
+    graft.IoUtil.rmTree(storeDir)
+  }
+
   test("crossCorpusNearDupsAgainstIndex: unpersisted stored index defaults to restrict=true without counting it") {
     val mk = (ids: Seq[Long]) => ids.map(i =>
       (i, s"document number $i with shared words alpha beta gamma delta " +

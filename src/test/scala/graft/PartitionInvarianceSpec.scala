@@ -80,6 +80,8 @@ class PartitionInvarianceSpec extends SparkFunSuite {
     "q136_html_extract",        // HTML -> text regexp chain (pure map)
     "q137_sq8_topk",            // SQ8 encode + ranked dequant scan
     "q138_ivfadc_store",        // PQ cell store write -> pruned probe read
+    "q146_minhash_store",       // minhash store write -> cross-corpus probe core
+    "q160_minhash_store_append", // store append -> cross-corpus probe core
     "q139_group_holdout",       // group-hash split (pure map)
     "q140_dsir_resample",       // DSIR weights + Gumbel top-k
     "q141_unimax",              // waterfilling budget allocation

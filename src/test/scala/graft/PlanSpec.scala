@@ -275,6 +275,18 @@ class PlanSpec extends SparkFunSuite {
       .foreach(assertIvfScanShape)
   }
 
+  test("q124/q194: the in-memory IVF scans evaluate the cell argmin once per corpus row") {
+    // assignCells' argmin is an array_min over full-dimension (un-sliced)
+    // L2 structs; an isnotnull(cell_id) the cell join let Catalyst infer
+    // would be pushed below its projection and run it again in a Filter
+    val argmin = "array_min\\(array\\(struct\\(d, aggregate\\(zip_with\\(cast\\(".r
+    for (gate <- Seq("q124_ivfadc_topk", "q194_ivfsq_topk")) {
+      val plan = planOf(gate)
+      val n = argmin.findAllIn(plan).size
+      assert(n == 1, s"$gate evaluates the cell argmin $n times:\n$plan")
+    }
+  }
+
   test("broadcastIfSmall: an over-threshold images side degrades to a shuffle join instead of throwing") {
     // An explicit broadcast() hint is honored UNCONDITIONALLY by Spark (AQE
     // never demotes a user hint) and BroadcastExchange hard-fails past

@@ -1,12 +1,13 @@
 package graft
 
-import graft.llm.{Corpus, Curation, Dedup, Similarity}
+import graft.llm.{Corpus, Curation, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Specs for the round-9 additions: snapshot diff, batch drift, link
-  * extraction, semantic decontamination, the LSH parameter planner, and
-  * the ORC/CSV corpus IO. (The ADC+exact-rerank retrieval face is spec'd
-  * in [[PqSpec]] with the rest of the quantized-retrieval family.) */
+  * extraction, semantic decontamination, and the ORC/CSV corpus IO. (The
+  * LSH parameter planner is spec'd in [[DedupSpec]]; the ADC+exact-rerank
+  * retrieval face in [[PqSpec]] with the rest of the quantized-retrieval
+  * family.) */
 class Round9Spec extends SparkFunSuite {
   import spark.implicits._
 
@@ -111,27 +112,6 @@ class Round9Spec extends SparkFunSuite {
     assert(got(1L) == ((1.0, true)))
     assert(got(2L) == ((0.0, false)))
     assert(math.abs(got(3L)._1 - 0.707107) < 1e-9 && got(3L)._2)
-  }
-
-  // ---- lshParameterPlan -----------------------------------------------
-
-  test("lshParameterPlan enumerates divisor configs with valid masses") {
-    val rows = Dedup.lshParameterPlan(spark, nPerms = 128, threshold = 0.8)
-      .collect()
-    assert(rows.length == 8) // divisors of 128: 1,2,4,8,16,32,64,128
-    rows.foreach { r =>
-      assert(r.getLong(0) * r.getLong(1) == 128L) // b·r = nPerms
-      val (fp, fn, tot) = (r.getDouble(2), r.getDouble(3), r.getDouble(4))
-      assert(fp >= 0 && fn >= 0 && tot >= 0 && fp <= 1 && fn <= 1)
-      assert(math.abs(fp + fn - tot) < 2e-6) // each rounded to 6
-    }
-    val chosen = rows.filter(_.getBoolean(5))
-    assert(chosen.nonEmpty)
-    val minTotal = rows.map(_.getDouble(4)).min
-    assert(chosen.forall(_.getDouble(4) == minTotal))
-    // extremes are never optimal at t=0.8: b=128,r=1 collides everything
-    // (all fp), b=1,r=128 collides nothing (all fn)
-    assert(chosen.forall(r => r.getLong(1) > 1 && r.getLong(1) < 128))
   }
 
   // ---- hostPageRank -------------------------------------------------

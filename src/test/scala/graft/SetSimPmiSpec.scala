@@ -76,6 +76,43 @@ class SetSimPmiSpec extends SparkFunSuite {
   }
 
   /** Brute-force probe×corpus containment — the definition. */
+  private def bruteForcePairs(sets: Seq[(Long, Set[String])], t: Double)
+      : Set[(Long, Long)] =
+    (for {
+      (ia, sa) <- sets; (ib, sb) <- sets if ia < ib
+      j = sa.intersect(sb).size.toDouble / sa.union(sb).size
+      if j >= t
+    } yield (ia, ib)).toSet
+
+  private val corpus = DedupCorpus.docs
+
+  private def tokenSets: Seq[(Long, Set[String])] = corpus.map { case (id, t) =>
+    id -> t.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).toSet
+  }
+
+  test("setSimilarityJoin reproduces brute force at 0.9 (position filter is lossless)") {
+    val docs = spark.createDataFrame(corpus).toDF("doc_id", "text")
+    for (t <- Seq(0.9, 0.8, 0.5)) {
+      val got = Dedup.setSimilarityJoin(docs, threshold = t)
+        .select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == bruteForcePairs(tokenSets, t),
+        s"threshold $t: engine pairs differ from brute force")
+    }
+  }
+
+  test("setSimilarityJoin jaccard values match the exact definition") {
+    val docs = spark.createDataFrame(corpus).toDF("doc_id", "text")
+    val sets = tokenSets.toMap
+    Dedup.setSimilarityJoin(docs, threshold = 0.5).collect().foreach { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      val exact = sets(a).intersect(sets(b)).size.toDouble /
+        sets(a).union(sets(b)).size
+      assert(math.abs(r.getDouble(2) - exact) < 1e-12,
+        s"pair ($a,$b): jaccard ${r.getDouble(2)} != $exact")
+    }
+  }
+
   private def bruteContainment(probe: DataFrame, corpus: DataFrame,
       t: Double): Set[(Long, Long, Double)] = {
     def sets(df: DataFrame) = df.select(col("doc_id"),
