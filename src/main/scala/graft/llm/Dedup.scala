@@ -183,11 +183,11 @@ object Dedup {
     * PARTIALLY EAGER (as are [[embeddingNearDups]] and the cross-corpus
     * probe core [[crossProbe]] behind [[crossCorpusNearDups]] and its
     * index/store faces): building the returned frame runs the occupancy
-    * probe of [[guardedPairs]] — one bounded driver collect of the
-    * oversized-bucket set — and localCheckpoints the pair set at
-    * DataFrame-CONSTRUCTION time; the cross probe adds its source's ratio
-    * counts and prune collects. So plan-only callers (explain tooling,
-    * plan-lock tests) execute real jobs before any action of their own. */
+    * guard's one-row probe and localCheckpoints its pair set
+    * ([[guardedPairs]]) at DataFrame-CONSTRUCTION time; the cross probe
+    * adds its source's ratio counts and prune collects. So plan-only
+    * callers (explain tooling, plan-lock tests) execute real jobs before
+    * any action of their own. */
   def minHashNearDups(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 32, bands: Int = 8,
       threshold: Double = 0.7, shingleN: Int = 3,
@@ -663,12 +663,10 @@ object Dedup {
 
   /** The cross form of [[guardedPairs]] over two banding frames
     * `(id, bk, sub)`: new-batch rows against reference rows, returning
-    * `(new_id, ref_id)`. `broadcastTagMax` is exposed so the spec can force
-    * the shuffle fallback and assert row identity with the tag regime. */
+    * `(new_id, ref_id)`. */
   private[llm] def guardedCrossBandPairs(bandedNew: DataFrame, bandedRef: DataFrame,
       maxBucketSize: Int, refineBits: Int,
-      storage: StorageLevel, restrictRefBuckets: Boolean = true,
-      broadcastTagMax: Int = 4096): DataFrame = {
+      storage: StorageLevel, restrictRefBuckets: Boolean = true): DataFrame = {
     // restrict the REF side to buckets the new batch actually occupies
     // BEFORE any ref-side aggregation: for the production shape (tiny
     // daily batch vs 100-TB reference) the new bucket set is a broadcast
@@ -684,8 +682,7 @@ object Dedup {
       if (restrictRefBuckets)
         bandedRef.join(bandedNew.select(col("bk")).distinct(), Seq("bk"), "left_semi")
       else bandedRef
-    guardedPairs(bandedNew, Some(refShared), maxBucketSize, refineBits,
-      storage, broadcastTagMax = broadcastTagMax)
+    guardedPairs(bandedNew, Some(refShared), maxBucketSize, refineBits, storage)
   }
 
   /** Near-duplicate CLUSTERS: connected components over the verified
@@ -881,7 +878,7 @@ object Dedup {
     * [[minHashNearDups]]/[[embeddingNearDups]], which bounds their pair
     * volume linearly and keeps cluster membership through the
     * representative. The bucket key space is ≤ 4·2^16 rows, so the
-    * occupancy frame always broadcasts. */
+    * oversized-bucket set the guard tags each row with stays small. */
   def simHashNearDups(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", maxDist: Int = 3,
       maxBucketSize: Int = 256,
@@ -904,7 +901,7 @@ object Dedup {
     val base = sigs.select(col("id"), col("sig")).persist(storage)
     val pairs =
       guardedPairs(simHashBanded(base), None, maxBucketSize, refineBits = 16,
-        storage, broadcastOcc = true)
+        storage)
         .dropDuplicates("id_a", "id_b")
     withPayload(pairs, base, base, "sig")
       .select(col("id_a"), col("id_b"),
@@ -1218,11 +1215,11 @@ object Dedup {
     // carries the full vector payload (see minHashNearDups). Caller owns
     // cleanup after materializing the result.
     val base = prepped.persist(storage)
-    // level-1 occupancy key space here is ≤ bands·2^(planes/bands) rows —
-    // always broadcastable
+    // level-1 occupancy key space here is ≤ bands·2^(planes/bands) rows,
+    // so the oversized-bucket set the guard tags with is small
     val pairs =
       guardedPairs(bandedKeys(base, planes, bands, refinePlanes), None,
-        maxBucketSize, refinePlanes, storage, broadcastOcc = true)
+        maxBucketSize, refinePlanes, storage)
         .dropDuplicates("id_a", "id_b")
     // fused native cosine (bit-identical to Similarity.cosine, one codegen
     // loop instead of four interpreted HOF passes) — the verify step runs
@@ -1285,147 +1282,112 @@ object Dedup {
     *
     * `right = None` is the self form: `(id_a, id_b)` with id_a < id_b and
     * star pairs `(rep, member)`. `Some(ref)` is the cross form:
-    * `(new_id, ref_id)`. A bucket's occupancy is then the inner join of both
-    * sides' counts (only shared buckets can pair), safety bounds the cross
-    * PRODUCT n_new·n_ref ≤ cap² (self's n ≤ cap is that bound with both
-    * sides equal), the refine width comes from max(n_new, n_ref) so sub
-    * keys align across sides, and star repair pairs each new member with
-    * the min-id ref member.
+    * `(new_id, ref_id)`. A bucket's occupancy then counts both sides,
+    * safety bounds the cross PRODUCT n_new·n_ref ≤ cap² (self's n ≤ cap is
+    * that bound with both sides equal; a one-sided bucket cannot pair and
+    * is safe), the refine width comes from max(n_new, n_ref) so sub keys
+    * align across sides, and star repair pairs each new member with the
+    * min-id ref member.
     *
-    * The occupancy PROBE collects the oversized bucket set itself, bounded
-    * at `broadcastTagMax + 1` rows and usually EMPTY. Three regimes:
-    *   - empty — the refine/star machinery is a provable no-op (sub ≡ 0),
-    *     so the direct bucket equi-join is row-identical and sheds the
-    *     occupancy join, the level-2 shuffle, the persists and the unions;
-    *   - ≤ `broadcastTagMax` oversized buckets — the occupancy SHUFFLE join
-    *     becomes a broadcast tag of the collected set (left_outer, null
-    *     count = safe). Row-identical: every pair needs an equi-match on k
-    *     from both sides, so rows of one-sided buckets (which the inner
-    *     join dropped) never pair, and every oversized cross bucket is
-    *     shared by construction. The probe pays for itself;
-    *   - more — adversarial occupancy: the shuffle-join machinery, with the
-    *     level-1 occupancy broadcast when `broadcastOcc` says its key space
-    *     is small (not for MinHash, whose band-hash keys scale with data).
+    * Each level's oversized-key set is one occupancy aggregate over both
+    * sides' rows (the self form's rows are both sides), filtered to the
+    * keys over the cap, and every row is tagged with it by a left_outer
+    * join (a null tag marks a row of a safe key; AQE broadcasts the set
+    * when it is small). That is row-identical to an inner occupancy join:
+    * every pair needs an equi-match on k from both sides, so rows of
+    * one-sided buckets never pair, and every oversized cross bucket is
+    * shared by construction. Star repair runs in the same pair join: the
+    * rows of a key still over the cap join on a star flag, and the
+    * representative's side keeps only the representative, so each member
+    * pairs with it alone.
     *
-    * Footprint: with an unrestricted ref side (`restrictRefBuckets = false`
-    * in [[guardedCrossBandPairs]]) the tag regime keeps one-sided ref rows
-    * in the persisted ref tag frame and in the final pair-join shuffle.
-    * That is bounded by what the direct regime already joins under the
-    * same setting: the whole ref banding frame.
-    *
-    * The probe is a driver action at construction time; the slim pair set
-    * is localCheckpointed, so every guard-internal persist is dropped here. */
+    * Eager at construction: a one-row probe of the level-1 set (empty →
+    * the refine/star machinery is a provable no-op, sub ≡ 0, and the
+    * direct bucket equi-join replaces it), then the slim pair set is
+    * localCheckpointed and the guard's own persists are dropped. A lazy
+    * form of the same plan measured slower and heavier on perfbench batch:
+    * the plan fans out, AQE reuses no exchange over the re-instanced
+    * cached bases of a self-join, so every consumer recomputes its branch,
+    * and a caller caching the lazy frame keeps the plan's broadcast hash
+    * tables on the heap for the cache's lifetime. */
   private[llm] def guardedPairs(left: DataFrame, right: Option[DataFrame],
-      maxBucketSize: Int, refineBits: Int, storage: StorageLevel,
-      broadcastOcc: Boolean = false, broadcastTagMax: Int = 4096): DataFrame = {
+      maxBucketSize: Int, refineBits: Int, storage: StorageLevel): DataFrame = {
     val self = right.isEmpty
-    val ref = right.getOrElse(left)
     val (a, b) = if (self) ("id_a", "id_b") else ("new_id", "ref_id")
-    val capSq = lit(maxBucketSize.toLong * maxBucketSize)
-    // per-key occupancy frame (counts `n`, or `n`+"n" / `n`+"r" per side),
-    // its safety predicate and the bucket size the refine width derives from
-    def occupancy(key: String, n: String,
-        l: DataFrame, r: DataFrame): (DataFrame, Column, Column) = {
-      def counted(t: DataFrame, c: String) =
-        t.groupBy(col(key)).agg(count(lit(1)).as(c))
-      if (self) (counted(l, n), col(n) <= maxBucketSize, col(n))
-      else (counted(l, n + "n").join(counted(r, n + "r"), Seq(key)),
-        col(n + "n") * col(n + "r") <= capSq,
-        greatest(col(n + "n"), col(n + "r")))
-    }
     // self pairs keep id_a < id_b; cross pairs run new against ref
-    def pairsOn(key: String, l: DataFrame, r: DataFrame): DataFrame = {
-      val joined = l.select(col("id").as(a), col(key))
-        .join(r.select(col("id").as(b), col(key)), Seq(key))
+    def pairsOn(keys: Seq[String], l: DataFrame, r: DataFrame): DataFrame = {
+      val joined = l.select(col("id").as(a) +: keys.map(col): _*)
+        .join(r.select(col("id").as(b) +: keys.map(col): _*), keys)
       (if (self) joined.filter(col(a) < col(b)) else joined).select(a, b)
     }
-    // slim (one row per bucket); persisted so the probe's materialization
-    // is reused by the (rare) very-many-oversized-buckets fallback below
-    val (occ1, fits, bucketSize) = occupancy("bk", "__n", left, ref)
-    val occ = occ1.persist(storage)
-    val oversized = occ.filter(!fits).limit(broadcastTagMax + 1).collect()
-    if (oversized.isEmpty) {
+    // ONE frame of both sides' rows: `__new` rows pair as `a`, `__ref` rows
+    // as `b` (every row of the self form is both), so each level's
+    // occupancy is one aggregate
+    def flagged(t: DataFrame, isNew: Boolean, isRef: Boolean) =
+      t.select(col("id"), col("bk"), col("sub"),
+        lit(isNew).as("__new"), lit(isRef).as("__ref"))
+    val rows = right.fold(flagged(left, isNew = true, isRef = true))(r =>
+      flagged(left, isNew = true, isRef = false)
+        .unionByName(flagged(r, isNew = false, isRef = true)))
+    // the keys whose pair volume n_new·n_ref (self: n²) exceeds cap², with
+    // the bucket size `__n` the refine width derives from (the larger
+    // side's count, identical for both sides' rows, so the sub keys align)
+    // and the min ref-side id `__rep`, the star representative; the
+    // product is taken in double, exact far past cap²
+    def oversized(key: String, t: DataFrame): DataFrame =
+      t.groupBy(col(key)).agg(
+          count(when(col("__new"), 1)).as("__nn"),
+          count(when(col("__ref"), 1)).as("__nr"),
+          min(when(col("__ref"), col("id"))).as("__rep"))
+        .filter(col("__nn").cast("double") * col("__nr") >
+          maxBucketSize.toDouble * maxBucketSize)
+        .select(col(key), greatest(col("__nn"), col("__nr")).as("__n"),
+          col("__rep"))
+    // slim (one row per oversized bucket); the probe materializes it once
+    // for the tag join below
+    val over1 = oversized("bk", rows).persist(storage)
+    if (over1.limit(1).collect().isEmpty) {
       // the banding frames are cheap projections over the callers'
       // persisted bases — recomputing them beats persisting a third frame
-      val out = pairsOn("bk", left, ref).localCheckpoint()
-      occ.unpersist()
+      val out = pairsOn(Seq("bk"), left, right.getOrElse(left)).localCheckpoint()
+      over1.unpersist()
       return out
     }
-    val useBroadcastTag = oversized.length <= broadcastTagMax
-    val tag: DataFrame => DataFrame =
-      if (useBroadcastTag) {
-        val spark = left.sparkSession
-        val oversDf = broadcast(spark.createDataFrame(
-          spark.sparkContext.parallelize(oversized.toIndexedSeq, 1),
-          occ.schema))
-        occ.unpersist()
-        _.join(oversDf, Seq("bk"), "left_outer")
-      } else {
-        val occSide = if (broadcastOcc) broadcast(occ) else occ
-        _.join(occSide, Seq("bk"))
-      }
-    // slim (id + key numerics) and consumed by three branches — fence it so
-    // the occupancy tag runs once, not once per consumer
-    val taggedL = tag(left).persist(storage)
-    val taggedR = if (self) taggedL else tag(ref).persist(storage)
-    val guardCaches =
-      scala.collection.mutable.ListBuffer[DataFrame](taggedL, taggedR).distinct
-    if (!useBroadcastTag) guardCaches += occ
+    // both sides derive the refine width from the same occupancy row, so
+    // the adaptive mask is identical and the sub-keys align across sides;
+    // fenced, as the level-2 aggregate and the tag join both read it
+    val keyed = rows.join(over1, Seq("bk"), "left_outer")
+      .select(col("id"), col("__new"), col("__ref"), struct(col("bk"),
+        when(col("__n").isNull, lit(0L)).otherwise(
+          adaptiveSub(col("sub"), col("__n"), maxBucketSize, refineBits))
+          .as("sub")).as("k"))
+      .persist(storage)
+    // STAR REPAIR: dropping a still-oversized refined bucket outright would
+    // guarantee ZERO recall on exactly the most common real dedup target —
+    // a giant exact-duplicate cluster (identical vectors share every
+    // signature bit, so no amount of re-keying can split them). Pairing the
+    // bucket against its min-id representative keeps cost linear (n−1
+    // pairs) while every identical copy verifies at cosine 1 against the
+    // representative; downstream clustering (nearDupClusters' CC) restores
+    // the full cluster through it. Near-identical members lose only
+    // member↔member edges, never membership. Level 2 counts only refined
+    // rows: a safe bucket's (bk, 0) key is within the cap by definition.
+    val tagged = keyed
+      .join(oversized("k", keyed.filter(col("k.sub") =!= 0L)), Seq("k"), "left_outer")
+      .select(col("id"), col("__new"), col("__ref"), col("k"),
+        col("__rep").isNotNull.as("__star"),
+        (col("__rep").isNull || col("id") === col("__rep")).as("__keep"))
+      .persist(storage)
     try {
-      // under the broadcast tag, safe buckets carry NULL counts
-      val safe =
-        if (useBroadcastTag) col(if (self) "__n" else "__nn").isNull else fits
-      // both sides derive the refine width from the same occupancy row, so
-      // the adaptive mask is identical and the sub-keys align across sides
-      def keyed(t: DataFrame): (DataFrame, DataFrame) = (
-        t.filter(safe)
-          .select(col("id"), struct(col("bk"), lit(0L).as("sub")).as("k")),
-        t.filter(!safe)
-          .select(col("id"), struct(col("bk"),
-            adaptiveSub(col("sub"), bucketSize, maxBucketSize, refineBits)
-              .as("sub")).as("k")))
-      val (directL, refinedL) = keyed(taggedL)
-      val (directR, refinedR) = if (self) (directL, refinedL) else keyed(taggedR)
-      // level-2 occupancy: key count scales with data — plain join (AQE
-      // picks the strategy), NOT a forced broadcast; reused by kept AND star
-      val (occ2Raw, fits2, _) = occupancy("k", "__n2", refinedL, refinedR)
-      val occ2 = occ2Raw.persist(storage)
-      guardCaches += occ2
-      // fence the keyed frames the pair join reads (the self form reads its
-      // one frame on both sides; ReuseExchange only dedupes physically
-      // identical sub-plans, which AQE re-planning breaks)
-      def kept(direct: DataFrame, refined: DataFrame): DataFrame =
-        direct.unionByName(refined.join(occ2, Seq("k")).filter(fits2)
-          .select(col("id"), col("k"))).persist(storage)
-      val keyedL = kept(directL, refinedL)
-      val keyedR = if (self) keyedL else kept(directR, refinedR)
-      guardCaches ++= Seq(keyedL, keyedR).distinct
-      // STAR REPAIR: dropping a still-oversized refined bucket outright would
-      // guarantee ZERO recall on exactly the most common real dedup target —
-      // a giant exact-duplicate cluster (identical vectors share every
-      // signature bit, so no amount of re-keying can split them). Pairing the
-      // bucket against its min-id representative keeps cost linear (n−1
-      // pairs) while every identical copy verifies at cosine 1 against the
-      // representative; downstream clustering (nearDupClusters' CC) restores
-      // the full cluster through it. Near-identical members lose only
-      // member↔member edges, never membership.
-      def dropped(refined: DataFrame) =
-        refined.join(occ2, Seq("k")).filter(!fits2)
-      val rep = dropped(refinedR).groupBy(col("k")).agg(min(col("id")).as("__rep"))
-      val members = dropped(refinedL).join(rep, Seq("k"))
-      val star =
-        if (self) members.filter(col("id") =!= col("__rep"))
-          .select(col("__rep").as(a), col("id").as(b))
-        else members.select(col("id").as(a), col("__rep").as(b))
-      // EAGERLY materialize the slim pair set (localCheckpoint runs the job
-      // now and keeps only the checkpointed blocks) so the guard-internal
-      // persists can be dropped immediately in the finally below —
-      // previously they leaked for the session lifetime, accumulating
-      // executor storage across repeated calls.
-      pairsOn("k", keyedL, keyedR).unionByName(star).localCheckpoint()
-    } finally {
-      guardCaches.foreach(_.unpersist())
-    }
+      // the representative pairs as `a` in the self form (it is the min
+      // id) and as the ref side `b` in the cross form
+      def side(flag: String, repSide: Boolean): DataFrame =
+        tagged.filter(if (repSide) col(flag) && col("__keep") else col(flag))
+      // localCheckpoint runs the pair job now and keeps only its blocks, so
+      // the guard's persists are dropped in the finally below
+      pairsOn(Seq("k", "__star"), side("__new", repSide = self),
+        side("__ref", repSide = !self)).localCheckpoint()
+    } finally Seq(over1, keyed, tagged).foreach(_.unpersist())
   }
 
   /** Occupancy accounting for [[embeddingNearDups]]'s skew guard — the
@@ -1571,8 +1533,7 @@ object Dedup {
       struct(lit(0).as("band"), col("centroid_id").cast("long").as("bucket"))
         .as("bk"),
       (col("__rs").bitwiseAND((1L << refinePlanes) - 1) + 1L).as("sub"))
-    val pairs = guardedPairs(banded, None, maxBucketSize, refinePlanes, storage,
-      broadcastOcc = true)
+    val pairs = guardedPairs(banded, None, maxBucketSize, refinePlanes, storage)
     val cosExpr = graft.functions.GraftFunctions.cosine(s,
       col("v_a"), col("v_b"))
     withPayload(pairs, base, base, "v")

@@ -62,10 +62,13 @@ object Ids {
   def resetIndexFromMapping(ds: GraftDataset, mapping: DataFrame,
       removeUnmapped: Boolean = false): GraftDataset = {
     // normalize the mapping to long columns up front: a caller-supplied
-    // Int mapping (or an empty frame) must not crash the max/getLong path
-    val m = GraftDataset.broadcastIfSmall(mapping.select(
+    // Int mapping (or an empty frame) must not crash the max/getLong path.
+    // The broadcast hint goes only on the frame the two joins read: under
+    // the max aggregate it is not part of a join and Spark drops it.
+    val longMapping = mapping.select(
       col(mapping.columns(0)).cast("long").as("__old_id"),
-      col(mapping.columns(1)).cast("long").as("__new_id")))
+      col(mapping.columns(1)).cast("long").as("__new_id"))
+    val m = GraftDataset.broadcastIfSmall(longMapping)
     val joined = ds.images.join(m, ds.images("id") === col("__old_id"), "left")
     val (mappedImages, annSource) =
       if (removeUnmapped) {
@@ -77,7 +80,7 @@ object Ids {
         // mapping means every row is unmapped → fresh ids from 0).
         // denseIds (range sort + zipWithIndex), NOT a partitionless window —
         // the unmapped set can be the whole table.
-        val maxRow = m.agg(max(col("__new_id"))).collect()(0)
+        val maxRow = longMapping.agg(max(col("__new_id"))).collect()(0)
         val maxMapped = if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)
         val mapped = joined.filter(col("__new_id").isNotNull)
         val unmapped = denseIds(

@@ -588,7 +588,7 @@ class DedupStorageSpec extends SparkFunSuite {
     val freshLevels = spark.sparkContext.getPersistentRDDs.view
       .filterKeys(!before.contains(_)).values.map(_.getStorageLevel).toSeq
     // survivors: base + the localCheckpointed pair blocks — the three
-    // guard-internal persists (tagged/occ2/keyed) must be gone
+    // guard-internal persists (over1/keyed/tagged) must be gone
     assert(freshLevels.size <= 3,
       s"guard caches leaked: ${freshLevels.size} fresh persisted RDDs")
     assert(freshLevels.forall(_.useDisk), s"memory-only persist leaked in: $freshLevels")

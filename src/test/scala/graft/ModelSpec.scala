@@ -114,4 +114,21 @@ class ModelSpec extends SparkFunSuite {
     assert(collectSorted(back.images) == collectSorted(ds.images))
     assert(collectSorted(back.annotations) == collectSorted(ds.annotations))
   }
+
+  test("broadcastIfSmall: a narrower estimator is refused; equal/wider shapes pass") {
+    import spark.implicits._
+    val wide = Seq((1L, "a", 2.0), (2L, "b", 3.0)).toDF("id", "s", "x")
+    val narrow = wide.select("id")
+    // the classic mistake: estimating a wide frame with its key projection
+    // under-counts bytes and silently keeps a throwable hint
+    val e = intercept[IllegalArgumentException] {
+      graft.model.GraftDataset.broadcastIfSmall(wide, estimator = narrow)
+    }
+    assert(e.getMessage.contains("narrower"))
+    // equal-width and wider estimators are valid upper bounds
+    assert(graft.model.GraftDataset
+      .broadcastIfSmall(wide, estimator = wide).count() == 2)
+    assert(graft.model.GraftDataset
+      .broadcastIfSmall(narrow, estimator = wide).count() == 2)
+  }
 }

@@ -8,10 +8,12 @@ import org.apache.spark.storage.StorageLevel
   * right side). At cap 2 the corpus below drives every branch: oversized
   * buckets (the probe fires), refine-splittable near-dups, and an
   * exact-duplicate cluster no re-keying can split (level-2 still over the
-  * cap → star repair). The broadcast-tag regime must equal the forced
-  * shuffle-join fallback (`broadcastTagMax = 0`), every pair must come out
-  * as id_a < id_b, and every cluster copy must pair with the cluster's
-  * min-id representative. The CrossGuardSpec sibling covers the cross form.
+  * cap → star repair). The guard's pairs must equal the pinned set that
+  * both earlier oversized regimes (a broadcast tag of the collected
+  * oversized set, and the shuffle-join fallback) returned on this corpus,
+  * every pair must come out as id_a < id_b, and every cluster copy must
+  * pair with the cluster's min-id representative. The CrossGuardSpec
+  * sibling covers the cross form.
   */
 class BandGuardSpec extends graft.SparkFunSuite {
 
@@ -33,10 +35,18 @@ class BandGuardSpec extends graft.SparkFunSuite {
   private def banded(d: DataFrame) =
     Dedup.minHashBanded(Dedup.minHashBase(d, "text", "doc_id", 32, 3), 32, 8)
 
-  private def run(broadcastTagMax: Int): Set[(Long, Long)] =
+  private def run(): Set[(Long, Long)] =
     Dedup.guardedPairs(banded(docs), None, maxBucketSize = 2, refineBits = 16,
-        storage = StorageLevel.MEMORY_AND_DISK, broadcastTagMax = broadcastTagMax)
+        storage = StorageLevel.MEMORY_AND_DISK)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  // what the broadcast-tag regime and the forced shuffle-join fallback
+  // both returned on this corpus, before they became one tag path: the
+  // cluster's star around id 1 and one star per four-copy edition
+  private val fallbackPairs: Set[(Long, Long)] = Set(
+    1L -> 2L, 1L -> 3L, 1L -> 4L, 1L -> 5L, 1L -> 6L,
+    10L -> 11L, 10L -> 12L, 10L -> 13L, 14L -> 15L, 14L -> 16L, 14L -> 17L,
+    18L -> 19L, 18L -> 20L, 18L -> 21L)
 
   test("self guard: the corpus actually exercises the oversized regime") {
     val oversized = banded(docs).groupBy("bk").agg(count(lit(1)).as("n"))
@@ -47,8 +57,8 @@ class BandGuardSpec extends graft.SparkFunSuite {
   }
 
   test("self guard: broadcast-tag regime is row-identical to the shuffle-join fallback") {
-    val tag = run(broadcastTagMax = 4096) // middle regime
-    val fallback = run(broadcastTagMax = 0) // forced shuffle-join machinery
+    val tag = run() // the one tag path
+    val fallback = fallbackPairs // pinned from both earlier regimes
     assert(tag.nonEmpty, "empty candidate set")
     assert(tag == fallback,
       s"broadcast-tag pairs differ from fallback (only in tag: " +

@@ -3,19 +3,18 @@ package graft.llm
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Round-15, VERDICT item 8: the cross-form occupancy guard gained the
-  * self form's broadcast-tag middle regime (≤ `broadcastTagMax` unsafe
-  * buckets → tag both banding frames with a broadcast of the collected
-  * unsafe set instead of shuffle-joining them against the occupancy
-  * frame). The regimes must be ROW-IDENTICAL: this suite builds a cross
-  * corpus that exercises every branch — oversized shared buckets (the
-  * probe fires), refine-splittable near-dups (distinct sub keys), an
-  * exact-duplicate cluster no re-keying can split (level-2 still over the
-  * cap → star repair), safe satellite buckets, and one-sided buckets
-  * (rows the old inner occupancy join dropped and the broadcast tag's
-  * left_outer keeps — they must never produce pairs) — and asserts the
-  * broadcast-tag output equals the forced shuffle-join fallback
-  * (`broadcastTagMax = 0`) under both `restrictRefBuckets` settings.
+/** The cross form of the occupancy guard ([[Dedup.guardedCrossBandPairs]]).
+  * The guard tags both banding frames with the oversized-bucket set by a
+  * left_outer join in one plan; it must stay ROW-IDENTICAL to the earlier
+  * oversized regimes (a broadcast tag of the collected unsafe set, and the
+  * shuffle join against the occupancy frame). This suite builds a cross
+  * corpus that exercises every branch — oversized shared buckets,
+  * refine-splittable near-dups (distinct sub keys), an exact-duplicate
+  * cluster no re-keying can split (level-2 still over the cap → star
+  * repair), safe satellite buckets, and one-sided buckets (rows an inner
+  * occupancy join drops and the left_outer tag keeps — they must never
+  * produce pairs) — and asserts the guard's output equals the pinned set
+  * both earlier regimes returned, under both `restrictRefBuckets` settings.
   */
 class CrossGuardSpec extends graft.SparkFunSuite {
 
@@ -44,12 +43,20 @@ class CrossGuardSpec extends graft.SparkFunSuite {
     Dedup.minHashBanded(
       Dedup.minHashBase(docs, "text", "doc_id", 32, 3), 32, 8)
 
-  private def run(broadcastTagMax: Int, restrict: Boolean): Set[(Long, Long)] =
+  private def run(restrict: Boolean): Set[(Long, Long)] =
     Dedup.guardedCrossBandPairs(banded(newDocs), banded(refDocs),
         maxBucketSize = 2, refineBits = 16,
-        storage = StorageLevel.MEMORY_AND_DISK,
-        restrictRefBuckets = restrict, broadcastTagMax = broadcastTagMax)
+        storage = StorageLevel.MEMORY_AND_DISK, restrictRefBuckets = restrict)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  // what the broadcast-tag regime and the forced shuffle-join fallback
+  // both returned on this corpus, for either restrictRefBuckets setting,
+  // before they became one tag path: every new copy of an edition pairs
+  // with that edition's min-id ref copy
+  private val fallbackPairs: Set[(Long, Long)] = Set(
+    1000L -> 5000L, 1001L -> 5000L, 1002L -> 5000L, 1003L -> 5000L,
+    1004L -> 5004L, 1005L -> 5004L, 1006L -> 5004L, 1007L -> 5004L,
+    1008L -> 5008L, 1009L -> 5008L, 1010L -> 5008L, 1011L -> 5008L)
 
   test("cross guard: the corpus actually exercises the oversized regime") {
     val occ = banded(newDocs).groupBy("bk").agg(count(lit(1)).as("nn"))
@@ -62,8 +69,8 @@ class CrossGuardSpec extends graft.SparkFunSuite {
 
   test("cross guard: broadcast-tag regime is row-identical to the shuffle-join fallback") {
     for (restrict <- Seq(true, false)) {
-      val tag = run(broadcastTagMax = 4096, restrict) // middle regime
-      val fallback = run(broadcastTagMax = 0, restrict) // forced old machinery
+      val tag = run(restrict) // the one tag path
+      val fallback = fallbackPairs // pinned from both earlier regimes
       assert(tag.nonEmpty, s"restrict=$restrict: empty candidate set")
       assert(tag == fallback,
         s"restrict=$restrict: broadcast-tag pairs differ from fallback " +
