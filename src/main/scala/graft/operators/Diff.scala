@@ -41,6 +41,13 @@ object Diff {
       changedCols.as("changed_columns"))
   }
 
+  /** Ids of the rows both frames hold that disagree on a shared column
+    * (assert_frame_intersections_equal, testing.py:174-211): the `changed`
+    * rows of [[frameDiff]], as one-sided rows are never `changed`. Lazy;
+    * the caller fetches as many as it reports. */
+  def intersectionMismatches(a: DataFrame, b: DataFrame, idCol: String = "id"): DataFrame =
+    frameDiff(a, b, idCol).filter(col("status") === "changed").select(idCol)
+
   /** Three-way dataset diff (difftools.py:10-186): datasets of rows only in
     * `a`, only in `b`, and common-but-changed (images or their annotations
     * differ). Returned as (leftOnly, rightOnly, changed) image-id keyed
@@ -52,7 +59,7 @@ object Diff {
       excludeImageColumns: Seq[String] = Nil,
       excludeAnnotationsColumns: Seq[String] = Nil): DatasetDiff = {
     val imgDiff = frameDiff(a.images, b.images,
-      excludeColumns = excludeImageColumns).cache()
+      excludeColumns = excludeImageColumns)
     // annotation-level changes roll up to their image
     val annDiff = frameDiff(a.annotations, b.annotations,
       excludeColumns = excludeAnnotationsColumns)

@@ -68,6 +68,17 @@ object Ids {
     val longMapping = mapping.select(
       col(mapping.columns(0)).cast("long").as("__old_id"),
       col(mapping.columns(1)).cast("long").as("__new_id"))
+    remapImageIds(ds, longMapping, removeUnmapped, {
+      val maxRow = longMapping.agg(max(col("__new_id"))).collect()(0)
+      if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)
+    })
+  }
+
+  /** [[resetIndexFromMapping]] over a long `(__old_id, __new_id)` mapping
+    * whose max new id (-1 when empty) is `maxMapped`, evaluated only when
+    * unmapped images get fresh ids. */
+  private def remapImageIds(ds: GraftDataset, longMapping: DataFrame,
+      removeUnmapped: Boolean, maxMapped: => Long): GraftDataset = {
     val m = GraftDataset.broadcastIfSmall(longMapping)
     val joined = ds.images.join(m, ds.images("id") === col("__old_id"), "left")
     val (mappedImages, annSource) =
@@ -80,8 +91,6 @@ object Ids {
         // mapping means every row is unmapped → fresh ids from 0).
         // denseIds (range sort + zipWithIndex), NOT a partitionless window —
         // the unmapped set can be the whole table.
-        val maxRow = longMapping.agg(max(col("__new_id"))).collect()(0)
-        val maxMapped = if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)
         val mapped = joined.filter(col("__new_id").isNotNull)
         val unmapped = denseIds(
           joined.filter(col("__new_id").isNull).drop("__new_id"),
@@ -111,13 +120,14 @@ object Ids {
     df.withColumn(idCol, monotonically_increasing_id())
 
   /** Shift all ids by a constant (merge collision handling,
-    * merge.py:199-203). */
-  def shiftIds(ds: GraftDataset, imageOffset: Long, annotationOffset: Long): GraftDataset =
+    * merge.py:199-203). A zero offset leaves its columns untouched. */
+  def shiftIds(ds: GraftDataset, imageOffset: Long, annotationOffset: Long): GraftDataset = {
+    def shift(df: DataFrame, c: String, by: Long) =
+      if (by == 0L) df else df.withColumn(c, col(c) + by)
     ds.copy(
-      images = ds.images.withColumn("id", col("id") + imageOffset),
-      annotations = ds.annotations
-        .withColumn("id", col("id") + annotationOffset)
-        .withColumn("image_id", col("image_id") + imageOffset))
+      images = shift(ds.images, "id", imageOffset),
+      annotations = shift(shift(ds.annotations, "id", annotationOffset), "image_id", imageOffset))
+  }
 
   /** Realign this dataset's image ids to another's by joining on an anchor
     * column, e.g. relative_path (match_index, dataset.py:2203-2334).
@@ -131,18 +141,23 @@ object Ids {
       .agg(count(lit(1)).as("__lc"), first("id").as("__old"))
     val r = other.images.groupBy(col(s"`$on`").as("__anchor"))
       .agg(count(lit(1)).as("__rc"), first("id").as("__new"))
-    // localCheckpoint, not cache: consumed by two actions here, and a
-    // CacheManager entry would pin executor memory for the session —
-    // checkpoint blocks are freed when the frame is garbage-collected
+    // localCheckpoint, not cache: read by the probe here and by the
+    // result's plan, and a CacheManager entry would pin executor memory for
+    // the session — checkpoint blocks are freed when the frame is
+    // garbage-collected. The probe also carries the max matched new id,
+    // where unmatched images' fresh ids start.
     val joined = l.join(r, Seq("__anchor"), "full_outer").localCheckpoint()
-    val mx = joined.agg(max("__lc"), max("__rc")).collect()(0)
+    val mx = joined.agg(max("__lc"), max("__rc"),
+      max(when(col("__old").isNotNull, col("__new")))).collect()(0)
     require(mx.isNullAt(0) || mx.getLong(0) <= 1,
       s"match_index: anchor column '$on' not unique on left side")
     require(mx.isNullAt(1) || mx.getLong(1) <= 1,
       s"match_index: anchor column '$on' not unique on right side")
     val mapping = joined
       .filter(col("__old").isNotNull && col("__new").isNotNull)
-      .select(col("__old"), col("__new"))
-    resetIndexFromMapping(ds, mapping, removeUnmapped = removeUnmatched)
+      .select(col("__old").cast("long").as("__old_id"),
+        col("__new").cast("long").as("__new_id"))
+    remapImageIds(ds, mapping, removeUnmatched,
+      if (mx.isNullAt(2)) -1L else mx.getLong(2))
   }
 }

@@ -53,19 +53,24 @@ object Locators {
 
   /** Filter annotations; optionally drop images *emptied by this filter*
     * while keeping images that had no annotations to begin with
-    * (indexing.py:106-119): kept = (images ⋉ newAnnots) ∪ (images ▷ oldAnnots).
-    */
+    * ([[notEmptiedImages]]). */
   def filterAnnotations(ds: GraftDataset, pred: Column,
       removeEmptiedImages: Boolean = false): GraftDataset = {
     val newAnn = ds.annotations.filter(pred)
     if (!removeEmptiedImages) ds.copy(annotations = newAnn)
-    else {
-      val stillHas = ds.images.join(newAnn.select(col("image_id")),
-        ds.images("id") === col("image_id"), "left_semi")
-      val wasEmpty = ds.images.join(ds.annotations.select(col("image_id")),
-        ds.images("id") === col("image_id"), "left_anti")
-      ds.copy(images = stillHas.unionByName(wasEmpty), annotations = newAnn)
-    }
+    else ds.copy(images = notEmptiedImages(ds, newAnn), annotations = newAnn)
+  }
+
+  /** The emptied-image cascade (indexing.py:106-119): the images of `ds`
+    * that still have an annotation in `keptAnnotations`, plus those that had
+    * none to begin with — (images ⋉ kept) ∪ (images ▷ ds.annotations). */
+  private[operators] def notEmptiedImages(ds: GraftDataset,
+      keptAnnotations: DataFrame): DataFrame = {
+    val stillHas = ds.images.join(keptAnnotations.select(col("image_id")),
+      ds.images("id") === col("image_id"), "left_semi")
+    val wasEmpty = ds.images.join(ds.annotations.select(col("image_id")),
+      ds.images("id") === col("image_id"), "left_anti")
+    stillHas.unionByName(wasEmpty)
   }
 
   /** Keep images that have at least one annotation
@@ -124,14 +129,7 @@ object Locators {
     }
     val newAnn = joined.filter(valid).drop("__iid", "__w", "__h")
     if (!removeEmptiedImages) ds.copy(annotations = newAnn)
-    else {
-      // same emptied-image cascade as filterAnnotations (indexing.py:106-119)
-      val stillHas = ds.images.join(newAnn.select(col("image_id")),
-        ds.images("id") === col("image_id"), "left_semi")
-      val wasEmpty = ds.images.join(ds.annotations.select(col("image_id")),
-        ds.images("id") === col("image_id"), "left_anti")
-      ds.copy(images = stillHas.unionByName(wasEmpty), annotations = newAnn)
-    }
+    else ds.copy(images = notEmptiedImages(ds, newAnn), annotations = newAnn)
   }
 
   /** Error-report table for malformed boxes (get_malformed_bounding_boxes,
@@ -169,13 +167,7 @@ object LocatorsExtra {
         (col("__pos") - start) % step === 0)
       .drop("__pos")
     if (!removeEmptiedImages) ds.copy(annotations = kept)
-    else {
-      val stillHas = ds.images.join(kept.select(col("image_id")),
-        ds.images("id") === col("image_id"), "left_semi")
-      val wasEmpty = ds.images.join(ds.annotations.select(col("image_id")),
-        ds.images("id") === col("image_id"), "left_anti")
-      ds.copy(images = stillHas.unionByName(wasEmpty), annotations = kept)
-    }
+    else ds.copy(images = Locators.notEmptiedImages(ds, kept), annotations = kept)
   }
 
   /** Union of many datasets — the `sum(datasets)` convenience

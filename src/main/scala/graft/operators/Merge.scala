@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * booleanized families aligned, dataset names concatenated `A+B`.
   *
   * All of it is joins + `unionByName` — no collects, distributes at any
-  * scale. The id-overlap detection and id-offset computation are two tiny
-  * aggregates.
+  * scale. Each operator reads its id offsets (and, for [[merge]], the
+  * overlap check) from one one-row probe with one action.
   */
 object Merge {
 
@@ -26,7 +26,9 @@ object Merge {
   def union(a0: GraftDataset, b0: GraftDataset): GraftDataset = {
     val (a, b) = reconcileRoots(a0, b0)
     val mergedLabels = LabelMaps.mergeOuter(a.labelMap, b.labelMap)
-    val bShifted = shiftIfColliding(a, b)
+    val offsets = shiftPast(a.images, b.images)
+      .crossJoin(shiftPast(a.annotations, b.annotations)).head()
+    val bShifted = Ids.shiftIds(b, offsets.getLong(0), offsets.getLong(1))
     val (ai, bi) = Booleanize.alignBoolFamilies(
       a.images, bShifted.images,
       a.booleanized("images"), bShifted.booleanized("images"))
@@ -57,18 +59,16 @@ object Merge {
     // plain merge raises IncompatibleLabelMapsError before any row check) —
     // also what [[plus]]'s realign-then-retry fallback dispatches on
     val mergedLabels = LabelMaps.mergeOuter(a.labelMap, b.labelMap)
+    // one action: the annotation offset and up to 3 disagreeing overlap ids
+    val probe = shiftPast(a.annotations, b.annotations)
+      .crossJoin(Diff.intersectionMismatches(a.images, b.images).limit(3)
+        .agg(collect_list(col("id"))))
+      .head()
+    val bad = probe.getSeq[Any](1)
+    require(bad.isEmpty,
+      "merge: overlapping images disagree on shared columns, ids: " + bad.mkString(", "))
     val commonIds = a.images.select("id").intersect(b.images.select("id"))
     val newCols = b.images.columns.filterNot(a.images.columns.contains).toSeq
-    val shared = a.images.columns.toSet.intersect(b.images.columns.toSet) - "id"
-    if (shared.nonEmpty) {
-      val bad = Diff.frameDiff(
-        a.images.join(commonIds, Seq("id"), "left_semi"),
-        b.images.join(commonIds, Seq("id"), "left_semi"))
-        .filter(col("status") === "changed").limit(3).collect()
-      require(bad.isEmpty,
-        "merge: overlapping images disagree on shared columns, ids: " +
-          bad.map(_.get(0)).mkString(", "))
-    }
 
     // overlapping ids: left rows + right's new columns
     val bCommon = b.images.join(commonIds, Seq("id"), "left_semi")
@@ -84,7 +84,7 @@ object Merge {
     val images = aImgAligned.unionByName(bImgAligned, allowMissingColumns = true)
 
     // annotations: concat with right ids shifted past left max on collision
-    val bAnnShifted = shiftAnnotationsIfColliding(a, b)
+    val bAnnShifted = Ids.shiftIds(b, 0L, probe.getLong(0)).annotations
     val (aAnnAligned, bAnnAligned) = Booleanize.alignBoolFamilies(
       a.annotations, bAnnShifted,
       a.booleanized("annotations"), b.booleanized("annotations"))
@@ -172,32 +172,16 @@ object Merge {
       case (x, y) => x.orElse(y)
     }
 
-  /** Shift b's image AND annotation ids past a's maxima when they collide
-    * (merge.py:199-203). Collision test + offsets = four tiny aggregates. */
-  private def shiftIfColliding(a: GraftDataset, b: GraftDataset): GraftDataset = {
-    val imgCollides = b.images.join(a.images.select("id"), Seq("id"), "left_semi")
-      .limit(1).count() > 0
-    val annCollides = b.annotations.join(a.annotations.select("id"), Seq("id"), "left_semi")
-      .limit(1).count() > 0
-    if (!imgCollides && !annCollides) b
-    else {
-      val imgOff = if (imgCollides) offsetPast(a.images, b.images) else 0L
-      val annOff = if (annCollides) offsetPast(a.annotations, b.annotations) else 0L
-      Ids.shiftIds(b, imgOff, annOff)
-    }
-  }
-
-  private def shiftAnnotationsIfColliding(a: GraftDataset, b: GraftDataset): DataFrame = {
-    val collides = b.annotations.join(a.annotations.select("id"), Seq("id"), "left_semi")
-      .limit(1).count() > 0
-    if (!collides) b.annotations
-    else b.annotations.withColumn("id", col("id") + offsetPast(a.annotations, b.annotations))
-  }
-
-  /** offset = max(left.id) - min(right.id) + 1 (merge.py:199-203). */
-  private def offsetPast(left: DataFrame, right: DataFrame): Long = {
-    val maxL = left.agg(max("id")).collect()(0).getLong(0)
-    val minR = right.agg(min("id")).collect()(0).getLong(0)
-    maxL - minR + 1
+  /** The offset that moves `right`'s ids past `left`'s (merge.py:199-203):
+    * `max(left.id) - min(right.id) + 1` when a semi-join finds a shared id,
+    * else 0 — so also 0 when either side is empty. A one-row frame, so an
+    * operator reads all its probes with one action. */
+  private def shiftPast(left: DataFrame, right: DataFrame): DataFrame = {
+    val shared = right.select("id").join(left.select("id"), Seq("id"), "left_semi").limit(1)
+    left.agg(max("id").as("max_l"))
+      .crossJoin(right.agg(min("id").as("min_r")))
+      .crossJoin(shared.agg(count(lit(1)).as("shared")))
+      .select(when(col("shared") > 0, col("max_l") - col("min_r") + 1)
+        .otherwise(0L))
   }
 }

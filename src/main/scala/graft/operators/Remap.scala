@@ -58,15 +58,7 @@ object Remap {
         GraftDataset.labelMapColumn(newLabelMap, col("category_id")))
     val out = ds.copy(annotations = remapped, labelMap = newLabelMap)
     if (!removeEmptiedImages) out
-    else {
-      // standard emptied-image cascade (indexing.py:106-119): keep images that
-      // still have annotations plus images that were empty before the remap
-      val stillHas = ds.images.join(remapped.select(col("image_id")),
-        ds.images("id") === col("image_id"), "left_semi")
-      val wasEmpty = ds.images.join(ds.annotations.select(col("image_id")),
-        ds.images("id") === col("image_id"), "left_anti")
-      out.copy(images = stillHas.unionByName(wasEmpty))
-    }
+    else out.copy(images = Locators.notEmptiedImages(ds, remapped))
   }
 
   /** Keep only the given classes (identity remap on the kept subset) —

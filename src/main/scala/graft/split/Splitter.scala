@@ -43,11 +43,12 @@ object Splitter {
       shares: Seq[Double] = Seq(0.8, 0.2)): GraftDataset = {
     require(names.length == shares.length && math.abs(shares.sum - 1.0) < 1e-9,
       "shares must match names and sum to 1")
-    val total = ds.images.count()
-    val existing = ds.images.filter(col("split").isNotNull)
-      .groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val unassigned = total - existing.values.sum
+    // one probe: per-split counts, the null group being the unassigned rows
+    val counts = ds.images.groupBy("split").count().collect()
+      .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    val total = counts.values.sum
+    val unassigned = counts.getOrElse(None, 0L)
+    val existing = counts.collect { case (Some(n), c) => n -> c }
     val residual = names.zip(shares).map { case (n, s) =>
       n -> math.max(0.0, s * total - existing.getOrElse(n, 0L).toDouble)
     }

@@ -44,11 +44,7 @@ object Validation {
     * (assert_frame_intersections_equal, testing.py:174-211). */
   def assertFrameIntersectionsEqual(a: DataFrame, b: DataFrame,
       idCol: String = "id"): Unit = {
-    val commonIds = a.select(idCol).intersect(b.select(idCol))
-    val aa = a.join(commonIds, Seq(idCol), "left_semi")
-    val bb = b.join(commonIds, Seq(idCol), "left_semi")
-    val bad = Diff.frameDiff(aa, bb, idCol)
-      .filter(col("status") === "changed").limit(5).collect()
+    val bad = Diff.intersectionMismatches(a, b, idCol).limit(5).collect()
     require(bad.isEmpty,
       s"intersecting rows differ on ids: ${bad.map(_.get(0)).mkString(", ")}")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.eval._
+import graft.operators.Grouper
 import org.apache.spark.sql.functions._
 
 class MatchingSpec extends SparkFunSuite {
@@ -221,6 +222,19 @@ class EvaluatorSpec extends SparkFunSuite {
     assert(prD8.count() == prExact.count())
     assert(apD8.collect().head.getAs[Double]("AP") == a)
   }
+
+  test("matches cache distinguishes minIou thresholds") {
+    val images = Seq((0L, 100, 100, "a.jpg")).toDF("id", "width", "height", "relative_path")
+    val gt = Seq((0L, 0L, 0, 0.0, 0.0, 10.0, 10.0))
+      .toDF("id", "image_id", "category_id", "box_x_min", "box_y_min", "box_width", "box_height")
+    val preds = Seq((10L, 0L, 0, 0.0, 0.0, 20.0, 10.0, 0.9)) // iou 0.5
+      .toDF("id", "image_id", "category_id", "box_x_min", "box_y_min", "box_width", "box_height", "confidence")
+    val ev = new graft.eval.DetectionEvaluator(images, gt, Map("m" -> preds), Map(0 -> "x"))
+    val loose = ev.matches("m", minIou = 0.0).collect()
+    val strict = ev.matches("m", minIou = 0.5).collect()
+    assert(loose.exists(r => r.prediction_id.isDefined && r.groundtruth_id.isDefined))
+    assert(!strict.exists(r => r.prediction_id.isDefined && r.groundtruth_id.isDefined))
+  }
 }
 
 class GroupedPrSpec extends SparkFunSuite {
@@ -256,6 +270,29 @@ class GroupedPrSpec extends SparkFunSuite {
       .toDF("id", "image_id", "category_id", "box_x_min", "box_y_min", "box_width", "box_height", "confidence")
     val ev = new graft.eval.DetectionEvaluator(images, gt, Map("m" -> badPreds), Map(0 -> "x"))
     intercept[IllegalArgumentException](ev.validatePredictions("m"))
+  }
+
+  test("grouped PR with a continuous group bins gt and FP rows compatibly") {
+    val images = Seq((0L, 1000, 1000, "a.jpg")).toDF("id", "width", "height", "relative_path")
+    // gt heights span 10..100; pred (FP) heights span 300..400 — with
+    // per-table binning these would get disjoint labels
+    val gt = Seq(
+      (0L, 0L, 0, 0.0, 0.0, 10.0, 10.0),
+      (1L, 0L, 0, 200.0, 200.0, 10.0, 100.0)
+    ).toDF("id", "image_id", "category_id", "box_x_min", "box_y_min", "box_width", "box_height")
+    val preds = Seq(
+      (10L, 0L, 0, 0.0, 0.0, 10.0, 10.0, 0.9),    // TP on gt0
+      (11L, 0L, 0, 500.0, 500.0, 10.0, 400.0, 0.8) // FP, tall box
+    ).toDF("id", "image_id", "category_id", "box_x_min", "box_y_min", "box_width", "box_height", "confidence")
+    val ev = new graft.eval.DetectionEvaluator(images, gt, Map("m" -> preds), Map(0 -> "x"))
+    val (pr, _) = ev.precisionRecallGrouped("m",
+      Seq(Grouper.ContinuousGroup("box_height", 2, labelType = Grouper.BinIndexLabel)),
+      minIou = 0.5)
+    // combined range 10..400, 2 bins → split at 205: gt0+pred10 bin 0,
+    // gt1 bin 0, FP(400) bin 1 — FP lands in a REAL bin of the shared scale
+    val bins = pr.select("box_height").distinct().collect()
+      .map(r => if (r.isNullAt(0)) -1 else r.getInt(0)).sorted
+    assert(bins.toSeq == Seq(0, 1), s"bins were $bins")
   }
 }
 

@@ -45,6 +45,7 @@ class LocatorsSpec extends SparkFunSuite {
 }
 
 class MergeDiffSpec extends SparkFunSuite {
+  import spark.implicits._
 
   test("union shifts colliding ids past the left max") {
     val ds = tinyDataset()
@@ -121,6 +122,131 @@ class MergeDiffSpec extends SparkFunSuite {
     assert(d.rightOnly.numImages == 0)
     assert(d.changed.images.select("id").collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
+
+  test("merge rejects overlapping images that disagree on shared columns") {
+    val ds = tinyDataset()
+    val conflicting = ds.copy(
+      images = ds.images.withColumn("width", col("width") + 1),
+      annotations = ds.annotations.limit(0))
+    intercept[IllegalArgumentException](Merge.merge(ds, conflicting))
+    // agreeing intersection still merges
+    val extra = ds.copy(
+      images = ds.images.withColumn("camera", lit("c")),
+      annotations = ds.annotations.limit(0))
+    assert(Merge.merge(ds, extra).images.columns.contains("camera"))
+  }
+
+  test("resetIndexFromMapping handles empty and Int-typed mappings") {
+    val ds = tinyDataset()
+    val emptyMap = Seq.empty[(Long, Long)].toDF("old_id", "new_id")
+    val out = Ids.resetIndexFromMapping(ds, emptyMap, removeUnmapped = false)
+    assert(out.numImages == 4) // all rows unmapped → fresh ids from 0
+    assert(out.images.select("id").distinct().count() == 4)
+    val intMap = Seq((0, 100), (1, 101)).toDF("old_id", "new_id")
+    val out2 = Ids.resetIndexFromMapping(ds, intMap, removeUnmapped = true)
+    assert(out2.images.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(100L, 101L))
+  }
+
+  test("matchIndex remaps via the anchor column and rejects dup anchors") {
+    val ds = tinyDataset()
+    val other = ds.copy(images = ds.images.withColumn("id", col("id") + 100))
+    val out = Ids.matchIndex(ds, other, on = "relative_path")
+    assert(out.images.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
+      ds.images.select("id").collect().map(_.getLong(0) + 100).sorted.toSeq)
+    // annotations follow their images
+    assert(out.annotations.select("image_id").distinct().collect()
+      .map(_.getLong(0)).forall(_ >= 100))
+    val dup = ds.copy(images = ds.images.withColumn("relative_path", lit("same.jpg")))
+    intercept[IllegalArgumentException](Ids.matchIndex(dup, other))
+    intercept[IllegalArgumentException](Ids.matchIndex(ds, dup.copy(
+      images = dup.images.withColumn("id", col("id") + 100))))
+  }
+
+  /** Distinct `spark.sql.execution.id`s of the jobs `f` runs, read from the
+    * job-start events of its job group. The listener bus is asynchronous,
+    * so a sentinel job in another group runs after `f`, and the wait (under
+    * a deadline) ends when its start arrives: the bus is FIFO, so every
+    * event of `f` has been delivered by then. */
+  private def executionsOf(f: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"merge-probe-${System.nanoTime()}"
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        p.flatMap(q => Option(q.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) =>
+            execs.add(p.flatMap(q => Option(q.getProperty("spark.sql.execution.id")))
+              .getOrElse("none"))
+          case Some(g) if g == group + "-drain" => drained.set(true)
+          case _ =>
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "merge probe count")
+      f
+      sc.setJobGroup(group + "-drain", "listener bus drain")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!drained.get() && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(drained.get(), "listener bus did not drain within 30 s")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    execs.toArray.map(_.toString).distinct.toSeq
+  }
+
+  test("union and merge each build with one action") {
+    val ds = tinyDataset()
+    // union(ds, ds): image and annotation ids both collide
+    val u = executionsOf(Merge.union(ds, ds))
+    assert(u.size == 1 && u.head != "none", s"union ran executions $u")
+    // merge(ds, ds): the images agree, the annotation ids collide
+    val m = executionsOf(Merge.merge(ds, ds))
+    assert(m.size == 1 && m.head != "none", s"merge ran executions $m")
+  }
+
+  test("union shifts exactly the colliding table by maxL - minR + 1") {
+    val a = tinyDataset() // images 0..3, annotations 0..5
+    def ids(df: org.apache.spark.sql.DataFrame, c: String): Seq[Long] =
+      df.select(c).collect().map(_.getLong(0)).sorted.toSeq
+    // only annotation ids collide: b's annotations 3..8 move by 5 - 3 + 1
+    val annOnly = a.copy(
+      images = a.images.withColumn("id", col("id") + 10),
+      annotations = a.annotations.withColumn("id", col("id") + 3)
+        .withColumn("image_id", col("image_id") + 10))
+    val u1 = Merge.union(a, annOnly)
+    assert(ids(u1.images, "id") == Seq(0L, 1L, 2L, 3L, 10L, 11L, 12L, 13L))
+    assert(ids(u1.annotations, "id") == (0L to 5L) ++ (6L to 11L))
+    assert(ids(u1.annotations.filter(col("image_id") >= 10), "image_id") ==
+      ids(annOnly.annotations, "image_id"))
+    u1.validated() // FK holds
+    assert(ids(Merge.merge(a, annOnly).annotations, "id") == (0L to 5L) ++ (6L to 11L))
+    // only image ids collide: b's images 2..5 move by 3 - 2 + 1, their
+    // annotations follow, and the annotation ids stay as they were
+    val imgOnly = a.copy(
+      images = a.images.withColumn("id", col("id") + 2),
+      annotations = a.annotations.withColumn("id", col("id") + 100)
+        .withColumn("image_id", col("image_id") + 2))
+    val u2 = Merge.union(a, imgOnly)
+    assert(ids(u2.images, "id") == (0L to 7L))
+    assert(ids(u2.annotations, "id") == (0L to 5L) ++ (100L to 105L))
+    assert(ids(u2.annotations.filter(col("id") >= 100), "image_id") ==
+      ids(a.annotations, "image_id").map(_ + 4))
+    u2.validated()
+  }
+
+  test("datasetDiff leaves no cached relation behind") {
+    Sessions.resetStorage(spark)
+    val a = tinyDataset()
+    val b = a.copy(images = a.images.withColumn("width", col("width") + 1))
+    assert(Diff.datasetDiff(a, b).changed.images.count() == 4)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }
 
 class BooleanizeSpec extends SparkFunSuite {
@@ -153,6 +279,14 @@ class BooleanizeSpec extends SparkFunSuite {
     assert(a2.columns.toSet == Set("id", "tags.red", "tags.blue"))
     assert(b2.columns.toSet == Set("id", "tags.red", "tags.blue"))
     assert(a2.collect()(0).getAs[Boolean]("tags.blue") == false)
+  }
+
+  test("alignBoolFamilies leaves foreign families absent") {
+    val a = Seq((0L, "x")).toDF("id", "other")           // never booleanized
+    val b = Seq((1L, true)).toDF("id", "tags.red")        // has tags family
+    val (a2, b2) = Booleanize.alignBoolFamilies(a, b, Set.empty, Set("tags"))
+    assert(!a2.columns.contains("tags.red")) // stays absent → null after union
+    assert(b2.columns.contains("tags.red"))
   }
 }
 
@@ -315,6 +449,22 @@ class GrouperSpec extends SparkFunSuite {
     assert(h.filter(col("split") === "valid" && col("category_id") === 1)
       .select("count").collect()(0).getLong(0) == 0L)
   }
+
+  test("qcut binning of constant data yields a single bin, not a crash") {
+    val df = Seq(5.0, 5.0, 5.0).toDF("v")
+    val edges = Grouper.binEdges(df, Grouper.ContinuousGroup("v", 4, qcut = true))
+    val out = df.select(Grouper.binIndex(col("v"), edges).as("b")).collect()
+    assert(out.forall(_.getInt(0) == 0))
+  }
+
+  test("histogram preserves null-group counts (null-safe join)") {
+    val df = Seq((null.asInstanceOf[String], 1), ("a", 1), ("a", 2))
+      .toDF("g", "v")
+    val h = Grouper.histogram(df, Seq("g")).collect()
+      .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(h(None) == 1L, "null group count lost")
+    assert(h(Some("a")) == 2L)
+  }
 }
 
 class BboxSpec extends SparkFunSuite {
@@ -367,79 +517,6 @@ class BboxSpec extends SparkFunSuite {
     val v = df.select(Bbox.iou(col("x1"), col("y1"), col("w1"), col("h1"),
       col("x2"), col("y2"), col("w2"), col("h2")).as("iou")).collect()(0).getDouble(0)
     assert(math.abs(v - 50.0 / 150.0) < 1e-12)
-  }
-}
-
-class ReviewFixesSpec extends SparkFunSuite {
-  import spark.implicits._
-  import graft.operators._
-  import graft.model.GraftDataset
-
-  test("merge rejects overlapping images that disagree on shared columns") {
-    val ds = tinyDataset()
-    val conflicting = ds.copy(
-      images = ds.images.withColumn("width", col("width") + 1),
-      annotations = ds.annotations.limit(0))
-    intercept[IllegalArgumentException](Merge.merge(ds, conflicting))
-    // agreeing intersection still merges
-    val extra = ds.copy(
-      images = ds.images.withColumn("camera", lit("c")),
-      annotations = ds.annotations.limit(0))
-    assert(Merge.merge(ds, extra).images.columns.contains("camera"))
-  }
-
-  test("resetIndexFromMapping handles empty and Int-typed mappings") {
-    val ds = tinyDataset()
-    val emptyMap = Seq.empty[(Long, Long)].toDF("old_id", "new_id")
-    val out = Ids.resetIndexFromMapping(ds, emptyMap, removeUnmapped = false)
-    assert(out.numImages == 4) // all rows unmapped → fresh ids from 0
-    assert(out.images.select("id").distinct().count() == 4)
-    val intMap = Seq((0, 100), (1, 101)).toDF("old_id", "new_id")
-    val out2 = Ids.resetIndexFromMapping(ds, intMap, removeUnmapped = true)
-    assert(out2.images.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(100L, 101L))
-  }
-
-  test("matchIndex remaps via the anchor column and rejects dup anchors") {
-    val ds = tinyDataset()
-    val other = ds.copy(images = ds.images.withColumn("id", col("id") + 100))
-    val out = Ids.matchIndex(ds, other, on = "relative_path")
-    assert(out.images.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
-      ds.images.select("id").collect().map(_.getLong(0) + 100).sorted.toSeq)
-    // annotations follow their images
-    assert(out.annotations.select("image_id").distinct().collect()
-      .map(_.getLong(0)).forall(_ >= 100))
-    val dup = ds.copy(images = ds.images.withColumn("relative_path", lit("same.jpg")))
-    intercept[IllegalArgumentException](Ids.matchIndex(dup, other))
-    intercept[IllegalArgumentException](Ids.matchIndex(ds, dup.copy(
-      images = dup.images.withColumn("id", col("id") + 100))))
-  }
-
-  test("matches cache distinguishes minIou thresholds") {
-    val images = Seq((0L, 100, 100, "a.jpg")).toDF("id", "width", "height", "relative_path")
-    val gt = Seq((0L, 0L, 0, 0.0, 0.0, 10.0, 10.0))
-      .toDF("id", "image_id", "category_id", "box_x_min", "box_y_min", "box_width", "box_height")
-    val preds = Seq((10L, 0L, 0, 0.0, 0.0, 20.0, 10.0, 0.9)) // iou 0.5
-      .toDF("id", "image_id", "category_id", "box_x_min", "box_y_min", "box_width", "box_height", "confidence")
-    val ev = new graft.eval.DetectionEvaluator(images, gt, Map("m" -> preds), Map(0 -> "x"))
-    val loose = ev.matches("m", minIou = 0.0).collect()
-    val strict = ev.matches("m", minIou = 0.5).collect()
-    assert(loose.exists(r => r.prediction_id.isDefined && r.groundtruth_id.isDefined))
-    assert(!strict.exists(r => r.prediction_id.isDefined && r.groundtruth_id.isDefined))
-  }
-
-  test("alignBoolFamilies leaves foreign families absent") {
-    val a = Seq((0L, "x")).toDF("id", "other")           // never booleanized
-    val b = Seq((1L, true)).toDF("id", "tags.red")        // has tags family
-    val (a2, b2) = Booleanize.alignBoolFamilies(a, b, Set.empty, Set("tags"))
-    assert(!a2.columns.contains("tags.red")) // stays absent → null after union
-    assert(b2.columns.contains("tags.red"))
-  }
-
-  test("qcut binning of constant data yields a single bin, not a crash") {
-    val df = Seq(5.0, 5.0, 5.0).toDF("v")
-    val edges = Grouper.binEdges(df, Grouper.ContinuousGroup("v", 4, qcut = true))
-    val out = df.select(Grouper.binIndex(col("v"), edges).as("b")).collect()
-    assert(out.forall(_.getInt(0) == 0))
   }
 }
 

@@ -164,4 +164,25 @@ class SplitterSpec extends SparkFunSuite {
     assert(fast(2L) == 2L)
     assert(fast(3L) == 3L) // null key: own atom
   }
+
+  test("splitter balances when a split starts with a missing bin (inf KL handling)") {
+    // categories 0/1; pre-assign one atom of pure category 0 to 'valid' so
+    // valid's hist lacks category 1 → KL inf; greedy must still fill it
+    val images = spark.range(100).select(col("id"),
+      lit(10).as("width"), lit(10).as("height"),
+      concat(lit("i"), col("id")).as("relative_path"),
+      when(col("id") === 0, "valid").otherwise(lit(null).cast("string")).as("split"))
+    val ann = spark.range(400).select(col("id"),
+      (col("id") % 100).as("image_id"),
+      (col("id") % 2).cast("int").as("category_id"),
+      lit(1.0).as("box_x_min"), lit(1.0).as("box_y_min"),
+      lit(2.0).as("box_width"), lit(2.0).as("box_height"))
+    val ds = graft.model.GraftDataset.create(images, ann, Map(0 -> "a", 1 -> "b"))
+    val out = graft.split.Splitter.split(ds, seed = 5, Seq("train", "valid"), Seq(0.5, 0.5),
+      keepBalanced = Seq(Grouper.CategoricalGroup("category_id")))
+    val counts = out.annotations.groupBy("split", "category_id").count().collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    // valid must end up containing BOTH categories
+    assert(counts.getOrElse(("valid", 1), 0L) > 0L, s"valid never got category 1: $counts")
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import graft.streaming.EventStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class StreamingSpec extends SparkFunSuite {
   import spark.implicits._
@@ -71,6 +73,39 @@ class StreamingSpec extends SparkFunSuite {
     assert(sessions(0).n_events == 2 && sessions(0).user_id == 1)
     assert(sessions(1).n_events == 1)
     assert(sessions(2).user_id == 2 && sessions(2).total_value == 1.0)
+  }
+
+  test("streaming sessionize keeps sessions open across micro-batches") {
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[EventStream.Event]
+    val sessions = EventStream.sessionizeStream(
+      source.toDS().withWatermark("ts", "0 seconds").as[EventStream.Event],
+      gapMs = 30 * 60 * 1000L)
+    val q = sessions.writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName("sess_stream").start()
+    try {
+      def ev(id: Long, t: String, u: Long) =
+        EventStream.Event(id, java.sql.Timestamp.valueOf(t), u, "e", 1.0)
+      // batch 1: two events 5 min apart — session must stay OPEN
+      source.addData(ev(0, "2024-01-01 00:00:00", 1), ev(1, "2024-01-01 00:05:00", 1))
+      q.processAllAvailable()
+      assert(spark.table("sess_stream").count() == 0, "session closed too early")
+      // batch 2: a third event within the gap extends the same session
+      source.addData(ev(2, "2024-01-01 00:20:00", 1))
+      q.processAllAvailable()
+      assert(spark.table("sess_stream").count() == 0)
+      // batch 3: far-future event advances the watermark past the deadline →
+      // the first session closes with ALL THREE events (not split per batch)
+      source.addData(ev(3, "2024-01-01 03:00:00", 1))
+      q.processAllAvailable()
+      source.addData(ev(4, "2024-01-01 06:00:00", 1))
+      q.processAllAvailable()
+      val closed = spark.table("sess_stream").collect()
+      assert(closed.nonEmpty, "no session closed after watermark advance")
+      val first = closed.minBy(_.getAs[java.sql.Timestamp]("session_start").getTime)
+      assert(first.getAs[Int]("n_events") == 3,
+        s"session split across batches: ${closed.mkString(";")}")
+    } finally q.stop()
   }
 }
 
