@@ -255,13 +255,12 @@ object GraftDataset {
   }
 
   /** Literal map lookup column for the category dimension: `element_at(map, key)`.
-    * Broadcast-free and codegen-friendly — a label map is O(100) entries. */
+    * Broadcast-free and codegen-friendly — a label map is O(100) entries.
+    * The map is one literal, not a `map(...)` of literals, so an in-memory
+    * relation folded by `ConvertToLocalRelation` does not rebuild it per row. */
   def labelMapColumn(labelMap: Map[Int, String], key: Column): Column =
     if (labelMap.isEmpty) lit(null).cast(StringType)
-    else {
-      val entries = labelMap.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }
-      element_at(map(entries: _*), key.cast(IntegerType))
-    }
+    else element_at(typedLit(labelMap), key.cast(IntegerType))
 
   /** Construct with the reference's defaulting semantics
     * (init_images dataset.py:937-970, init_annotations dataset.py:972-1037):

@@ -16,7 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * All of it is joins + `unionByName` — no collects, distributes at any
   * scale. Each operator reads its id offsets (and, for [[merge]], the
-  * overlap check) from one one-row probe with one action.
+  * overlap check) from one one-row probe with one action, and the probe
+  * reads each side once: the offsets come from one id-only join per table
+  * ([[shiftPast]]), the overlap check from the inner-join form of the diff
+  * status core ([[Diff.intersectionMismatches]]).
   */
 object Merge {
 
@@ -173,15 +176,15 @@ object Merge {
     }
 
   /** The offset that moves `right`'s ids past `left`'s (merge.py:199-203):
-    * `max(left.id) - min(right.id) + 1` when a semi-join finds a shared id,
-    * else 0 — so also 0 when either side is empty. A one-row frame, so an
-    * operator reads all its probes with one action. */
-  private def shiftPast(left: DataFrame, right: DataFrame): DataFrame = {
-    val shared = right.select("id").join(left.select("id"), Seq("id"), "left_semi").limit(1)
-    left.agg(max("id").as("max_l"))
-      .crossJoin(right.agg(min("id").as("min_r")))
-      .crossJoin(shared.agg(count(lit(1)).as("shared")))
+    * `max(left.id) - min(right.id) + 1` when the two share an id, else 0 —
+    * so also 0 when either side is empty. One id-only full-outer join reads
+    * each side once and aggregates to `(max_l, min_r, shared)`. A one-row
+    * frame, so an operator reads all its probes with one action. */
+  private def shiftPast(left: DataFrame, right: DataFrame): DataFrame =
+    left.select(col("id").as("__l"))
+      .join(right.select(col("id").as("__r")), col("__l") === col("__r"), "full_outer")
+      .agg(max("__l").as("max_l"), min("__r").as("min_r"),
+        count(when(col("__l").isNotNull && col("__r").isNotNull, 1)).as("shared"))
       .select(when(col("shared") > 0, col("max_l") - col("min_r") + 1)
         .otherwise(0L))
-  }
 }

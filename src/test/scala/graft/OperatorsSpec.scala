@@ -247,6 +247,198 @@ class MergeDiffSpec extends SparkFunSuite {
     assert(Diff.datasetDiff(a, b).changed.images.count() == 4)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  /** frameDiff's `status`, one struct comparison, checked against its own
+    * per-column `changed_columns`, and intersectionMismatches (the
+    * inner-join form) against frameDiff's `changed` ids. Returns each id's
+    * status. */
+  private def statusParity(l: org.apache.spark.sql.DataFrame,
+      r: org.apache.spark.sql.DataFrame, exclude: Seq[String] = Nil): Map[Long, String] = {
+    val rows = Diff.frameDiff(l, r, excludeColumns = exclude).collect()
+    rows.foreach { row =>
+      val status = row.getString(1)
+      val cols = row.getSeq[String](2)
+      if (status == "changed" || status == "equal")
+        assert((status == "changed") == cols.nonEmpty, s"id ${row.get(0)}: $status vs $cols")
+    }
+    val statuses = rows.map(row => row.getLong(0) -> row.getString(1)).toMap
+    if (exclude.isEmpty)
+      assert(Diff.intersectionMismatches(l, r).collect().map(_.getLong(0)).toSet ==
+        statuses.collect { case (i, "changed") => i }.toSet)
+    statuses
+  }
+
+  test("the row comparison matches per-column <=> on nulls, NaN and signed zeros") {
+    val cases = Seq[(Option[Double], Option[Double], String)](
+      (None, Some(1.0), "changed"), (Some(1.0), None, "changed"), (None, None, "equal"),
+      (Some(Double.NaN), Some(Double.NaN), "equal"), (Some(-0.0), Some(0.0), "equal"),
+      (Some(Double.NaN), Some(1.0), "changed"), (Some(1.0), Some(2.0), "changed"))
+    val ids = cases.indices.map(_.toLong)
+    val l = ids.zip(cases.map(_._1)).toDF("id", "x")
+    val r = ids.zip(cases.map(_._2)).toDF("id", "x")
+    assert(statusParity(l, r) == ids.zip(cases.map(_._3)).toMap)
+    val lf = ids.zip(cases.map(_._1.map(_.toFloat))).toDF("id", "x")
+    val rf = ids.zip(cases.map(_._2.map(_.toFloat))).toDF("id", "x")
+    assert(statusParity(lf, rf) == ids.zip(cases.map(_._3)).toMap)
+    // several columns: a null that moves to another column is a change
+    val l2 = Seq((0L, None: Option[Int], Some("a")), (1L, None, Some("a"))).toDF("id", "n", "s")
+    val r2 = Seq((0L, None: Option[Int], Some("a")), (1L, Some(1), None)).toDF("id", "n", "s")
+    assert(statusParity(l2, r2) == Map(0L -> "equal", 1L -> "changed"))
+  }
+
+  test("the row comparison matches per-column <=> on empty, null and null-holding arrays") {
+    val cases = Seq[(Option[Seq[Option[Int]]], Option[Seq[Option[Int]]], String)](
+      (Some(Nil), None, "changed"), (None, Some(Nil), "changed"), (None, None, "equal"),
+      (Some(Nil), Some(Nil), "equal"),
+      (Some(Seq(Some(1), None)), Some(Seq(Some(1), None)), "equal"),
+      (Some(Seq(Some(1), None)), Some(Seq(Some(1), Some(2))), "changed"),
+      (Some(Seq(None)), Some(Nil), "changed"))
+    val ids = cases.indices.map(_.toLong)
+    val l = ids.zip(cases.map(_._1)).toDF("id", "xs")
+    val r = ids.zip(cases.map(_._2)).toDF("id", "xs")
+    assert(statusParity(l, r) == ids.zip(cases.map(_._3)).toMap)
+  }
+
+  test("the row comparison coerces shared columns whose types differ as <=> does") {
+    val l = Seq((0L, 1), (1L, 1), (2L, 2)).toDF("id", "x")
+    val r = Seq((0L, 1L), (1L, 2L), (2L, 2L)).toDF("id", "x")
+    assert(statusParity(l, r) == Map(0L -> "equal", 1L -> "changed", 2L -> "equal"))
+    val rd = Seq((0L, 1.0), (1L, 1.5), (2L, 2.0)).toDF("id", "x")
+    assert(statusParity(l, rd) == Map(0L -> "equal", 1L -> "changed", 2L -> "equal"))
+  }
+
+  test("the row comparison with no shared column and with excluded columns") {
+    val l = Seq((0L, 1, "a"), (1L, 2, "b")).toDF("id", "x", "y")
+    val r = Seq((1L, 9.0), (2L, 9.0)).toDF("id", "z")
+    // no shared column: common ids are equal, one-sided rows keep their side
+    assert(statusParity(l, r) == Map(0L -> "left_only", 1L -> "equal", 2L -> "right_only"))
+    val drifted = Seq((0L, 1, "A"), (1L, 3, "b")).toDF("id", "x", "y")
+    assert(statusParity(l, drifted) == Map(0L -> "changed", 1L -> "changed"))
+    assert(statusParity(l, drifted, Seq("y")) == Map(0L -> "equal", 1L -> "changed"))
+    assert(statusParity(l, drifted, Seq("x", "y")) == Map(0L -> "equal", 1L -> "equal"))
+    assert(Diff.frameDiff(l, drifted, excludeColumns = Seq("y"))
+      .filter(col("id") === 1).select(array_join(col("changed_columns"), ","))
+      .head().getString(0) == "x")
+  }
+
+  test("datasetDiff rolls annotation changes up to equal images only") {
+    val a = tinyDataset() // images 0..3; annotations 0,1 → 0; 2,3 → 1; 4,5 → 2
+    def ids(ds: graft.model.GraftDataset): Seq[Long] =
+      ds.images.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    def annIds(ds: graft.model.GraftDataset): Seq[Long] =
+      ds.annotations.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    // annotation 3 moves from image 1 to image 0: both equal images change
+    val moved = a.copy(annotations = a.annotations
+      .withColumn("image_id", when(col("id") === 3, 0L).otherwise(col("image_id"))))
+    val dm = Diff.datasetDiff(a, moved)
+    assert(ids(dm.changed) == Seq(0L, 1L) && ids(dm.leftOnly).isEmpty && ids(dm.rightOnly).isEmpty)
+    // an annotation-only change on an equal image
+    val widened = a.copy(annotations = a.annotations
+      .withColumn("box_width", when(col("id") === 4, 9.0).otherwise(col("box_width"))))
+    assert(ids(Diff.datasetDiff(a, widened).changed) == Seq(2L))
+    // image 0 (with annotations) only on the left, image 9 only on the right;
+    // annotation 5 moves from equal image 2 to right-only image 9
+    val sided = a.copy(
+      images = a.images.filter(col("id") =!= 0)
+        .unionByName(a.images.filter(col("id") === 3).withColumn("id", lit(9L))),
+      annotations = a.annotations.filter(col("image_id") =!= 0)
+        .withColumn("image_id", when(col("id") === 5, 9L).otherwise(col("image_id")))
+        .unionByName(a.annotations.filter(col("id") === 4)
+          .withColumn("id", lit(9L)).withColumn("image_id", lit(9L))))
+    val ds = Diff.datasetDiff(a, sided)
+    assert(ids(ds.leftOnly) == Seq(0L) && annIds(ds.leftOnly) == Seq(0L, 1L))
+    assert(ids(ds.rightOnly) == Seq(9L) && annIds(ds.rightOnly) == Seq(5L, 9L))
+    assert(ids(ds.changed) == Seq(2L))
+    // image_id excluded from the comparison: a box change still rolls up to
+    // its image, a move alone is no change
+    assert(ids(Diff.datasetDiff(a, widened, excludeAnnotationsColumns = Seq("image_id"))
+      .changed) == Seq(2L))
+    assert(ids(Diff.datasetDiff(a, moved, excludeAnnotationsColumns = Seq("image_id"))
+      .changed).isEmpty)
+  }
+
+  test("datasetDiff builds without a job and plans two full-outer joins") {
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val a = tinyDataset()
+    val b = a.copy(annotations = a.annotations.withColumn("box_x_min", col("box_x_min") + 1))
+    var d: Diff.DatasetDiff = null
+    assert(executionsOf { d = Diff.datasetDiff(a, b) }.isEmpty)
+    val fullOuter = d.changed.images.queryExecution.optimizedPlan.collect {
+      case j: Join if j.joinType == FullOuter => j
+    }
+    assert(fullOuter.size == 2, d.changed.images.queryExecution.optimizedPlan)
+    assert(d.changed.numImages == 3)
+  }
+
+  test("datasetsEqual decides with one action after its schema short-circuits") {
+    val ds = tinyDataset()
+    var eq = false
+    assert(executionsOf { eq = Diff.datasetsEqual(ds, tinyDataset()) }.size == 1)
+    assert(eq)
+    val renamed = ds.copy(labelMap = Map(0 -> "person", 1 -> "truck"))
+    assert(executionsOf { eq = Diff.datasetsEqual(ds, renamed) }.isEmpty)
+    assert(!eq)
+    val moreCols = ds.copy(images = ds.images.withColumn("camera", lit("c")))
+    assert(executionsOf { eq = Diff.datasetsEqual(ds, moreCols) }.isEmpty)
+    assert(!eq)
+    assert(!Diff.datasetsEqual(ds, ds.copy(images = ds.images.filter(col("id") =!= 3))))
+  }
+
+  test("union and merge shift past an empty side, disjoint and overlapping ids") {
+    val a = tinyDataset() // images 0..3, annotations 0..5
+    val empty = a.copy(images = a.images.limit(0), annotations = a.annotations.limit(0))
+    def ids(ds: graft.model.GraftDataset): (Seq[Long], Seq[Long]) = (
+      ds.images.select("id").collect().map(_.getLong(0)).sorted.toSeq,
+      ds.annotations.select("id").collect().map(_.getLong(0)).sorted.toSeq)
+    val own = ((0L to 3L), (0L to 5L))
+    for ((name, op) <- Seq[(String, (graft.model.GraftDataset, graft.model.GraftDataset) =>
+        graft.model.GraftDataset)]("union" -> Merge.union, "merge" -> Merge.merge)) {
+      assert(ids(op(empty, a)) == own, name)
+      assert(ids(op(a, empty)) == own, name)
+      assert(ids(op(empty, empty)) == ((Nil, Nil)), name)
+      val disjoint = a.copy(
+        images = a.images.withColumn("id", col("id") + 10),
+        annotations = a.annotations.withColumn("id", col("id") + 10)
+          .withColumn("image_id", col("image_id") + 10))
+      assert(ids(op(a, disjoint)) == ((0L to 3L) ++ (10L to 13L), (0L to 5L) ++ (10L to 15L)), name)
+      // annotation ids 2..7 collide with 0..5 and move by 5 - 2 + 1
+      val overlap = a.copy(annotations = a.annotations.withColumn("id", col("id") + 2))
+      val (imgs, anns) = ids(op(a, overlap))
+      assert(anns == (0L to 5L) ++ (6L to 11L), name)
+      assert(imgs == (if (name == "union") (0L to 7L) else (0L to 3L)), name)
+    }
+  }
+
+  test("merge's exceptions keep their class and message") {
+    val a = tinyDataset()
+    val relabelled = a.copy(labelMap = Map(0 -> "dog", 1 -> "car"))
+    for (op <- Seq[(graft.model.GraftDataset, graft.model.GraftDataset) =>
+        graft.model.GraftDataset](Merge.union, Merge.merge)) {
+      val e = intercept[IllegalArgumentException](op(a, relabelled))
+      assert(e.getMessage == "requirement failed: label map conflict on ids 0: 0 -> 'person' vs 'dog'")
+    }
+    val noAnn = a.annotations.limit(0)
+    val one = a.copy(images = a.images
+      .withColumn("width", when(col("id") === 2, 1).otherwise(col("width"))), annotations = noAnn)
+    val e1 = intercept[IllegalArgumentException](Merge.merge(a, one))
+    assert(e1.getMessage ==
+      "requirement failed: merge: overlapping images disagree on shared columns, ids: 2")
+    // the label map fails first when both conflict
+    val e2 = intercept[IllegalArgumentException](Merge.merge(a, one.copy(labelMap = relabelled.labelMap)))
+    assert(e2.getMessage.contains("label map conflict"))
+    // at most three disagreeing ids are named
+    val all = a.copy(images = a.images.withColumn("width", col("width") + 1), annotations = noAnn)
+    val e3 = intercept[IllegalArgumentException](Merge.merge(a, all))
+    val prefix = "requirement failed: merge: overlapping images disagree on shared columns, ids: "
+    assert(e3.getMessage.startsWith(prefix))
+    val named = e3.getMessage.stripPrefix(prefix).split(", ").map(_.toLong).toSeq
+    assert(named.size == 3 && named.distinct.size == 3 && named.forall(i => i >= 0 && i <= 3))
+    val e4 = intercept[IllegalArgumentException](Merge.merge(
+      a.copy(imagesRoot = "hdfs://nn/x"), a.copy(imagesRoot = "s3a://b/y")))
+    assert(e4.getMessage == "requirement failed: cannot merge datasets whose images roots " +
+      "live on different filesystems: 'hdfs://nn/x' vs 's3a://b/y' — reset_images_root one side first")
+  }
 }
 
 class BooleanizeSpec extends SparkFunSuite {
